@@ -48,65 +48,65 @@ object LineageStore {
   private def struct(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })
 
-  /** Direct single-file parquet write of driver-local rows, schema
-    * inferred per column from the first non-null value (Long / String /
-    * Boolean). For registry-style side tables; see [[writeEntity]]. */
-  private[lineage] def writeLocal(
-      path: String, names: Seq[String], rows: Seq[Seq[Any]]): Unit = {
-    val schema = StructType(names.zipWithIndex.map { case (n, i) =>
-      val v = rows.iterator.map(_(i)).find(_ != null).getOrElse("")
-      StructField(n, v match {
-        case _: java.lang.Long => LongType
-        case _: java.lang.Boolean => BooleanType
-        case _ => StringType
-      })
-    })
-    writeEntity(path, schema, rows)
-  }
-
   private val hconf = new org.apache.hadoop.conf.Configuration()
 
   /** Overwrite `path` with one parquet file holding `rows` (column
     * values aligned with `schema`; supported types: Long, String,
     * Boolean — the store's entire surface). Bypasses Spark entirely:
-    * these are metadata-scale driver-local rows (see object scaladoc). */
-  private def writeEntity(
+    * these are metadata-scale driver-local rows (see object scaladoc).
+    * The file is written into a sibling staging dir and swapped in by
+    * rename, so a write that fails part-way leaves the previous entity
+    * in place and readable. */
+  private[lineage] def writeEntity(
       path: String, schema: StructType, rows: Seq[Seq[Any]]): Unit = {
-    val dir = new java.io.File(path)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(dir)
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete()
     }
-    dir.mkdirs()
-    val w = new graft.sources.ManifestParquet.RowParquetWriter(
-      new org.apache.hadoop.fs.Path(s"$path/part-00000.snappy.parquet"),
-      schema, hconf)
-    try rows.foreach { vals =>
-      w.write { rc =>
-        var i = 0
-        while (i < vals.length) {
-          vals(i) match {
-            case null => ()
-            case v =>
-              rc.startField(w.fieldName(i), i)
-              v match {
-                case l: java.lang.Long => rc.addLong(l)
-                case s: String =>
-                  rc.addBinary(org.apache.parquet.io.api.Binary.fromString(s))
-                case b: java.lang.Boolean => rc.addBoolean(b)
-                case other => throw new UnsupportedOperationException(
-                  s"LineageStore.writeEntity: unsupported value $other")
-              }
-              rc.endField(w.fieldName(i), i)
+    val dir = new java.io.File(path).getAbsoluteFile
+    val tag = java.util.UUID.randomUUID()
+    val stage = new java.io.File(dir.getParentFile, s".${dir.getName}.stage-$tag")
+    stage.mkdirs()
+    try {
+      val w = new graft.sources.ManifestParquet.RowParquetWriter(
+        new org.apache.hadoop.fs.Path(s"$stage/part-00000.snappy.parquet"),
+        schema, hconf)
+      try rows.foreach { vals =>
+        w.write { rc =>
+          var i = 0
+          while (i < vals.length) {
+            vals(i) match {
+              case null => ()
+              case v =>
+                rc.startField(w.fieldName(i), i)
+                v match {
+                  case l: java.lang.Long => rc.addLong(l)
+                  case s: String =>
+                    rc.addBinary(org.apache.parquet.io.api.Binary.fromString(s))
+                  case b: java.lang.Boolean => rc.addBoolean(b)
+                  case other => throw new UnsupportedOperationException(
+                    s"LineageStore.writeEntity: unsupported value $other")
+                }
+                rc.endField(w.fieldName(i), i)
+            }
+            i += 1
           }
-          i += 1
         }
-      }
-    } finally w.close()
+      } finally w.close()
+    } catch { case e: Throwable => rm(stage); throw e }
+    // swap: the old entity moves aside, the staged one takes its name
+    val old = new java.io.File(dir.getParentFile, s".${dir.getName}.old-$tag")
+    if (dir.exists() && !dir.renameTo(old)) {
+      rm(stage)
+      throw new java.io.IOException(s"LineageStore: cannot replace $dir")
+    }
+    if (!stage.renameTo(dir)) {
+      old.renameTo(dir)
+      rm(stage)
+      throw new java.io.IOException(s"LineageStore: cannot publish $dir")
+    }
+    rm(old)
   }
 
   /** Persist one script's lineage under `path` (overwrite per source).

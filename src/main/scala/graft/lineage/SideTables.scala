@@ -2,6 +2,7 @@ package graft.lineage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's externally-populated operational side tables —
   * `table_symlinked` (db_setup_ddl.sql:148-163), `ts_dboard`
@@ -25,18 +26,19 @@ object SideTables {
   def writeSymlinks(spark: SparkSession,
       links: Seq[(String, String, String, String, String, String, String)],
       path: String): Unit =
-    LineageStore.writeLocal(path,
-      Seq("src_schema", "src_table", "dst_schema", "dst_table",
-        "linkage_src_key", "linkage_src_value", "af_dag_task"),
+    LineageStore.writeEntity(path, StructType.fromDDL(
+      "src_schema STRING, src_table STRING, dst_schema STRING, " +
+        "dst_table STRING, linkage_src_key STRING, linkage_src_value STRING, " +
+        "af_dag_task STRING"),
       links.map(l => Seq[Any](l._1, l._2, l._3, l._4, l._5, l._6, l._7)))
 
   /** Dashboard registry (ts_dboard: native id, title, native created /
     * updated ts, author). */
   def writeDashboards(spark: SparkSession,
       boards: Seq[(Long, String, Long, Long, String)], path: String): Unit =
-    LineageStore.writeLocal(path,
-      Seq("native_id", "title", "native_created_ts",
-        "native_updated_ts", "author"),
+    LineageStore.writeEntity(path, StructType.fromDDL(
+      "native_id BIGINT, title STRING, native_created_ts BIGINT, " +
+        "native_updated_ts BIGINT, author STRING"),
       boards.map(b => Seq[Any](b._1, b._2, b._3, b._4, b._5)))
 
   /** Table-level closure that traverses symlinks: a symlinked pair

@@ -121,6 +121,23 @@ object LakehouseOps {
   private val EvoHi = "1997-03-01"
 
 
+  /** Read the `colName=<value>` partition dirs under `root` whose value
+    * passes `keep`, with ONE local-filesystem listing of `root` (values
+    * are unescaped ISO date strings, so dir names compare like the
+    * dates they hold). No matching dir, or a `root` that cannot be
+    * listed (missing, or not a directory), falls back to the full read
+    * of `root`: a degenerate corpus still answers, and a missing root
+    * fails loudly in Spark's own path check rather than with an NPE. */
+  private[graft] def prunedRead(s: SparkSession, root: String,
+      colName: String, keep: String => Boolean): DataFrame = {
+    val dirs = Option(new java.io.File(root).list()).toSeq.flatten
+      .filter(n => n.startsWith(s"$colName=") &&
+        keep(n.substring(colName.length + 1)))
+      .sorted.map(n => s"$root/$n")
+    if (dirs.isEmpty) s.read.parquet(root)
+    else s.read.option("basePath", root).parquet(dirs: _*)
+  }
+
   /** (Re)write both layout generations and return their dirs, MEMOIZED
     * per data dir (q127 bucketed-CTAS precedent): layouts land at
     * deterministic /tmp paths keyed by `dir`, and a completion marker
@@ -485,22 +502,13 @@ object LakehouseOps {
     // (they re-prune the listed subset), and the exact timestamp
     // residual still re-checks every row — pruning remains a
     // performance contract, never a correctness one.
-    def pruned(root: String, colName: String,
-        keep: String => Boolean): DataFrame = {
-      val dirs = new java.io.File(root).list()
-        .filter(n => n.startsWith(s"$colName=") &&
-          keep(n.substring(colName.length + 1)))
-        .sorted.map(n => s"$root/$n").toSeq
-      if (dirs.isEmpty) s.read.parquet(root) // degenerate corpus: list all
-      else s.read.option("basePath", root).parquet(dirs: _*)
-    }
-    val hist = pruned(v1, "pm",
+    val hist = prunedRead(s, v1, "pm",
         m => m >= EvoLo.substring(0, 7) && m <= EvoHi.substring(0, 7))
       .filter(col("pm") >= EvoLo.substring(0, 7) &&
         col("pm") <= EvoHi.substring(0, 7))           // partition prune
       .filter(pred)                                   // residual re-check
       .select("l_returnflag", "l_extendedprice")
-    val cur = pruned(v2, "pd", d => d >= EvoLo && d < EvoHi)
+    val cur = prunedRead(s, v2, "pd", d => d >= EvoLo && d < EvoHi)
       .filter(col("pd") >= EvoLo && col("pd") < EvoHi) // partition prune
       .filter(pred)
       .select("l_returnflag", "l_extendedprice")
@@ -1201,7 +1209,7 @@ object LakehouseOps {
           .as("cents"),
         col("o_orderpriority").as("pri"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", out).option("format", "parquet")
+      .option("path", out)
       .mode("append").save()
     graft.sources.ManifestMaintenance.delete(s, out, ddl, "k % 7 = 0")
     s.read.format("graft.sources.ManifestSource").schema(ddl)
@@ -1262,7 +1270,7 @@ object LakehouseOps {
       .select(col("c_custkey").cast("long").as("ck"),
         col("c_nationkey").cast("long").as("nk"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", factDir).option("format", "parquet")
+      .option("path", factDir)
       .mode("append").save()
     Tables.load(s, dir, "nation").filter(col("n_nationkey").isNotNull)
       .select(col("n_nationkey").cast("long").as("nk"),
@@ -1490,12 +1498,12 @@ object LakehouseOps {
       .coalesce(1) // one writer task => exactly one file per partition
       .write.format("graft.sources.ManifestSink")
       .option("path", factDir).option("partitionBy", "truncate(1000,k)")
-      .option("format", "parquet").mode("append").save()
+      .mode("append").save()
     Tables.load(s, dir, "customer").filter(col("c_custkey").isNotNull)
       .select((col("c_custkey") % 3000).cast("long").as("k")).distinct()
       .coalesce(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", dimDir).option("format", "parquet")
+      .option("path", dimDir)
       .mode("append").save()
     def rd(p: String, ddl: String) = s.read
       .format("graft.sources.ManifestSource").schema(ddl)
@@ -1577,7 +1585,7 @@ object LakehouseOps {
     withConfs(s, "parquet.rowgroup.row.count.limit" -> "1000") {
       src.repartition(1).sortWithinPartitions("k")
         .write.format("graft.sources.ManifestSink")
-        .option("path", out).option("format", "parquet")
+        .option("path", out)
         .mode("append").save()
     }
     val Array(mn, mx) = {
@@ -1660,7 +1668,7 @@ object LakehouseOps {
     withConfs(s, "parquet.rowgroup.row.count.limit" -> "1000") {
       src.repartition(1).sortWithinPartitions("ts", "k")
         .write.format("graft.sources.ManifestSink")
-        .option("path", out).option("format", "parquet")
+        .option("path", out)
         .mode("append").save()
     }
     val Array(mn, mx) = {

@@ -149,11 +149,8 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     val pBy = lines.collectFirst {
       case l if l.startsWith("partitionBy=") => l.stripPrefix("partitionBy=")
     }
-    val fmt = ManifestFormat.of(lines.collectFirst {
-      case l if l.startsWith("format=") => l.stripPrefix("format=")
-    })
     new ManifestCatalogTable(dir, StructType.fromDDL(lines.head), version,
-      pBy, fmt)
+      pBy)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -200,18 +197,13 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
         s"ManifestCatalog: partition column ${sp.col} must be an existing " +
           "BIGINT column")
     })
-    // data-file format: `USING parquet` / `USING csv`, or TBLPROPERTIES
-    // ('format'='parquet'). Any other provider (including a session-
-    // default Spark may inject) keeps the catalog default — PARQUET
-    // since round 15 (columnar decode + ~3-10× fewer bytes is the
-    // 100 TB default; the full DML/compaction/SPJ surface is proven on
-    // it). CSV stays one `USING csv` away.
-    val fmt = Option(properties.get("format"))
-      .orElse(Option(properties.get("provider"))
-        .map(_.toLowerCase)
-        .filter(p => p == ManifestFormat.Csv || p == ManifestFormat.Parquet))
-      .map(f => ManifestFormat.of(Some(f)))
-      .getOrElse(ManifestFormat.Parquet)
+    // data files are parquet only: `USING csv` or TBLPROPERTIES
+    // ('format'=<not parquet>) fails loudly. Any other provider
+    // (including a session default Spark may inject) is not a data-file
+    // format request and is ignored.
+    ManifestSink.requireParquet(Option(properties.get("format")).orElse(
+      Option(properties.get("provider")).filter(_.equalsIgnoreCase("csv"))),
+      "ManifestCatalog")
     val dir = dirOf(ident)
     val p = schemaFile(dir)
     val f = fs(p)
@@ -221,11 +213,9 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     f.mkdirs(new Path(dir))
     val out = f.create(p, false)
     try out.write((schema.toDDL +
-      pBy.map(c => s"\npartitionBy=$c").getOrElse("") +
-      (if (fmt == ManifestFormat.Csv) "" else s"\nformat=$fmt"))
-      .getBytes("UTF-8"))
+      pBy.map(c => s"\npartitionBy=$c").getOrElse("")).getBytes("UTF-8"))
     finally out.close()
-    new ManifestCatalogTable(dir, schema, None, pBy, fmt)
+    new ManifestCatalogTable(dir, schema, None, pBy)
   }
 
   /** ALTER TABLE — the schema-evolution subset the storage layer can
@@ -235,12 +225,11 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     *    Files written before the change simply lack the column and the
     *    by-name reader (q414's contract) serves NULLs; new inserts
     *    carry it.
-    *  - `RENAME COLUMN` on all-CSV tables: CSV columns are positional
-    *    through each entry's `cols` list, so the rename is a manifest
+    *  - `RENAME COLUMN`: the reader resolves a data file's columns by
+    *    their POSITION in the entry's `cols` list (never by the name
+    *    stored inside the parquet file), so the rename is a manifest
     *    rewrite (cols + stats keys), published as a new snapshot under
-    *    the commit lock. Parquet files carry their column names
-    *    INSIDE the file — renaming those would silently read NULLs, so
-    *    it refuses loudly (rewrite the data via compaction first).
+    *    the commit lock; no data file is touched.
     *
     * TIME TRAVEL keeps each era's schema: before the current DDL is
     * replaced, it is frozen as `_schema-upto-v{head}.ddl` — a
@@ -326,8 +315,7 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
           if (f.name == from) f.copy(name = to) else f))
       case other => throw new UnsupportedOperationException(
         s"ManifestCatalog: unsupported ALTER TABLE change $other — only " +
-          "ADD COLUMN (nullable, at the end) and RENAME COLUMN (CSV " +
-          "tables) are supported")
+          "ADD COLUMN (nullable, at the end) and RENAME COLUMN are supported")
     }
     // torn-safe DDL swap: write temp, then rename OVER the live file
     // (atomic overwrite on POSIX — no delete-then-rename window where a
@@ -349,25 +337,24 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
   }
 
   /** RENAME COLUMN's storage move: rewrite every entry's `cols` list
-    * and `stats` key from `from` to `to` and publish one new snapshot
-    * under the commit lock. CSV-only — parquet files name their
-    * columns internally, so a manifest-only rename would silently read
-    * NULLs from them. */
+    * and `stats` keys (file and row-group level) from `from` to `to`
+    * and publish one new snapshot under the commit lock. Readers map
+    * `cols` to the file's columns by position, so the renamed column
+    * keeps its data. */
   private def renameInManifest(dir: String, from: String, to: String): Unit = {
     val dirP = new Path(dir)
     val f = fs(dirP)
     if (ManifestRead.latestVersion(dir) == 0L) return // never written
     // caller (alterTable) already holds _commit.lock for the table dir
     val txt = ManifestRead.manifestText(dir, "manifest.json")
-    val entries = ManifestRead.entriesOfText(txt)
-    require(entries.forall(_.file.endsWith(".csv")),
-      "ManifestCatalog: RENAME COLUMN needs an all-CSV table (parquet " +
-        "files carry column names internally — compact to rewrite first)")
-    val renamed = entries.map { e =>
+    val renamed = ManifestRead.entriesOfText(txt).map { e =>
       e.copy(
         cols = e.cols.map(_.split(',')
           .map(c => if (c == from) to else c).mkString(",")),
-        stats = e.stats.map(renameStatsKey(_, from, to)))
+        stats = e.stats.map(renameStatsKey(_, from, to)),
+        rgs = e.rgs.map(r => ManifestParquet.renderRgs(
+          ManifestParquet.parseRgs(r).map(g =>
+            g.copy(stats = renameStatsKey(g.stats, from, to))))))
     }
     val body = s"""{"total_rows":${renamed.map(_.rows).sum},""" +
       s""""files":${renamed.sortBy(_.file).map(ManifestRead.render)
@@ -446,8 +433,7 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
   * machinery the path-addressed API uses. */
 private class ManifestCatalogTable(
     dir: String, tableSchema: StructType, version: Option[Long],
-    partitionBy: Option[String] = None,
-    fmt: String = ManifestFormat.Csv)
+    partitionBy: Option[String] = None)
   extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with SupportsDelete
@@ -504,7 +490,7 @@ private class ManifestCatalogTable(
     require(version.isEmpty,
       "ManifestCatalog: cannot run DML against a time-travel snapshot")
     () => new ManifestRowLevelOperation(dir, tableSchema, info.command(),
-      partitionBy, fmt)
+      partitionBy)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -519,13 +505,13 @@ private class ManifestCatalogTable(
           .filter(_.nonEmpty).orElse(partitionBy)
         new Write {
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new ManifestBatchWrite(dir, info.schema(), t, pBy, fmt)
+            new ManifestBatchWrite(dir, info.schema(), t, pBy)
           override def toStreaming
             : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
             if (t) throw new UnsupportedOperationException(
               "ManifestCatalog streaming writes are append-only")
             new ManifestStreamingWrite(dir, info.schema(), info.queryId(),
-              pBy, fmt)
+              pBy)
           }
         }
       }

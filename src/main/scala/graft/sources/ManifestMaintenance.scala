@@ -45,9 +45,9 @@ object ManifestMaintenance {
 
   /** Row-level DELETE, merge-on-read (the delete-vector analog): rows
     * matching `predicate` (a SQL expression over the table's columns)
-    * are recorded as POSITIONAL delete vectors — (dataFile,
-    * recordByteOffset, lineHash) rows, written distributed through the
-    * sink's own writer — and a new manifest version carries the data
+    * are recorded as POSITIONAL delete vectors — (dataFile, rowOrdinal,
+    * lineHash) lines, staged distributed through [[ManifestDvWriter]] —
+    * and a new manifest version carries the data
     * entries unchanged plus the dv entries. No data file is rewritten:
     * readers apply the dvs at scan time (batch, time travel, and the
     * streaming tail all skip deleted records), and [[compact]] later
@@ -56,7 +56,7 @@ object ManifestMaintenance {
     * The matching scan runs through the DSv2 source WITH the current
     * dvs applied, so re-deleting (or an overlapping predicate) never
     * records the same position twice — dv positions stay unique, which
-    * keeps `gross − dvRows = net` exact. The byte offset is stable
+    * keeps `gross − dvRows = net` exact. The row ordinal is stable
     * row identity: data files are immutable between compactions, and
     * the lineHash term lets compact's checksum conservation stay exact
     * net-of-deletes.
@@ -141,20 +141,24 @@ object ManifestMaintenance {
       fs.delete(new Path(scratchIns), true)
     }
     try {
-      matchedPos.write.format("graft.sources.ManifestSink")
-        .option("path", scratchDv).mode("append").save()
-      val dvParts = ManifestRead.files(scratchDv, "manifest.json")
-        .filter(_._2 > 0) // empty task files carry no positions
-      val dvChecksums = readChecksums(fs, new Path(scratchDv, "manifest.json"))
-      val deleted = dvParts.map(_._2).sum
+      // one staged dv file per task that matched anything
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      val dvParts = matchedPos.queryExecution.toRdd.mapPartitions { it =>
+        val stage = new Path(scratchDv)
+        val w = new ManifestDvWriter(stage.getFileSystem(conf.value), stage,
+          s"dvstage-${java.util.UUID.randomUUID()}.csv")
+        try it.foreach(r =>
+          w.add(r.getUTF8String(0).toString, r.getLong(1), r.getLong(2)))
+        catch { case e: Throwable => w.abort(); throw e }
+        w.finish().iterator
+      }.collect().toSeq
+      val deleted = dvParts.map(_.rows).sum
       val insEntries: Seq[ManifestEntry] = inserts match {
         case None => Nil
         case Some(df) =>
           df.write.format("graft.sources.ManifestSink")
-            .option("path", scratchIns)
-            .option("format", ManifestFormat.detect(
-              ManifestRead.entries(path, "manifest.json")))
-            .mode("append").save()
+            .option("path", scratchIns).mode("append").save()
           readEntries(fs, new Path(scratchIns, "manifest.json"))
             .filter(_.rows > 0)
       }
@@ -183,12 +187,12 @@ object ManifestMaintenance {
               s"$path during the $opName scan — positions are stale; retry")
         // move position files in under dv- names, insert files as-is
         // (task-uuid names can't collide with committed files)
-        val movedDvs = dvParts.zipWithIndex.map { case ((name, rows), i) =>
+        val movedDvs = dvParts.zipWithIndex.map { case (c, i) =>
           val dvName = s"dv-$tag-$i.csv"
-          if (!fs.rename(new Path(s"$scratchDv/$name"), new Path(dir, dvName)))
+          if (!fs.rename(new Path(s"$scratchDv/${c.file}"), new Path(dir, dvName)))
             throw new java.io.IOException(
-              s"ManifestMaintenance: failed to move delete vector $name")
-          (dvName, rows, dvChecksums(name))
+              s"ManifestMaintenance: failed to move delete vector ${c.file}")
+          (dvName, c.rows, c.checksum)
         }
         insEntries.foreach { e =>
           if (!fs.rename(new Path(s"$scratchIns/${e.file}"), new Path(dir, e.file)))
@@ -237,8 +241,8 @@ object ManifestMaintenance {
     * the range still count as inserts, then again as deletes) as
     * op='insert'; new delete-vector entries contribute op='delete'
     * rows MATERIALIZED by reading the target files at the dv's own
-    * version with dvs disabled and joining on (file, offset) — the
-    * offset is row identity, so the emitted delete carries the full
+    * version with dvs disabled and joining on (file, position) — the
+    * position is row identity, so the emitted delete carries the full
     * old row; a COMPACTION version is a pure rewrite and contributes
     * nothing. Requires retained history (an expired mid-range
     * manifest or reclaimed pre-compaction file fails loudly — the
@@ -285,7 +289,7 @@ object ManifestMaintenance {
           cols.map(col): _*)
     }
     val deleteDfs = dvsByV.result().map { case (v, dvs) =>
-      // dv rows are (dataFile, offset, lineHash) — names and numbers,
+      // dv rows are (dataFile, position, lineHash) — names and numbers,
       // no quoting, so a plain csv read round-trips them
       val pos = spark.read.schema("f STRING, p LONG, h LONG")
         .csv(dvs.map(d => s"$path/$d"): _*)
@@ -345,8 +349,8 @@ object ManifestMaintenance {
     * the CURRENT snapshot's data files into size-bounded groups
     * (first-fit decreasing; budget = `targetBytes`, or total size /
     * `targetFiles` when unset), rewrites each group with its own task
-    * through the DSv2 source+sink pair (same dialect, same
-    * order-independent checksums; pending delete vectors are applied —
+    * through the DSv2 source+sink pair (same order-independent
+    * checksums; pending delete vectors are applied —
     * and consumed — by the rewrite), and publishes a new manifest
     * version listing ONLY the compacted files. One task never rewrites
     * more than one group, so compaction parallelism scales with the
@@ -361,7 +365,7 @@ object ManifestMaintenance {
     * rewrite began, it aborts loudly (optimistic concurrency, retry).
     * Conservation guard: the sum of per-file checksums and row counts
     * is invariant under a pure rewrite (checksums are order-independent
-    * sums of row-line hashes), so any lost/duplicated/reformatted row
+    * sums of row-line hashes), so any lost/duplicated/altered row
     * fails the publish before it happens.
     *
     * LAYOUT-AWARE compaction (`clusterBy` non-empty): instead of
@@ -384,30 +388,17 @@ object ManifestMaintenance {
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       path: String, schemaDdl: String, targetFiles: Int = 1,
-      targetBytes: Long = 0L, clusterBy: Seq[String] = Nil,
-      format: String = ""): (Int, Int) = {
+      targetBytes: Long = 0L, clusterBy: Seq[String] = Nil): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val before = ManifestRead.files(path, "manifest.json")
     val beforeDvs = ManifestRead.dvs(path, "manifest.json")
-    // rewrite format: explicit `format` converts the table (the
-    // conservation guard holds ACROSS formats — row hashes are over
-    // the canonical rendering); default preserves what's there
-    val fmt =
-      if (format.nonEmpty) ManifestFormat.of(Some(format))
-      else ManifestFormat.detect(
-        ManifestRead.entries(path, "manifest.json"))
-    // an explicit format DIFFERENT from the current one always
-    // rewrites, like a layout request
-    val converting = format.nonEmpty &&
-      fmt != ManifestFormat.detect(ManifestRead.entries(path, "manifest.json"))
     // with delete vectors pending, compaction must run even at the
     // target file count — it is what applies the deletes physically;
     // a layout request likewise always rewrites (re-clustering IS the
     // point, whatever the current file count)
-    if (before.length <= targetFiles && beforeDvs.isEmpty &&
-      clusterBy.isEmpty && !converting)
+    if (before.length <= targetFiles && beforeDvs.isEmpty && clusterBy.isEmpty)
       return (before.length, before.length)
     // BIN-PACK the input files into size-bounded groups (first-fit
     // decreasing, budget = targetBytes or total/targetFiles): each
@@ -434,8 +425,7 @@ object ManifestMaintenance {
       }
     }
     val groups = bins.map(_._1.toSeq).toSeq
-    if (groups.length == before.length && beforeDvs.isEmpty &&
-      clusterBy.isEmpty && !converting)
+    if (groups.length == before.length && beforeDvs.isEmpty && clusterBy.isEmpty)
       return (before.length, before.length) // nothing to merge
     // distributed rewrite into a scratch manifest dir: the sink's own
     // writer produces the part files AND their (rows, checksum) entries
@@ -445,8 +435,7 @@ object ManifestMaintenance {
         .schema(schemaDdl).option("path", path)
         .option("groups", groups.map(_.mkString(",")).mkString(";")).load()
         .write.format("graft.sources.ManifestSink")
-        .option("path", scratch).option("format", fmt)
-        .mode("append").save()
+        .option("path", scratch).mode("append").save()
     } else {
       import org.apache.spark.sql.functions.{col, expr}
       // layout rewrite: exact-ntile buckets over (clusterBy, all
@@ -469,8 +458,7 @@ object ManifestMaintenance {
         bucketed.filter(col("__b") === b).drop("__rk", "__b")
           .coalesce(1)
           .write.format("graft.sources.ManifestSink")
-          .option("path", scratch).option("format", fmt)
-          .mode("append").save()
+          .option("path", scratch).mode("append").save()
       }
     }
     val compactedEntries = readEntries(fs, new Path(scratch, "manifest.json"))
@@ -560,7 +548,7 @@ object ManifestMaintenance {
   }
 
   /** Orphan-file cleanup (the remove_orphan_files analog): deletes
-    * `part-*.csv` files referenced by NO surviving manifest — neither
+    * `part-*` data files and `dv-*` delete vectors referenced by NO surviving manifest — neither
     * the current one nor any retained `manifest-v{n}.json` — plus
     * crashed writers' `_tmp-*` staging dirs and crashed compactions'
     * `_compact-*` scratch dirs older than 10 minutes.

@@ -11,28 +11,25 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.types._
 
-/** Parquet data files for the manifest connector (`format=parquet`),
-  * via the public parquet-java Group API — Spark's own parquet
-  * machinery is a file-source implementation detail this DSv2
-  * connector can't reach into, and the Group API is exactly the
-  * footer/column-chunk surface the format exposes to every engine.
+/** Parquet data files for the manifest connector — its only data-file
+  * format — via the public parquet-java API: Spark's own parquet
+  * machinery is a file-source implementation detail this DSv2 connector
+  * can't reach into, and the footer/column-chunk surface is what the
+  * format exposes to every engine.
   *
-  * Columnar data files are the connector's 100 TB answer: snappy +
-  * dictionary/RLE cut raw bytes ~3-10× vs CSV rows, and a pruned read
-  * decodes ONLY the requested columns' chunks instead of tokenizing
-  * every field of every row. The manifest layer is untouched: entries,
-  * stats, Blooms, delete vectors, checksums, and the compaction
+  * Columnar files are the connector's 100 TB answer: snappy +
+  * dictionary/RLE keep raw bytes small, and a pruned read decodes ONLY
+  * the requested columns' chunks. The manifest layer sits on top:
+  * entries, stats, Blooms, delete vectors, checksums and the compaction
   * conservation guard are all defined over the row's CANONICAL CSV
-  * RENDERING, which both formats compute identically at write time —
-  * so a table can mix formats, and a format-converting compaction
-  * passes the same row/checksum conservation proof.
+  * RENDERING (a hash input computed at write time and re-rendered at
+  * read time, not a storage format).
   *
   * Row identity for delete vectors: `_mf_pos` is the record's ROW
-  * ORDINAL in a parquet file (byte offsets are meaningless across
-  * column chunks); each file's positions live in their own namespace,
-  * so CSV offsets and parquet ordinals never meet. Parquet files are
-  * planned whole-file (row-group split is the scale follow-up); the
-  * bin-packing compactor already bounds file sizes.
+  * ORDINAL in its file; each file's positions live in their own
+  * namespace. Multi-row-group files are planned one split per row group
+  * (ordinals stay file-global); the bin-packing compactor bounds file
+  * sizes.
   */
 private[graft] object ManifestParquet {
 
@@ -48,8 +45,8 @@ private[graft] object ManifestParquet {
         case DoubleType => b.addField(Types.optional(DOUBLE).named(f.name))
         case StringType => b.addField(Types.optional(BINARY)
           .as(LogicalTypeAnnotation.stringType()).named(f.name))
-        // session-UTC microseconds — the same long the canonical CSV
-        // rendering carries, so checksums agree across formats
+        // session-UTC microseconds — the same long the canonical
+        // rendering carries
         case TimestampType => b.addField(Types.optional(INT64)
           .as(LogicalTypeAnnotation.timestampType(true,
             LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name))
@@ -156,6 +153,9 @@ private[graft] object ManifestParquet {
     }
     def fieldName(i: Int): String = names(i)
     def close(): Unit = writer.close()
+    /** The written file's footer (valid after [[close]]). */
+    def footer: org.apache.parquet.hadoop.metadata.ParquetMetadata =
+      writer.getFooter
   }
 
   object RowParquetWriter {
@@ -168,8 +168,9 @@ private[graft] object ManifestParquet {
     * shape as file-level entry stats ("" = none provable). */
   final case class RgMeta(rows: Long, off: Long, len: Long, stats: String)
 
-  /** Footer walk of a (staged) parquet file → per-row-group metadata,
-    * recorded into the manifest AT COMMIT TIME so the planner can skip
+  /** Footer walk of a just-written parquet file (the writer's own
+    * footer — no re-read) → per-row-group metadata, recorded into the
+    * manifest AT COMMIT TIME so the planner can skip
     * row groups inside fat files without ever opening footers at plan
     * time (O(files) driver-side footer reads per scan would dwarf
     * planning on an object store). min/max are recorded for INTEGRAL
@@ -180,65 +181,61 @@ private[graft] object ManifestParquet {
     * file-level stats carry — unsigned byte order == Spark's
     * UTF8String order, so no collation hazard. Doubles stay excluded
     * (NaN poisoning is decided at the sink, not visible here). */
-  def rowGroups(file: Path, conf: Configuration,
+  def rowGroups(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       schema: StructType): Seq[RgMeta] = {
     import scala.jdk.CollectionConverters._
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      rd.getRowGroups.asScala.toSeq.map { b =>
-        val cols = b.getColumns.asScala.flatMap { c =>
-          val n = c.getPath.toDotString
-          val dt = schema.fields.find(_.name == n).map(_.dataType)
-          val st = c.getStatistics
-          if (st == null || st.isEmpty || !st.isNumNullsSet) None
-          else dt match {
-            case Some(LongType | IntegerType | TimestampType) =>
-              val bounds =
-                if (st.hasNonNullValue)
-                  s""","min":${st.genericGetMin},"max":${st.genericGetMax}"""
-                else ""
-              Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
-            case Some(d: DecimalType) if d.precision <= 18 =>
-              val bounds =
-                if (st.hasNonNullValue)
-                  s""","min":${java.math.BigDecimal.valueOf(
-                    st.genericGetMin.asInstanceOf[java.lang.Long], d.scale)
-                    .toPlainString},"max":${java.math.BigDecimal.valueOf(
-                    st.genericGetMax.asInstanceOf[java.lang.Long], d.scale)
-                    .toPlainString}"""
-                else ""
-              Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
-            case Some(StringType) =>
-              val bounds =
-                if (!st.hasNonNullValue) ""
-                else {
-                  import ManifestStrBounds.{T, b64, succ, trunc}
-                  val mn = st.genericGetMin
-                    .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                  val mx = st.genericGetMax
-                    .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                  // slo: truncation only lowers — inclusive lower bound.
-                  // shi: the max itself when it fits T bytes (inclusive)
-                  // else the byte-successor of its prefix (exclusive);
-                  // an all-0xFF prefix has no successor — upper dropped.
-                  val lo = s""","slo":"${b64(trunc(mn))}""""
-                  val hi =
-                    if (mx.length <= T) s""","shi":"${b64(mx)}","shix":false"""
-                    else succ(trunc(mx)) match {
-                      case Some(s) => s""","shi":"${b64(s)}","shix":true"""
-                      case None => ""
-                    }
-                  lo + hi
-                }
-              Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
-            case _ => None
-          }
+    footer.getBlocks.asScala.toSeq.map { b =>
+      val cols = b.getColumns.asScala.flatMap { c =>
+        val n = c.getPath.toDotString
+        val dt = schema.fields.find(_.name == n).map(_.dataType)
+        val st = c.getStatistics
+        if (st == null || st.isEmpty || !st.isNumNullsSet) None
+        else dt match {
+          case Some(LongType | IntegerType | TimestampType) =>
+            val bounds =
+              if (st.hasNonNullValue)
+                s""","min":${st.genericGetMin},"max":${st.genericGetMax}"""
+              else ""
+            Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
+          case Some(d: DecimalType) if d.precision <= 18 =>
+            val bounds =
+              if (st.hasNonNullValue)
+                s""","min":${java.math.BigDecimal.valueOf(
+                  st.genericGetMin.asInstanceOf[java.lang.Long], d.scale)
+                  .toPlainString},"max":${java.math.BigDecimal.valueOf(
+                  st.genericGetMax.asInstanceOf[java.lang.Long], d.scale)
+                  .toPlainString}"""
+              else ""
+            Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
+          case Some(StringType) =>
+            val bounds =
+              if (!st.hasNonNullValue) ""
+              else {
+                import ManifestStrBounds.{T, b64, succ, trunc}
+                val mn = st.genericGetMin
+                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+                val mx = st.genericGetMax
+                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+                // slo: truncation only lowers — inclusive lower bound.
+                // shi: the max itself when it fits T bytes (inclusive)
+                // else the byte-successor of its prefix (exclusive);
+                // an all-0xFF prefix has no successor — upper dropped.
+                val lo = s""","slo":"${b64(trunc(mn))}""""
+                val hi =
+                  if (mx.length <= T) s""","shi":"${b64(mx)}","shix":false"""
+                  else succ(trunc(mx)) match {
+                    case Some(s) => s""","shi":"${b64(s)}","shix":true"""
+                    case None => ""
+                  }
+                lo + hi
+              }
+            Some(s""""$n":{"nulls":${st.getNumNulls}$bounds}""")
+          case _ => None
         }
-        RgMeta(b.getRowCount, b.getStartingPos, b.getCompressedSize,
-          if (cols.isEmpty) "" else cols.mkString("{", ",", "}"))
       }
-    } finally rd.close()
+      RgMeta(b.getRowCount, b.getStartingPos, b.getCompressedSize,
+        if (cols.isEmpty) "" else cols.mkString("{", ",", "}"))
+    }
   }
 
   /** Render row groups to the manifest `rgs` JSON array. */

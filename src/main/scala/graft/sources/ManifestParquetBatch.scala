@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   *
   * The round-15 read path materialized one parquet-java `Group` per row
   * (SimpleGroup allocation, a name→index hash lookup per field access,
-  * boxed values) — row-at-a-time work on the connector's DEFAULT format.
+  * boxed values) — row-at-a-time work on the connector's data files.
   * This reader walks the projected columns' chunks directly through the
   * public column-reader API instead: per row group, each column is
   * decoded in ONE tight loop into a primitive buffer (4096-row batches,
@@ -44,19 +44,26 @@ import org.apache.spark.sql.types._
 private[sources] final class ManifestParquetBatchReader(
     file: Path, names: Array[String], types: Array[DataType],
     conf: Configuration, range: Option[(Long, Long)],
-    vectorMode: Boolean = false)
+    vectorMode: Boolean = false,
+    // each of `names`' column ORDINAL in the file: when given, a column
+    // resolves by position (a manifest-only rename keeps its data), not
+    // by the name stored in the file
+    ordinals: Option[Array[Int]] = None)
   extends AutoCloseable {
 
   import ManifestParquetBatchReader._
-
-  private val projection: MessageType =
-    ManifestParquet.messageType(StructType(names.indices.map(i =>
-      StructField(names(i), types(i)))))
 
   private val reader: ParquetFileReader = {
     val b = HadoopReadOptions.builder(conf, file)
     range.foreach { case (s, e) => b.withRange(s, e) }
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), b.build())
+  }
+
+  private val projection: MessageType = {
+    val fileNames = ordinals.fold(names)(
+      _.map(reader.getFooter.getFileMetaData.getSchema.getFieldName))
+    ManifestParquet.messageType(StructType(names.indices.map(i =>
+      StructField(fileNames(i), types(i)))))
   }
   if (names.nonEmpty) reader.setRequestedSchema(projection)
   private val createdBy: String =
@@ -275,9 +282,8 @@ private[sources] final class ManifestParquetBatchReader(
     } else longCol(c)(i)
 
   /** The row's raw string rendering for column `c` — byte-identical to
-    * the Group-API `ManifestParquet.rawString` (and so to the writer's
-    * canonical CSV line): filters and `_mf_linehash` hash the same
-    * text. Null when unset. */
+    * the writer's canonical CSV line field: filters and `_mf_linehash`
+    * see the same text. Null when unset. */
   def rawString(c: Int, i: Int): String =
     if (isNull(c, i)) null
     else kinds(c) match {

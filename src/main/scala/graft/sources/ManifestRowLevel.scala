@@ -21,8 +21,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    positional identity `(_mf_file, _mf_pos)`, metadata = the row's
   *    line hash) and/or an insert (the full new row);
   *  - deletes become POSITIONAL DELETE VECTOR files — the same
-  *    (dataFile, byteOffset, lineHash) rows [[ManifestMaintenance]]
-  *    writes — and inserts stream through the sink's own fan-out
+  *    (dataFile, rowOrdinal, lineHash) lines [[ManifestMaintenance]]
+  *    writes, through the same [[ManifestDvWriter]] — and inserts stream through the sink's own fan-out
   *    writer (identity-partitioned tables keep their SPJ layout);
   *  - the driver commit publishes BOTH in ONE manifest version under
   *    `_commit.lock`, so readers see the merge atomically; no data
@@ -36,14 +36,13 @@ import org.apache.spark.util.SerializableConfiguration
   * other commit landed since — positions scanned against an older
   * snapshot must never be applied to a newer one (a concurrent
   * append's rows would silently escape the merge; a concurrent
-  * compaction would invalidate every byte offset). Updates are
+  * compaction would invalidate every row position). Updates are
   * represented as delete + reinsert, so the writer needs only two
   * verbs and an updated row moves files like any other insert.
   */
 private[graft] class ManifestRowLevelOperation(
     dir: String, tableSchema: StructType,
-    cmd: RowLevelOperation.Command, partitionBy: Option[String],
-    fmt: String = ManifestFormat.Csv)
+    cmd: RowLevelOperation.Command, partitionBy: Option[String])
   extends SupportsDelta {
 
   /** The snapshot this whole operation reads and must still be the
@@ -60,8 +59,7 @@ private[graft] class ManifestRowLevelOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new ManifestDeltaWrite(dir, info.schema(), snapshotV, partitionBy,
-          fmt)
+        new ManifestDeltaWrite(dir, info.schema(), snapshotV, partitionBy)
     }
 
   /** Positional row identity — the pair every delete vector keys on. */
@@ -82,17 +80,15 @@ private[graft] class ManifestRowLevelOperation(
 }
 
 private class ManifestDeltaWrite(dir: String, dataSchema: StructType,
-    snapshotV: Long, partitionBy: Option[String],
-    fmt: String = ManifestFormat.Csv)
+    snapshotV: Long, partitionBy: Option[String])
   extends DeltaWrite {
   override def toBatch: DeltaBatchWrite =
-    new ManifestDeltaBatchWrite(dir, dataSchema, snapshotV, partitionBy, fmt)
+    new ManifestDeltaBatchWrite(dir, dataSchema, snapshotV, partitionBy)
   override def description(): String = s"ManifestDeltaWrite($dir@v$snapshotV)"
 }
 
 private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
-    snapshotV: Long, partitionBy: Option[String],
-    fmt: String = ManifestFormat.Csv)
+    snapshotV: Long, partitionBy: Option[String])
   extends DeltaBatchWrite {
 
   private val writeId = java.util.UUID.randomUUID().toString
@@ -104,7 +100,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
     new ManifestDeltaWriterFactory(dir, writeId, dataSchema, hadoopConf,
-      partitionBy, fmt)
+      partitionBy)
 
   /** Atomic merge publish (mirrors ManifestMaintenance.mutate): verify
     * the pinned snapshot is still the head, move delete vectors and
@@ -131,8 +127,8 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
       "ManifestRowLevel") {
       // snapshot-isolation conflict check: ANY commit since this
       // operation's scan snapshot invalidates it — an append's rows
-      // escaped the merge condition, a compaction/delete moved byte
-      // offsets. Abort loudly; the statement can simply be retried.
+      // escaped the merge condition, a compaction/delete moved row
+      // positions. Abort loudly; the statement can simply be retried.
       val headV = ManifestRead.latestVersion(dir)
       if (headV != snapshotV)
         throw new IllegalStateException(
@@ -211,7 +207,7 @@ private[graft] case class ManifestDeltaCommit(
 
 private class ManifestDeltaWriterFactory(dir: String, writeId: String,
     dataSchema: StructType, hadoopConf: SerializableConfiguration,
-    partitionBy: Option[String], fmt: String = ManifestFormat.Csv)
+    partitionBy: Option[String])
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int,
@@ -222,35 +218,16 @@ private class ManifestDeltaWriterFactory(dir: String, writeId: String,
       // plain INSERT gets, updates get too)
       private val insertWriter =
         new ManifestWriterFactory(dir, writeId, dataSchema, hadoopConf,
-          partitionBy, fmt).createWriter(partitionId, taskId)
-      private val fs = new Path(dir).getFileSystem(hadoopConf.value)
-      private val tmpDir = new Path(new Path(dir), s"_tmp-$writeId")
-      // one positional delete-vector stage file per task, lazily
-      // created; rows are the (dataFile, byteOffset, lineHash) lines
-      // every dv reader/conservation guard expects
-      private var dvName: String = _
-      private var dvOut: java.io.PrintWriter = _
-      private var dvRows = 0L
-      private var dvChecksum = 0L
+          partitionBy).createWriter(partitionId, taskId)
+      // one positional delete-vector stage file per task
+      private val dv = new ManifestDvWriter(
+        new Path(dir).getFileSystem(hadoopConf.value),
+        new Path(new Path(dir), s"_tmp-$writeId"),
+        f"dvstage-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.csv")
 
-      override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-        if (dvOut == null) {
-          fs.mkdirs(tmpDir)
-          dvName =
-            f"dvstage-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.csv"
-          dvOut = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-            fs.create(new Path(tmpDir, dvName), true), "UTF-8"))
-        }
-        // id = (_mf_file, _mf_pos) in rowId() order; metadata =
-        // (_mf_linehash). File names are the sink's own (no commas or
-        // quotes), so the line needs no CSV escaping.
-        val line =
-          s"${id.getUTF8String(0)},${id.getLong(1)},${metadata.getLong(0)}"
-        dvOut.print(line)
-        dvOut.print('\n')
-        dvChecksum += line.hashCode.toLong
-        dvRows += 1
-      }
+      // id = (_mf_file, _mf_pos) in rowId() order; metadata = (_mf_linehash)
+      override def delete(metadata: InternalRow, id: InternalRow): Unit =
+        dv.add(id.getUTF8String(0).toString, id.getLong(1), metadata.getLong(0))
 
       override def insert(row: InternalRow): Unit = insertWriter.write(row)
 
@@ -266,28 +243,22 @@ private class ManifestDeltaWriterFactory(dir: String, writeId: String,
             "(representUpdateAsDeleteAndInsert=true); update() must not be called")
 
       override def commit(): WriterCommitMessage = {
-        if (dvOut != null) dvOut.close()
+        val dvFile = dv.finish()
         val dataFiles = insertWriter.commit() match {
           case ManifestCommit(files) => files
           case other => throw new IllegalStateException(
             s"ManifestRowLevel: unexpected insert commit $other")
         }
-        ManifestDeltaCommit(dataFiles,
-          if (dvRows > 0)
-            Seq(ManifestFileCommit(dvName, dvRows, dvChecksum))
-          else Nil)
+        ManifestDeltaCommit(dataFiles, dvFile.toSeq)
       }
 
       override def abort(): Unit = {
-        if (dvOut != null) {
-          dvOut.close()
-          fs.delete(new Path(tmpDir, dvName), false)
-        }
+        dv.abort()
         insertWriter.abort()
       }
 
       override def close(): Unit = {
-        if (dvOut != null) dvOut.close()
+        dv.close()
         insertWriter.close()
       }
     }

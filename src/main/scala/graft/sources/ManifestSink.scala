@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Custom DataSource V2 WRITE path: a CSV sink with an atomic manifest
+/** Custom DataSource V2 WRITE path: a parquet sink with an atomic manifest
   * commit — the connector-side half of the source story
   * (SynthEventsSource covers reads). The point is the two-phase commit
   * protocol every production sink implements:
@@ -44,12 +44,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * racing a commit can observe a missing manifest for an instant, but
   * never a torn one.
   *
-  * Rows are CSV: a field containing a comma, quote, CR/LF, or
-  * backslash is wrapped in double quotes with `"` → `\"`, `\` → `\\`,
-  * and CR/LF → the two-char escapes `\r`/`\n` (one record per physical
-  * line, always — the paired ManifestSource reads line-wise and
-  * round-trips arbitrary string data exactly). Checksum is an
-  * order-independent sum so file-internal row order never matters.
+  * Data files are parquet, the connector's only data-file format
+  * ([[ManifestParquet]]); a `format` option asking for anything else
+  * fails loudly. Row identity is the hash of each row's canonical CSV
+  * rendering ([[ManifestSink.csvField]] per string field): a hash input,
+  * not a file format — `_mf_linehash`, delete vectors and the file
+  * checksum (an order-independent sum of line hashes, so file-internal
+  * row order never matters) are all defined over it.
   *
   * Usage: df.write.format("graft.sources.ManifestSink")
   *   .option("path", dir).mode("append").save()
@@ -71,11 +72,10 @@ class ManifestSink extends TableProvider {
 }
 
 private[graft] object ManifestSink {
-  /** Field encoding (quote `"`, escape `\`). CR/LF are escaped as the
-    * two-char sequences `\r`/`\n` so every record stays ONE physical
-    * line — the reader scans line-by-line, and an embedded newline
-    * written literally would tear the record (and fire the manifest
-    * row-count tamper guard on perfectly valid data). */
+  /** String field of the canonical row rendering (quote `"`, escape
+    * `\`). CR/LF are escaped as the two-char sequences `\r`/`\n`, so a
+    * rendering is ONE line and [[ManifestDialect.splitCsv]] inverts it:
+    * distinct rows never share a rendering. */
   def csvField(v: String): String =
     if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r' || c == '\\'))
       "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -109,6 +109,15 @@ private[graft] object ManifestSink {
         s"ManifestSink: lost the commit lock at $path to a concurrent " +
           s"committer [$onDisk] — aborting this commit; retry it")
   }
+
+  /** Parquet is the only data-file format: a request for any other
+    * (a `format` write option, `USING csv`) fails loudly instead of
+    * silently producing a parquet table. */
+  private[graft] def requireParquet(format: Option[String], what: String): Unit =
+    format.filterNot(_.equalsIgnoreCase("parquet")).foreach { f =>
+      throw new IllegalArgumentException(
+        s"$what: data files are parquet only; format '$f' is not supported")
+    }
 
   private[graft] def readFully(in: java.io.InputStream): String = {
     try {
@@ -200,10 +209,11 @@ private class ManifestTable(path: String, writeSchema: StructType)
       override def build(): Write = {
         val t = doTruncate
         val pBy = Option(info.options.get("partitionBy")).filter(_.nonEmpty)
-        val fmt = ManifestFormat.of(Option(info.options.get("format")))
+        ManifestSink.requireParquet(Option(info.options.get("format")),
+          "ManifestSink")
         new Write {
           override def toBatch: BatchWrite =
-            new ManifestBatchWrite(path, info.schema(), t, pBy, fmt)
+            new ManifestBatchWrite(path, info.schema(), t, pBy)
           // exactly-once STREAMING sink: each micro-batch commits as
           // one manifest version, idempotent by (queryId, epochId) —
           // the manifest records the last committed epoch per query,
@@ -217,41 +227,11 @@ private class ManifestTable(path: String, writeSchema: StructType)
               "ManifestSink streaming writes are append-only " +
                 "(outputMode complete/update with truncate is not supported)")
             new ManifestStreamingWrite(path, info.schema(),
-              info.queryId(), pBy, fmt)
+              info.queryId(), pBy)
           }
         }
       }
     }
-}
-
-/** Data-file format of a manifest table: `csv` (the original row-major
-  * dialect) or `parquet` (columnar — the 100 TB default: ~3-10× fewer
-  * bytes and column-pruned reads). The manifest/ACID/skipping layer is
-  * format-agnostic: entries record the same (file, rows, checksum,
-  * cols, stats) either way, the per-row identity hash is defined over
-  * the CANONICAL CSV RENDERING of the row in both formats (so delete
-  * vectors, the order-independent checksum, and compaction's
-  * conservation guard work unchanged — even across a format-converting
-  * rewrite), and readers dispatch on the file extension, so one table
-  * may hold both formats mid-migration. */
-private[graft] object ManifestFormat {
-  val Csv = "csv"
-  val Parquet = "parquet"
-
-  def of(opt: Option[String]): String = opt.map(_.toLowerCase) match {
-    case None | Some("") | Some(Csv) => Csv
-    case Some(Parquet) => Parquet
-    case Some(other) => throw new IllegalArgumentException(
-      s"ManifestSink: unsupported format '$other' (csv or parquet)")
-  }
-
-  /** Detect the format of an existing table from its committed entries
-    * (for rewrites that must preserve it): parquet iff every data file
-    * is parquet; empty/mixed tables default to csv. */
-  def detect(entries: Seq[ManifestEntry]): String =
-    if (entries.nonEmpty && entries.forall(_.file.endsWith(".parquet")))
-      Parquet
-    else Csv
 }
 
 /** One committed data file (a task may produce several under
@@ -281,12 +261,11 @@ private case class ManifestCommit(files: Seq[ManifestFileCommit])
   * that replay a no-op, which is the whole exactly-once contract for a
   * DSv2 streaming sink. */
 private class ManifestStreamingWrite(path: String, schema: StructType,
-    queryId: String, partitionBy: Option[String] = None,
-    fmt: String = ManifestFormat.Csv)
+    queryId: String, partitionBy: Option[String] = None)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
   private val core =
-    new ManifestBatchWrite(path, schema, truncate = false, partitionBy, fmt)
+    new ManifestBatchWrite(path, schema, truncate = false, partitionBy)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
@@ -303,8 +282,7 @@ private class ManifestStreamingWrite(path: String, schema: StructType,
 }
 
 private class ManifestBatchWrite(path: String, schema: StructType,
-    truncate: Boolean, partitionBy: Option[String] = None,
-    fmt: String = ManifestFormat.Csv)
+    truncate: Boolean, partitionBy: Option[String] = None)
   extends BatchWrite {
 
   // one temp namespace per write job: concurrent appends to the same
@@ -324,8 +302,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
     new Path(path).getFileSystem(hadoopConf.value)
 
   private[sources] def writerFactory: ManifestWriterFactory =
-    new ManifestWriterFactory(path, writeId, schema, hadoopConf, partitionBy,
-      fmt)
+    new ManifestWriterFactory(path, writeId, schema, hadoopConf, partitionBy)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = writerFactory
@@ -468,7 +445,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
 private[sources] class ManifestWriterFactory(path: String, writeId: String,
     schema: StructType,
     hadoopConf: org.apache.spark.util.SerializableConfiguration,
-    partitionBy: Option[String] = None, fmt: String = ManifestFormat.Csv)
+    partitionBy: Option[String] = None)
   extends DataWriterFactory
   with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -548,7 +525,7 @@ private[sources] class ManifestWriterFactory(path: String, writeId: String,
           }
           new ManifestFileWriter(
             fs, tmpDir,
-            f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.$fmt",
+            f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.parquet",
             schema, pv, if (pv.isDefined) pSpecs else Nil,
             hadoopConf.value)
         }
@@ -569,7 +546,7 @@ private[sources] class ManifestWriterFactory(path: String, writeId: String,
     }
 }
 
-/** Per-file writer state: the CSV stream plus the statistics the
+/** Per-file writer state: the parquet writer plus the statistics the
   * reader prunes on — null counts for every column, min/max for
   * NUMERIC columns, truncated UTF-8 byte bounds + a Bloom for STRING
   * columns. A NaN poisons a double column's bounds (dropped, so the
@@ -594,19 +571,8 @@ private class ManifestFileWriter(
     if (pSpecs.length > 1 && pvs.isDefined)
       pSpecs.map(_.render).mkString("|")
     else ""
-  // CSV and parquet writers share EVERYTHING above the byte encoding:
-  // stats, Blooms, string bounds, and the per-row canonical-line hash
-  // (the row identity delete vectors and the conservation guard use)
-  // are computed from the same rendered values either way.
-  private val isParquet = name.endsWith(".parquet")
-  private val out: java.io.PrintWriter =
-    if (isParquet) null
-    else new java.io.PrintWriter(new java.io.OutputStreamWriter(
-      fs.create(new Path(tmpDir, name), true), "UTF-8"))
-  private val pq: ManifestParquet.RowParquetWriter =
-    if (isParquet)
-      new ManifestParquet.RowParquetWriter(new Path(tmpDir, name), schema, conf)
-    else null
+  private val pq =
+    new ManifestParquet.RowParquetWriter(new Path(tmpDir, name), schema, conf)
   private var rows = 0L
   private var checksum = 0L
   private val safeNames =
@@ -668,7 +634,7 @@ private class ManifestFileWriter(
   // per-column dispatch precompiled to int tags so the per-row loop
   // does no DataType pattern matching and allocates no field array /
   // closure: 0=long, 1=int, 2=string, 3=timestamp(micros long),
-  // 4=decimal, 5=boolean, 6=double, 7=other(render-only)
+  // 4=decimal, 5=boolean, 6=double (the types ManifestParquet writes)
   private val colKind: Array[Int] = schema.fields.map(_.dataType match {
     case LongType => 0
     case IntegerType => 1
@@ -677,7 +643,6 @@ private class ManifestFileWriter(
     case _: DecimalType => 4
     case BooleanType => 5
     case DoubleType => 6
-    case _ => 7
   })
   private val colPrec: Array[Int] = schema.fields.map(_.dataType match {
     case d: DecimalType => d.precision; case _ => 0 })
@@ -688,10 +653,8 @@ private class ManifestFileWriter(
   // reused per-row value carry between the fused pass and the parquet
   // render pass (strings/decimals are EXTRACTED once; numerics re-read
   // from the row — primitive getters, no allocation)
-  private val strVals: Array[String] =
-    if (isParquet) new Array[String](nFields) else null
-  private val decVals: Array[Long] =
-    if (isParquet) new Array[Long](nFields) else null
+  private val strVals = new Array[String](nFields)
+  private val decVals = new Array[Long](nFields)
   private var curRow: InternalRow = _
   /** Emits EXACTLY GroupWriter's startField/addValue/endField sequence
     * for this row's non-null fields — identical parquet bytes, minus
@@ -712,8 +675,6 @@ private class ManifestFileWriter(
             case 4 => rc.addLong(decVals(i))
             case 5 => rc.addBoolean(r.getBoolean(i))
             case 6 => rc.addDouble(r.getDouble(i))
-            case _ => throw new UnsupportedOperationException(
-              s"ManifestSink parquet: unsupported type ${schema.fields(i).dataType}")
           }
           rc.endField(fn, i)
         }
@@ -723,11 +684,9 @@ private class ManifestFileWriter(
 
   def write(r: InternalRow): Unit = {
     // ONE fused pass per row: render the canonical CSV line (the
-    // checksum/stats/delete-vector identity — see class doc) into a
-    // reused StringBuilder; for parquet the row then streams straight
-    // into the record consumer (renderRow above) — no per-row Group.
-    // Values, stats and renderings are identical to the former Group
-    // shape by construction.
+    // checksum/stats/delete-vector identity — see ManifestSink) into a
+    // reused StringBuilder; the row then streams straight into the
+    // record consumer (renderRow above) — no per-row Group.
     val sb = lineSb
     sb.setLength(0)
     var i = 0
@@ -738,7 +697,7 @@ private class ManifestFileWriter(
         case 0 | 3 =>
           // LONG, and session-UTC MICROSECONDS timestamps: the
           // InternalRow long itself is the canonical rendering
-          // (integer-exact across formats) and the zone-map bound
+          // (integer-exact) and the zone-map bound
           // (total order, no NaN/zone hazards); INT64 in parquet
           val v = r.getLong(i)
           if (v < minL(i)) minL(i) = v
@@ -757,10 +716,10 @@ private class ManifestFileWriter(
           trackStrBounds(i, v)
           sawStr(i) = true
           sb.append(ManifestSink.csvField(v))
-          if (strVals != null) strVals(i) = v
+          strVals(i) = v
         case 4 =>
           // scale-stable plain rendering ("12.30" at scale 2 — never
-          // scientific notation, identical from both formats' readers);
+          // scientific notation, identical to the reader's rawString);
           // unscaled long, INT64(decimal) in parquet. Zone maps track
           // the UNSCALED long (order-preserving at the column's fixed
           // scale — getDecimal normalizes to it) at zero extra cost.
@@ -770,7 +729,7 @@ private class ManifestFileWriter(
           if (u > maxL(i)) maxL(i) = u
           sawNum(i) = true
           sb.append(d.toJavaBigDecimal.toPlainString)
-          if (decVals != null) decVals(i) = u
+          decVals(i) = u
         case 5 =>
           sb.append(r.getBoolean(i)) // "true" / "false"
         case 6 =>
@@ -790,28 +749,20 @@ private class ManifestFileWriter(
             sawNum(i) = true
           }
           sb.append(v)
-        case _ =>
-          if (isParquet) throw new UnsupportedOperationException(
-            s"ManifestSink parquet: unsupported type ${schema.fields(i).dataType}")
-          sb.append(ManifestSink.csvField(
-            r.get(i, schema.fields(i).dataType).toString))
       }
       i += 1
     }
     // order-independent file checksum: sum of per-row line hashes (the
-    // CANONICAL rendering — identical for both formats, so checksums
-    // and delete-vector hashes survive format-converting rewrites)
-    val line = sb.toString
-    checksum += line.hashCode.toLong
+    // CANONICAL rendering, so checksums and delete-vector hashes survive
+    // any rewrite that keeps the rows)
+    checksum += sb.toString.hashCode.toLong
     rows += 1
-    if (isParquet) { curRow = r; pq.write(renderRow) }
-    else { out.print(line); out.print('\n') }
+    curRow = r
+    pq.write(renderRow)
   }
 
-  private def closeOut(): Unit = if (isParquet) pq.close() else out.close()
-
   def finish(): ManifestFileCommit = {
-    closeOut()
+    pq.close()
     // length of the staged file, measured executor-side once per file
     // at write time (amortized), so the driver never has to stat data
     // files when Catalyst asks the scan for statistics
@@ -819,14 +770,12 @@ private class ManifestFileWriter(
       try fs.getFileStatus(new Path(tmpDir, name)).getLen
       catch { case _: java.io.IOException => -1L }
     // multi-row-group parquet: record each group's rows/byte-range/zone
-    // maps so the scan planner can split and skip INSIDE the file (one
-    // footer read here, executor-side, vs per-scan on the driver)
+    // maps so the scan planner can split and skip INSIDE the file (from
+    // the writer's own footer, executor-side, vs per-scan on the driver)
     val rgJson =
-      if (!isParquet || !safeNames) ""
+      if (!safeNames) ""
       else {
-        val groups =
-          try ManifestParquet.rowGroups(new Path(tmpDir, name), conf, schema)
-          catch { case _: java.io.IOException => Nil }
+        val groups = ManifestParquet.rowGroups(pq.footer, schema)
         if (groups.isEmpty) "" else ManifestParquet.renderRgs(groups)
       }
     if (!safeNames)
@@ -869,9 +818,49 @@ private class ManifestFileWriter(
   }
 
   def abort(): Unit = {
-    closeOut()
+    pq.close()
     fs.delete(new Path(tmpDir, name), false)
   }
 
-  def close(): Unit = closeOut()
+  def close(): Unit = pq.close()
+}
+
+/** Stages ONE delete-vector file: a `dataFile,pos,lineHash` line per
+  * deleted row (data-file names are the sink's own — no commas or
+  * quotes — so lines need no escaping), and a checksum that sums the
+  * lines' hashes like a data file's. The file is created on the first
+  * row, so a task that deletes nothing stages nothing. The one writer
+  * of delete vectors: SQL row-level DML and the maintenance
+  * DELETE/UPSERT path both stage through it. */
+private[sources] final class ManifestDvWriter(
+    fs: FileSystem, dir: Path, name: String) {
+  private var out: java.io.PrintWriter = _
+  private var rows = 0L
+  private var checksum = 0L
+
+  def add(file: String, pos: Long, lineHash: Long): Unit = {
+    if (out == null) {
+      fs.mkdirs(dir)
+      out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+        fs.create(new Path(dir, name), true), "UTF-8"))
+    }
+    val line = s"$file,$pos,$lineHash"
+    out.print(line)
+    out.print('\n')
+    checksum += line.hashCode.toLong
+    rows += 1
+  }
+
+  /** Closes the file; its commit, or None when no row was added. */
+  def finish(): Option[ManifestFileCommit] = {
+    close()
+    if (rows > 0) Some(ManifestFileCommit(name, rows, checksum)) else None
+  }
+
+  def close(): Unit = if (out != null) out.close()
+
+  def abort(): Unit = if (out != null) {
+    out.close()
+    fs.delete(new Path(dir, name), false)
+  }
 }

@@ -21,17 +21,14 @@ import org.apache.spark.util.SerializableConfiguration
   * immutable `manifest-v{n}.json` snapshot instead of the latest —
   * time travel across appends (truncate expires history).
   *
-  *  - input partitions follow the commit's file layout, and files
-  *    larger than `spark.sql.files.maxPartitionBytes` are further
-  *    byte-range split (Hadoop text-split contract: a record belongs
-  *    to the split holding its first byte) so one fat file can't cap
-  *    read parallelism at 1; the per-file row-count tamper guard stays
-  *    active on unsplit reads;
-  *  - column pruning via SupportsPushDownRequiredColumns: every CSV
-  *    field is still tokenized (the format is row-major), but only the
-  *    requested columns are parsed/converted and shipped;
-  *  - the CSV dialect is the sink's own (quote `"`, escape `\`,
-  *    unquoted empty = NULL), so sink→source round-trips are exact;
+  *  - input partitions follow the commit's file layout, and a parquet
+  *    file with several row groups is split per row group (each split
+  *    keeps its own row-count tamper guard) so one fat file can't cap
+  *    read parallelism at 1;
+  *  - column pruning via SupportsPushDownRequiredColumns: only the
+  *    requested (and filtered) columns' chunks are decoded;
+  *  - a data file's columns resolve by their position in the entry's
+  *    `cols` list, so a manifest-only RENAME COLUMN keeps the data;
   *  - executors resolve the FileSystem from the driver's Hadoop conf
   *    (SerializableConfiguration), matching the sink's write path.
   *
@@ -73,9 +70,9 @@ class ManifestSource extends TableProvider {
 
 private[sources] object ManifestMeta {
   /** Row-identity metadata exposed with `option("metadata", "true")`:
-    * the containing data file, the record's byte offset in it (stable
-    * under byte-range splits — it IS the split bookkeeping), and the
-    * raw line's hash (the same per-row term the sink's
+    * the containing data file, the record's row ordinal in it (file-
+    * global across row-group splits), and the hash of the row's
+    * canonical rendering (the same per-row term the sink's
     * order-independent file checksum sums). Positional delete vectors
     * are built from exactly these three. */
   val fields: Array[StructField] = Array(
@@ -109,7 +106,7 @@ private class ManifestReadTable(
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
       // accept the comparison/null filters we can evaluate during the
-      // CSV parse; everything else stays a Spark-side residual. The
+      // decode; everything else stays a Spark-side residual. The
       // accepted ones are evaluated row-by-row in the reader BEFORE
       // rows are materialized/shipped — on a wide table this is the
       // difference between shipping every row and shipping matches.
@@ -327,7 +324,7 @@ private object ManifestFilters {
     }
   }
 
-  /** Evaluate one filter against the raw parsed CSV fields (null =
+  /** Evaluate one filter against the rows' raw renderings (null =
     * NULL). Comparisons convert through the declared column type; a
     * NULL operand fails every comparison (SQL 3VL: unknown rows are
     * filtered). */
@@ -628,16 +625,11 @@ private[sources] class ManifestScan(
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
     // merge-on-read: every partition of this snapshot applies the
     // snapshot's delete vectors (positions of deleted rows) at scan
     // time — deleted rows are skipped record-by-record, never shipped.
     // Same single snapshot read as the entries (never mixed versions).
     val (allEntries, dvFiles) = snapshot
-    // honors spark.sql.files.maxPartitionBytes like the built-in file
-    // sources (tests dial it down to force multi-split reads)
-    val maxSplit = math.max(1024L, spark.sessionState.conf.filesMaxPartitionBytes)
     // grouped mode (compaction): ONE partition per bin-packed group,
     // whole files only — each group is one task's rewrite unit
     groups.foreach { gs =>
@@ -690,17 +682,7 @@ private[sources] class ManifestScan(
     val planned = entries
       .flatMap { e =>
       val (name, rows) = (e.file, e.rows)
-      // length from the manifest when recorded there (commit-time), a
-      // stat RPC only for pre-round-15 entries — planning must not pay
-      // O(files) driver-side metadata calls
-      lazy val statLen = {
-        val fp = new Path(s"$path/$name")
-        fp.getFileSystem(conf).getFileStatus(fp).getLen
-      }
-      val len = e.bytes.getOrElse(statLen)
-      val rgList =
-        if (name.endsWith(".csv")) Nil
-        else e.rgs.map(ManifestParquet.parseRgs).getOrElse(Nil)
+      val rgList = e.rgs.map(ManifestParquet.parseRgs).getOrElse(Nil)
       if (rgList.nonEmpty) {
         // MULTI-ROW-GROUP parquet: one split per SURVIVING row group —
         // the planner both parallelizes a fat file and SKIPS inside it
@@ -711,7 +693,7 @@ private[sources] class ManifestScan(
         // identity survive the split exactly.
         rgCandidates += rgList.length
         var rowStart = 0L
-        val parts = rgList.flatMap { rg =>
+        rgList.flatMap { rg =>
           val start = rowStart
           rowStart += rg.rows
           // a row group prunes under the SAME verdicts as a file: its
@@ -726,30 +708,11 @@ private[sources] class ManifestScan(
               rowStart = start): InputPartition)
           else { rgSkipped += 1; None }
         }
-        parts
       }
-      else if (len <= maxSplit || !name.endsWith(".csv"))
-        // unsplit: the whole-file row-count tamper guard stays active
+      else
+        // one whole-file split: the row-count tamper guard covers it
         Seq(ManifestFilePartition(s"$path/$name", rows,
           dvFiles = dvFiles, cols = e.cols): InputPartition)
-      else {
-        // Byte-range splits so ONE fat manifest file no longer caps read
-        // parallelism at 1 (the round-10 scale note). The dialect
-        // guarantees one record per physical line (CR/LF are escaped),
-        // so the classic text-split contract applies: a record belongs
-        // to the split containing its FIRST byte; a reader seeking into
-        // the middle discards the partial line and reads one line past
-        // its end. The per-file row-count guard needs the whole file,
-        // so it is (documentedly) inactive on split reads — torn-quote
-        // parses still fail loudly.
-        val nSplits = ((len + maxSplit - 1) / maxSplit).toInt
-        (0 until nSplits).map { i =>
-          val start = i.toLong * maxSplit
-          ManifestFilePartition(s"$path/$name", rows,
-            start, math.min(maxSplit, len - start), dvFiles,
-            cols = e.cols): InputPartition
-        }
-      }
     }.toArray
     ManifestScanMetrics.recordRgs(path, rgCandidates, rgSkipped)
     metricsCell.rgCandidates = rgCandidates
@@ -759,25 +722,21 @@ private[sources] class ManifestScan(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // columnar hand-off only when the WHOLE snapshot is parquet: Spark
-    // requires a scan's partitions to be uniformly columnar or row-based,
-    // and runtime filtering only ever shrinks this entry set
-    val allParquet = snapshot._1.nonEmpty &&
-      snapshot._1.forall(_.file.endsWith(".parquet"))
     // scale gate: vector allocation + ColumnarToRow conversion are
     // per-scan fixed costs that only amortize over enough rows — tiny
     // fixture/metadata scans stay row-based (measured: many-small-file
     // corpora regressed ~9% columnar-always at bench scale). Snapshot
-    // row counts come free from the already-parsed manifest. Both knobs
-    // are session confs so production can retune without a rebuild.
-    val enabled = spark.conf
-      .get("spark.graft.manifest.columnar.enabled", "true").toBoolean
+    // row counts come free from the already-parsed manifest; the bound
+    // is a session conf so production can retune it without a rebuild.
+    // Decided per SCAN: Spark requires a scan's partitions to be
+    // uniformly columnar or row-based.
     val minRows = spark.conf
       .get("spark.graft.manifest.columnar.minRows", "262144").toLong
-    val bigEnough = snapshot._1.iterator.map(_.rows).sum >= minRows
+    val columnar = snapshot._1.nonEmpty &&
+      snapshot._1.iterator.map(_.rows).sum >= minRows
     new ManifestReaderFactory(fullSchema, required,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      filters, metaCols, columnar = enabled && allParquet && bigEnough)
+      filters, metaCols, columnar)
   }
 
   /** Streaming face: each micro-batch is the file-level DIFF between
@@ -1251,15 +1210,13 @@ private class ManifestMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-/** `start`/`len` select a byte range; `len < 0` means "the whole file"
-  * (the row-count tamper guard is active only in that mode — a split
-  * reader can't know its share of the manifest's row count). `dvFiles`
-  * names the snapshot's delete-vector files (table-dir-relative); the
-  * reader skips records whose byte offset a dv lists for its file.
-  * `rowStart >= 0` marks a parquet ROW-GROUP split: `start`/`len` are
-  * the group's byte range (midpoint-selected), `rows` the group's own
-  * row count (tamper guard stays active per group), and the reader
-  * seeds `_mf_pos` at `rowStart` so ordinals stay file-global. */
+/** A whole data file, or (`rowStart >= 0`) ONE ROW GROUP of it:
+  * `start`/`len` are then the group's byte range (midpoint-selected),
+  * `rows` the group's own row count (the tamper guard stays active per
+  * group), and the reader seeds `_mf_pos` at `rowStart` so ordinals
+  * stay file-global. `dvFiles` names the snapshot's delete-vector files
+  * (table-dir-relative); the reader skips records whose ordinal a dv
+  * lists for its file. */
 private case class ManifestFilePartition(
     file: String, rows: Long, start: Long = 0L, len: Long = -1L,
     dvFiles: Seq[String] = Nil, rowStart: Long = -1L,
@@ -1558,10 +1515,9 @@ private class ManifestReaderFactory(
     columnar: Boolean = false)
   extends PartitionReaderFactory {
 
-  /** Columnar hand-off: ON only when the scan proved every data file of
-    * the snapshot is parquet (Spark requires partitions of one scan to
-    * be uniformly columnar or uniformly row-based). The flag is scoped
-    * to the whole scan, so every planned partition honors it. */
+  /** Columnar hand-off, decided once per scan (Spark requires partitions
+    * of one scan to be uniformly columnar or uniformly row-based), so
+    * every planned partition honors it. */
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   override def createColumnarReader(
@@ -1621,9 +1577,7 @@ private class ManifestReaderFactory(
       }
     case k: ManifestKeyedPartition =>
       createReader(ManifestGroupPartition(k.tableDir, k.files, k.dvFiles))
-    case part: ManifestFilePartition =>
-      if (part.file.endsWith(".parquet")) createParquetReader(part)
-      else createFileReader(part)
+    case part: ManifestFilePartition => createParquetReader(part)
   }
 
   /** Deleted record positions for ONE data file (merge-on-read): dv
@@ -1656,10 +1610,10 @@ private class ManifestReaderFactory(
     * pushed-filter columns; everything when the canonical line hash is
     * requested) in BATCHES — each column chunk is walked in one tight
     * loop into a typed array (ManifestParquetBatchReader). Delete
-    * vectors apply by ROW ORDINAL and the same pushed-filter eval the
-    * CSV reader uses runs over raw renderings built only for the
-    * filter's own columns; survivors land in a selection vector the
-    * wrapping reader serves rows (or column vectors) from. */
+    * vectors apply by ROW ORDINAL and the pushed-filter eval runs over
+    * raw renderings built only for the filter's own columns; survivors
+    * land in a selection vector the wrapping reader serves rows (or
+    * column vectors) from. */
   private final class ParquetCursor(part: ManifestFilePartition,
       vectorMode: Boolean = false) {
     private val fp = new Path(part.file)
@@ -1667,7 +1621,10 @@ private class ManifestReaderFactory(
     private val fileName = fp.getName
     private val deletedPos = deletedPosFor(fs, fp, part.dvFiles)
     def hasDeletes: Boolean = !deletedPos.isEmpty
-    // the FILE's own column layout (schema evolution by name)
+    // the FILE's own column layout, in file column order: schema
+    // evolution by name against the read schema, and (when the manifest
+    // records it) by position against the file's columns, so a
+    // manifest-only RENAME COLUMN keeps the data
     private val fileCols: Array[String] =
       part.cols.map(_.split(',')).getOrElse(fullSchema.fieldNames)
     private val needLinehash = metaCols.contains("_mf_linehash")
@@ -1695,7 +1652,7 @@ private class ManifestReaderFactory(
     val batch = new ManifestParquetBatchReader(fp, neededNames,
       neededNames.map(dtOf), hadoopConf.value,
       if (rgSplit) Some((part.start, part.start + part.len)) else None,
-      vectorMode)
+      vectorMode, part.cols.map(_ => neededNames.map(n => fileCols.indexOf(n))))
     private val hasFilters = filters.nonEmpty
     // projected-column index by name (-1 = not in this file)
     private def idxOf(n: String): Int = neededNames.indexOf(n)
@@ -1709,8 +1666,8 @@ private class ManifestReaderFactory(
       if (filterRefs.contains(f.name)) idxOf(f.name) else -1)
     // linehash walks the file's own column order
     private val lineIdx: Array[Int] = fileCols.map(idxOf)
-    private val lineIsStr: Array[Boolean] =
-      fileCols.map(n => dtOf(n) == StringType)
+    private val lineIsStr: Array[Boolean] = fileCols.map(n =>
+      fullSchema.find(_.name == n).exists(_.dataType == StringType))
     // per-row dispatch precompiled to int tags (no DataType pattern
     // match in the hot loop); decimal scale/precision kept alongside
     val reqKind: Array[Int] = reqTypes.map {
@@ -1753,7 +1710,7 @@ private class ManifestReaderFactory(
     def nextSelection(): Int = {
       val n = batch.loadNextBatch()
       if (n < 0) {
-        if ((part.len < 0 || rgSplit) && readCount != part.rows)
+        if (readCount != part.rows)
           throw new java.io.IOException(
             s"ManifestSource: ${part.file}" +
               (if (rgSplit) s" row group @${part.start}" else "") +
@@ -1769,8 +1726,8 @@ private class ManifestReaderFactory(
         ordinal += 1
         val deleted = !deletedPos.isEmpty && deletedPos.contains(recOrdinal)
         if (!deleted) {
-          // pushed filters on the raw rendering — same eval, same
-          // 3VL, same UTF-8 semantics as the CSV path
+          // pushed filters on the raw rendering (SQL 3VL, UTF-8
+          // byte order for strings)
           val ok = !hasFilters || {
             var i = 0
             while (i < fullSchema.length) {
@@ -1793,7 +1750,7 @@ private class ManifestReaderFactory(
     def nextBatchDirect(): Int = {
       val n = batch.loadNextBatch()
       if (n < 0) {
-        if ((part.len < 0 || rgSplit) && readCount != part.rows)
+        if (readCount != part.rows)
           throw new java.io.IOException(
             s"ManifestSource: ${part.file}" +
               (if (rgSplit) s" row group @${part.start}" else "") +
@@ -1810,7 +1767,7 @@ private class ManifestReaderFactory(
 
     /** EXACTLY the writer's canonical line over the file's own column
       * order (escaped string fields, "" for NULL), hashed — identical
-      * to the CSV rows' `line.hashCode`. */
+      * to the sink's per-row checksum term. */
     def linehash(r: Int): Long = {
       lineSb.setLength(0)
       var j = 0
@@ -2049,228 +2006,15 @@ private class ManifestReaderFactory(
       override def close(): Unit = cur.close()
     }
   }
-
-  private def createFileReader(
-      part: ManifestFilePartition): PartitionReader[InternalRow] = {
-    new PartitionReader[InternalRow] {
-      private val fs = new Path(part.file).getFileSystem(hadoopConf.value)
-      private val stream = fs.open(new Path(part.file))
-      private val fileName = new Path(part.file).getName
-      // deleted record offsets for THIS data file (merge-on-read)
-      private val deletedPos =
-        deletedPosFor(fs, new Path(part.file), part.dvFiles)
-      private val wholeFile = part.len < 0
-      // [splitStart, splitEnd): a record belongs to this split iff its
-      // FIRST byte lies in the range; the reader may read past splitEnd
-      // to finish the last owned record (the Hadoop text-split contract;
-      // sound here because the dialect escapes CR/LF, so one record is
-      // always exactly one '\n'-terminated physical line)
-      private val splitEnd = if (wholeFile) Long.MaxValue else part.start + part.len
-      private var pos = {
-        if (part.start > 0) {
-          stream.seek(part.start)
-          var p = part.start
-          var b = stream.read()
-          while (b >= 0 && b != '\n') { p += 1; b = stream.read() }
-          if (b >= 0) p + 1 else p // consumed the partial line's '\n'
-        } else 0L
-      }
-      // Block-buffered line scanner (r17, verdict #3): the old
-      // BufferedInputStream.read() path paid one synchronized virtual
-      // call PER BYTE plus a ByteArrayOutputStream append per byte —
-      // the dominant per-row cost of the CSV format. Lines are now
-      // located by scanning a 64 KB block for '\n' and decoded straight
-      // from the block (one String per line, no intermediate buffer);
-      // only a line that straddles a block boundary touches the
-      // carry-over builder. Same bytes, same UTF-8 decode, same torn-
-      // file contract.
-      private val block = new Array[Byte](1 << 16)
-      private var blockLen = 0
-      private var blockPos = 0
-      private val carry = new java.io.ByteArrayOutputStream(256)
-      // positions (in file field order) of the required columns
-      private val fieldIdx = required.fields.map(f => fullSchema.fieldIndex(f.name))
-      // SCHEMA EVOLUTION: when the file was written under a different
-      // column layout than the read schema, map every read-schema
-      // position to the file's own position BY NAME (added columns read
-      // as NULL from older files; reordered/dropped columns resolve by
-      // name, never by position). null = layouts agree, zero overhead.
-      private val remap: Array[Int] = part.cols match {
-        case Some(c) =>
-          val fileCols = c.split(',')
-          if (fileCols.sameElements(fullSchema.fieldNames)) null
-          else fullSchema.fieldNames.map(n => fileCols.indexOf(n))
-        case None => null
-      }
-      // per-row dispatch precompiled to int tags (see parquet reader)
-      private val reqKind: Array[Int] = required.fields.map(_.dataType match {
-        case LongType | TimestampType => 0
-        case IntegerType => 1
-        case DoubleType => 2
-        case StringType => 3
-        case BooleanType => 4
-        case _: DecimalType => 5
-        case dt => throw new UnsupportedOperationException(
-          s"ManifestSource: unsupported read type $dt")
-      })
-      private val reqPrec: Array[Int] = required.fields.map(_.dataType match {
-        case d: DecimalType => d.precision; case _ => 0 })
-      private val reqScale: Array[Int] = required.fields.map(_.dataType match {
-        case d: DecimalType => d.scale; case _ => 0 })
-      private val metaKind: Array[Int] = metaCols.toArray.map {
-        case "_mf_file" => 0
-        case "_mf_pos" => 1
-        case "_mf_linehash" => 2
-      }
-      private val fileNameUtf8 = UTF8String.fromString(fileName)
-      // reused remap buffer: every slot is rewritten for each row
-      private val remapBuf: Array[String] =
-        if (remap == null) null else new Array[String](remap.length)
-      private var current: InternalRow = _
-      private var readCount = 0L
-
-      /** Next '\n'-terminated line as UTF-8, advancing `pos`; null at
-        * EOF (an unterminated trailing fragment is a torn write —
-        * loud). */
-      private def readLine(): String = {
-        var start = blockPos
-        var sb: java.io.ByteArrayOutputStream = null
-        while (true) {
-          if (blockPos >= blockLen) {
-            if (start < blockPos) { // straddling line: carry the prefix
-              if (sb == null) { sb = carry; sb.reset() }
-              sb.write(block, start, blockPos - start)
-            }
-            blockLen = stream.read(block)
-            blockPos = 0
-            start = 0
-            if (blockLen <= 0) {
-              if (sb != null && sb.size() > 0)
-                throw new java.io.IOException(
-                  s"ManifestSource: ${part.file} ends mid-record at byte " +
-                    s"$pos — torn or tampered file")
-              return null
-            }
-          }
-          var i = blockPos
-          while (i < blockLen && block(i) != '\n') i += 1
-          if (i < blockLen) {
-            val line =
-              if (sb == null)
-                new String(block, start, i - start,
-                  java.nio.charset.StandardCharsets.UTF_8)
-              else {
-                sb.write(block, start, i - start)
-                new String(sb.toByteArray,
-                  java.nio.charset.StandardCharsets.UTF_8)
-              }
-            pos += (if (sb == null) i - start else sb.size()) + 1
-            blockPos = i + 1
-            return line
-          }
-          blockPos = blockLen // no newline in block: spill and refill
-        }
-        null
-      }
-
-      override def next(): Boolean = {
-        while (true) {
-          // Stop when the next record would start strictly PAST splitEnd.
-          // A record starting exactly AT splitEnd belongs to THIS split:
-          // the next split seeks to splitEnd and unconditionally discards
-          // through the first newline at-or-after it — i.e. that whole
-          // record — so reading it here (pos == splitEnd) is what makes
-          // the boundary exactly-once (the Hadoop LineRecordReader
-          // convention).
-          if (pos > splitEnd) return false
-          val recStart = pos // this record's byte offset = its identity
-          val line = readLine()
-          if (line == null) {
-            if (wholeFile && readCount != part.rows)
-              throw new java.io.IOException(
-                s"ManifestSource: ${part.file} has $readCount rows, " +
-                  s"manifest says ${part.rows} — torn or tampered file")
-            return false
-          }
-          readCount += 1 // counts ALL physical rows (tamper guard:
-          // manifest row counts are GROSS — deletes never rewrite data
-          // files, so deleted rows still count as physical lines)
-          val deleted = !deletedPos.isEmpty && deletedPos.contains(recStart)
-          if (!deleted) {
-            val rawFields = splitCsv(line)
-            // canonicalize to read-schema order BEFORE filters run, so
-            // pushed-filter eval and column extraction see one layout
-            val fields =
-              if (remap == null) rawFields
-              else {
-                var j = 0
-                while (j < remap.length) {
-                  val fi = remap(j)
-                  remapBuf(j) =
-                    if (fi >= 0 && fi < rawFields.length) rawFields(fi)
-                    else null
-                  j += 1
-                }
-                remapBuf
-              }
-            // pushed filters run here, on the raw parse, BEFORE any row
-            // is materialized or shipped
-            if (filters.forall(ManifestFilters.eval(fullSchema, fields, _))) {
-              val vals = new Array[Any](required.length + metaKind.length)
-              var i = 0
-              while (i < fieldIdx.length) {
-                val raw = fields(fieldIdx(i))
-                vals(i) =
-                  if (raw == null) null
-                  else reqKind(i) match {
-                    case 0 => raw.toLong // long / canonical ts micros
-                    case 1 => raw.toInt
-                    case 2 => raw.toDouble
-                    case 3 => UTF8String.fromString(raw)
-                    case 4 => raw.toBoolean
-                    case _ => org.apache.spark.sql.types.Decimal(
-                      new java.math.BigDecimal(raw), reqPrec(i), reqScale(i))
-                  }
-                i += 1
-              }
-              // row-identity metadata (delete vectors are built from it)
-              var m = 0
-              while (m < metaKind.length) {
-                vals(i) = metaKind(m) match {
-                  case 0 => fileNameUtf8
-                  case 1 => recStart
-                  case _ => line.hashCode.toLong
-                }
-                i += 1; m += 1
-              }
-              current =
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-              return true
-            }
-          }
-        }
-        false
-      }
-
-      override def get(): InternalRow = current
-      override def close(): Unit = stream.close()
-
-      /** Inverse of the sink's CSV dialect: fields separated by commas;
-        * a field starting with `"` is quoted with `\"`/`\\` escapes plus
-        * `\n`/`\r` for embedded CR/LF (the sink escapes those so every
-        * record is exactly one physical line); an unquoted empty field
-        * is NULL (Spark CSV default). */
-      private def splitCsv(line: String): Array[String] =
-        ManifestDialect.splitCsv(line)
-    }
-  }
 }
 
-/** The sink's CSV dialect as PURE functions, shared by the reader and
-  * the ScalaCheck round-trip property (ManifestDialectPropertySpec):
-  * fields separated by commas; a field needing escapes is wrapped in
-  * `"` with `\"`/`\\` plus `\n`/`\r` for CR/LF (so a record is always
-  * exactly one physical line); an unquoted empty field is NULL. */
+/** Inverse of the canonical row rendering ([[ManifestSink.csvField]]),
+  * as a PURE function: fields separated by commas; a field needing
+  * escapes is wrapped in `"` with `\"`/`\\` plus `\n`/`\r` for CR/LF
+  * (so a rendering is always exactly one line); an unquoted empty field
+  * is NULL. Delete-vector lines are parsed with it, and the ScalaCheck
+  * round-trip property (ManifestDialectPropertySpec) pins that the
+  * rendering is injective. */
 private[graft] object ManifestDialect {
   def splitCsv(line: String): Array[String] = {
     val out = Array.newBuilder[String]

@@ -116,19 +116,14 @@ class AdviceFixSpec2 extends AnyFunSuite {
     val files = manifest.selectExpr("explode(files.file) AS f")
       .collect().map(r => s"$out/${r.getString(0)}")
     // the paired ManifestSource reader must see exactly the original
-    // values — since the round-10 ADVICE fix the dialect escapes CR/LF
-    // as `\r`/`\n` so every record is ONE physical line (the reader is
-    // line-wise; literal newlines inside quotes were the torn-record
-    // bug the advisor flagged)
+    // values
     val back = spark.read.format("graft.sources.ManifestSource")
       .schema("k LONG, s STRING").option("path", out).load()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(back == data.toSet)
-    // and no data file may contain a physical line count different
-    // from its manifest row count (the tamper guard relies on it)
-    val physLines = files.map(f =>
-      scala.io.Source.fromFile(f, "UTF-8").getLines().size).sum
-    assert(physLines == data.size, s"expected ${data.size} physical lines")
+    // and the data files hold exactly the manifest's row count (the
+    // tamper guard relies on it)
+    assert(spark.read.parquet(files: _*).count() == data.size)
   }
 
   test("ManifestSink refuses to commit while another commit holds the lock") {

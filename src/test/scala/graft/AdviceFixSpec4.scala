@@ -68,14 +68,14 @@ class AdviceFixSpec4 extends AnyFunSuite {
       .toDF("k", "s").coalesce(1)
       .write.format("graft.sources.ManifestSink")
       .option("path", out).mode("append").save()
-    // every data file must be exactly ONE physical line per row
-    val parts = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("part-"))
-    assert(parts.nonEmpty)
-    val physLines = parts.map { f =>
-      scala.io.Source.fromFile(f, "UTF-8").getLines().size
-    }.sum
-    assert(physLines == 4, s"expected 4 physical lines, got $physLines")
+    // the canonical rendering each row's identity hash is taken over
+    // is exactly ONE line per record, and decodes back to the value
+    Seq("a\nb", "c\rd", "\\n", "q\"\n\"q").foreach { v =>
+      val field = graft.sources.ManifestSink.csvField(v)
+      assert(!field.exists(c => c == '\n' || c == '\r'), field)
+      assert(graft.sources.ManifestDialect.splitCsv(s"1,$field").toSeq ==
+        Seq("1", v))
+    }
     val back = spark.read.format("graft.sources.ManifestSource")
       .schema("k LONG, s STRING").option("path", out).load()
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq

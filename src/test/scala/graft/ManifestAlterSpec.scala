@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ALTER TABLE through ManifestCatalog (q440's mechanism): ADD COLUMN
-  * as pure metadata, RENAME COLUMN as a manifest rewrite on CSV
-  * tables, era'd schemas for time travel, and loud refusal of
-  * everything the storage layer can't serve exactly.
+  * as pure metadata, RENAME COLUMN as a manifest rewrite (data files
+  * resolve columns by position in the manifest's `cols`), era'd schemas
+  * for time travel, and loud refusal of everything the storage layer
+  * can't serve exactly.
   */
 class ManifestAlterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,15 +42,22 @@ class ManifestAlterSpec extends AnyFunSuite {
     assert(new java.io.File(s"$base/db/t/_schema-upto-v1.ddl").exists())
   }
 
-  test("RENAME COLUMN on a CSV table rewrites the manifest") {
-    val (cat, _) = freshCatalog()
+  test("RENAME COLUMN on a parquet table rewrites only the manifest") {
+    val (cat, base) = freshCatalog()
     val t = s"$cat.db.r"
-    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING csv")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING)")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a'), (2, 'b')")
+    def dataFiles() = new java.io.File(s"$base/db/r").listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.getName).toSet
+    val before = dataFiles()
     spark.sql(s"ALTER TABLE $t RENAME COLUMN v TO label")
+    assert(dataFiles() == before, "a rename must not rewrite data files")
     val rows = spark.sql(s"SELECT k, label FROM $t ORDER BY k").collect()
     assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq(1L -> "a", 2L -> "b"), "renamed column must keep its data")
+    // pushed filters and file skipping see the renamed column too
+    assert(spark.sql(s"SELECT k FROM $t WHERE label = 'b'").collect()
+      .map(_.getLong(0)).toSeq == Seq(2L))
     // era 1 still reads under the old name
     val v1 = spark.sql(s"SELECT * FROM $t VERSION AS OF 1")
     assert(v1.columns.toSeq == Seq("k", "v"))
@@ -61,10 +69,9 @@ class ManifestAlterSpec extends AnyFunSuite {
     val t = s"$cat.db.x"
     spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING parquet")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a')")
-    // rename on a parquet table would silently NULL the column: refuse
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $t RENAME COLUMN v TO w")
-    }
+    // a rename on a parquet table keeps the data under the new name
+    spark.sql(s"ALTER TABLE $t RENAME COLUMN v TO w")
+    spark.sql(s"ALTER TABLE $t RENAME COLUMN w TO v")
     intercept[Exception] { // type change
       spark.sql(s"ALTER TABLE $t ALTER COLUMN k TYPE INT")
     }

@@ -119,14 +119,16 @@ class ManifestDeleteSpec extends AnyFunSuite {
 
   test("compaction bin-packs by bytes: groups rewrite independently") {
     val out = freshDir()
-    // four ~equal files; a byte budget of ~half the total must yield 2
-    // output files (2 groups), not 1 — and conserve rows + checksums
+    // four ~equal files; a byte budget that fits two files but not
+    // three must yield 2 output files (2 groups), not 1 — and conserve
+    // rows + checksums
     (1 to 4).foreach(i => append(out,
       (1 to 10).map(j => (i * 100L + j, s"row-$i-$j"))))
     val sizes = new java.io.File(out).listFiles()
       .filter(_.getName.startsWith("part-")).map(_.length())
     assert(sizes.length == 4)
-    val budget = sizes.sum / 2
+    val budget = 2 * sizes.max
+    assert(budget < 3 * sizes.min)
     val (b, a) = graft.sources.ManifestMaintenance.compact(
       spark, out, "k LONG, s STRING", targetBytes = budget)
     assert(b == 4 && a == 2, s"expected 4 -> 2 files, got $b -> $a")

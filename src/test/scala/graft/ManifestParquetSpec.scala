@@ -3,21 +3,17 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Parquet data files in the manifest connector (`format=parquet`,
-  * q432's mechanism). The manifest/ACID layer is format-agnostic —
-  * these tests drive the SAME machinery the CSV suites pin, in parquet
-  * mode, plus the format-specific laws:
+/** Parquet data files in the manifest connector (q432's mechanism),
+  * its only data-file format:
   *  - exact round-trip (nulls, quoting-hazard strings, unicode,
   *    ±0.0 / extreme doubles);
   *  - file skipping (zone maps + string bounds + Blooms) and aggregate
   *    pushdown answer from the same manifest stats;
   *  - merge-on-read DML: DELETE/MERGE delete vectors key on ROW
   *    ORDINALS, time travel unaffected;
-  *  - compaction with the conservation guard — including a FORMAT-
-  *    CONVERTING rewrite (csv → parquet), since row hashes are defined
-  *    over the canonical rendering in both formats;
+  *  - compaction with the conservation guard;
   *  - SPJ: identity-partitioned parquet tables join exchange-free;
-  *  - columnar payoff: parquet bytes < CSV bytes for the same rows.
+  *  - a request for another format fails loudly.
   */
 class ManifestParquetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,10 +26,9 @@ class ManifestParquetSpec extends AnyFunSuite {
 
   private val ddl = "k BIGINT, d DOUBLE, s STRING"
 
-  private def write(path: String, df: org.apache.spark.sql.DataFrame,
-      fmt: String = "parquet"): Unit =
+  private def write(path: String, df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("graft.sources.ManifestSink")
-      .option("path", path).option("format", fmt).mode("append").save()
+      .option("path", path).mode("append").save()
 
   private def read(path: String, schema: String = ddl) =
     spark.read.format("graft.sources.ManifestSource")
@@ -109,7 +104,7 @@ class ManifestParquetSpec extends AnyFunSuite {
     assert(v1.count() == 10)
   }
 
-  test("compaction: parquet-to-parquet and csv-to-parquet conversion") {
+  test("compaction: parquet-to-parquet with pending deletes") {
     import spark.implicits._
     // parquet table, 4 files + pending deletes -> 1 file, rows conserved
     val path = freshDir()
@@ -123,25 +118,28 @@ class ManifestParquetSpec extends AnyFunSuite {
       spark, path, ddl, targetFiles = 1)
     assert(nb == 4 && na == 1)
     assert(read(path).count() == 35)
+    assert(read(path).collect().map(_.getLong(0)).sorted.toSeq == (5L to 39L))
     assert(graft.sources.ManifestRead.entries(path, "manifest.json")
-      .forall(_.file.endsWith(".parquet")),
-      "compaction must preserve the table's format")
-
-    // csv table CONVERTED to parquet by an explicit-format compaction:
-    // the conservation guard holds across formats (canonical row hashes)
-    val path2 = freshDir()
-    (0 until 3).foreach { i =>
-      write(path2, (i * 10 until (i + 1) * 10)
-        .map(j => (j.toLong, j.toDouble, s"s$j")).toDF("k", "d", "s")
-        .coalesce(1), fmt = "csv")
-    }
-    val before = read(path2).collect().map(_.getLong(0)).sorted.toSeq
-    val (cb, ca) = graft.sources.ManifestMaintenance.compact(
-      spark, path2, ddl, targetFiles = 1, format = "parquet")
-    assert(cb == 3 && ca == 1, s"($cb, $ca)")
-    assert(graft.sources.ManifestRead.entries(path2, "manifest.json")
       .forall(_.file.endsWith(".parquet")))
-    assert(read(path2).collect().map(_.getLong(0)).sorted.toSeq == before)
+  }
+
+  test("a request for a csv data file fails loudly") {
+    import spark.implicits._
+    val path = freshDir()
+    val e = intercept[IllegalArgumentException] {
+      Seq(1L).toDF("k").write.format("graft.sources.ManifestSink")
+        .option("path", path).option("format", "csv").mode("append").save()
+    }
+    assert(e.getMessage.contains("parquet only"), e.getMessage)
+    assert(!new java.io.File(path, "manifest.json").exists())
+    val base = java.nio.file.Files.createTempDirectory("graft_pqcsv").toString
+    val cat = "pqcsv_" + math.abs(base.hashCode)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ManifestCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    intercept[IllegalArgumentException] {
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT) USING csv")
+    }
+    assert(!new java.io.File(s"$base/db/t/_schema.ddl").exists())
   }
 
   test("SQL MERGE on a parquet catalog table (USING parquet)") {
@@ -175,7 +173,7 @@ class ManifestParquetSpec extends AnyFunSuite {
         .repartition(4, col("b"))
         .write.format("graft.sources.ManifestSink")
         .option("path", path).option("partitionBy", "b")
-        .option("format", "parquet").mode("append").save()
+        .mode("append").save()
     keyed(a, "v1"); keyed(b, "v2")
     def rd(p: String, v: String) =
       spark.read.format("graft.sources.ManifestSource")
@@ -201,21 +199,6 @@ class ManifestParquetSpec extends AnyFunSuite {
     }
   }
 
-  test("columnar payoff: parquet bytes well under csv bytes") {
-    import spark.implicits._
-    val rows = (1 to 20000)
-      .map(i => (i.toLong, (i % 97).toDouble, s"category_${i % 13}"))
-      .toDF("k", "d", "s").coalesce(1)
-    val pq = freshDir(); val cs = freshDir()
-    write(pq, rows); write(cs, rows, fmt = "csv")
-    def dataBytes(p: String): Long =
-      new java.io.File(p).listFiles()
-        .filter(f => f.getName.startsWith("part-")).map(_.length()).sum
-    val (pb, cb) = (dataBytes(pq), dataBytes(cs))
-    assert(pb * 2 < cb,
-      s"parquet ($pb bytes) should be well under half of csv ($cb bytes)")
-  }
-
   test("schema evolution by name: old parquet files read with new schema") {
     import spark.implicits._
     val path = freshDir()
@@ -225,7 +208,7 @@ class ManifestParquetSpec extends AnyFunSuite {
     spark.sql("SELECT * FROM VALUES (3L, CAST(3.0 AS DOUBLE), 'c', 30L)" +
         " AS t(k, d, s, extra)")
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("format", "parquet")
+      .option("path", path)
       .mode("append").save()
     val got = read(path, ddl + ", extra BIGINT").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(3)) -1L else r.getLong(3)))

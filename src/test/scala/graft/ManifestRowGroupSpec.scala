@@ -32,7 +32,7 @@ class ManifestRowGroupSpec extends AnyFunSuite {
       .withColumn("v", org.apache.spark.sql.functions.expr("k * 10"))
       .repartition(1).sortWithinPartitions("k")
       .write.format("graft.sources.ManifestSink")
-      .option("path", out).option("format", "parquet")
+      .option("path", out)
       .mode("append").save()
     finally saved.fold(spark.conf.unset("parquet.rowgroup.row.count.limit"))(
       spark.conf.set("parquet.rowgroup.row.count.limit", _))

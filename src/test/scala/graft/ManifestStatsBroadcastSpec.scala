@@ -56,13 +56,13 @@ class ManifestStatsBroadcastSpec extends AnyFunSuite {
 
   test("small dim broadcasts with no hint; big table does not") {
     val big = freshDir(); val dim = freshDir()
-    table(big, files = 8, rowsPerFile = 2000) // ~1 MB total
-    table(dim, files = 1, rowsPerFile = 50)   // ~3 KB
+    table(big, files = 8, rowsPerFile = 2000) // ~200 KB total
+    table(dim, files = 1, rowsPerFile = 50)   // ~8 KB
     withConfs(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "102400") { // 100 KB
       val (nb, _) = joins(rd(big).join(rd(dim), "k"))
-      assert(nb == 1, "the 3 KB dim must broadcast from reported stats")
+      assert(nb == 1, "the 8 KB dim must broadcast from reported stats")
       // dim larger than the threshold: planner must NOT broadcast
       val (nb2, sm2) = joins(rd(big).join(rd(big).select(col("k")), "k"))
       assert(nb2 == 0 && sm2 == 1,
@@ -72,16 +72,19 @@ class ManifestStatsBroadcastSpec extends AnyFunSuite {
 
   test("stats are post-pushdown: a pruned scan flips to broadcast") {
     val big = freshDir(); val other = freshDir()
-    table(big, files = 8, rowsPerFile = 2000)   // ~1 MB, 8 files
-    table(other, files = 8, rowsPerFile = 2000) // ~1 MB
+    table(big, files = 8, rowsPerFile = 2000)   // 8 ~equal files
+    table(other, files = 8, rowsPerFile = 2000)
+    // threshold: half of one table's data bytes
+    val half = new java.io.File(big).listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.length()).sum / 2
     withConfs(
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "204800") { // 200 KB
-      // unfiltered: both ~1 MB > threshold -> sort-merge
+      "spark.sql.autoBroadcastJoinThreshold" -> half.toString) {
+      // unfiltered: both tables > threshold -> sort-merge
       val (nb0, sm0) = joins(rd(big).join(rd(other), "k"))
       assert(nb0 == 0 && sm0 == 1)
       // zone maps keep ONE file of 8 for k<2000 -> reported size
-      // ~128 KB < threshold -> THAT side broadcasts, no hint
+      // ~1/8 of the table < threshold -> THAT side broadcasts, no hint
       val (nb1, _) = joins(
         rd(other).join(rd(big).filter(col("k") < 2000), "k"))
       assert(nb1 == 1,

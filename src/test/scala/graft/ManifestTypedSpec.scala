@@ -3,15 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TIMESTAMP / DECIMAL / BOOLEAN columns through the manifest
-  * connector (q439's mechanism). The canonical row rendering is
-  * format-independent — micros digits, plain-scale decimal, true/false
-  * — so checksums, delete vectors, and format-converting compactions
-  * stay exact across CSV and parquet. Pins:
-  *  - value round trip through BOTH formats;
+  * connector (q439's mechanism). The canonical row rendering — micros
+  * digits, plain-scale decimal, true/false — is what checksums and
+  * delete vectors hash (values pinned in ManifestIdentityPinSpec). Pins:
+  *  - value round trip through the row and the columnar read paths;
   *  - timestamp zone maps prune files AND row groups;
-  *  - pushed equality on decimal/boolean evaluates correctly;
-  *  - csv→parquet compaction of a typed table passes the checksum
-  *    conservation guard (same canonical rendering both sides).
+  *  - pushed equality on decimal/boolean evaluates correctly.
   */
 class ManifestTypedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,25 +40,27 @@ class ManifestTypedSpec extends AnyFunSuite {
     .format("graft.sources.ManifestSource")
     .schema(Ddl).option("path", out).load()
 
-  test("typed values round-trip identically through csv and parquet") {
-    val csv = freshDir(); val pq = freshDir()
-    val src = fixture(50)
-    src.coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", csv).mode("append").save()
-    src.coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", pq).option("format", "parquet").mode("append").save()
-    val a = scan(csv).orderBy("k").collect()
-    val b = scan(pq).orderBy("k").collect()
+  test("typed values round-trip identically through the row and columnar paths") {
+    val pq = freshDir()
+    fixture(50).coalesce(1).write.format("graft.sources.ManifestSink")
+      .option("path", pq).mode("append").save()
+    val a = scan(pq).orderBy("k").collect()
+    spark.conf.set("spark.graft.manifest.columnar.minRows", "0")
+    val b = try scan(pq).orderBy("k").collect()
+      finally spark.conf.unset("spark.graft.manifest.columnar.minRows")
     assert(a.length == 50 && a.sameElements(b))
     val r = a(13)
     assert(r.getTimestamp(0) == java.sql.Timestamp.from(
       java.time.Instant.parse("2024-03-01T13:00:00Z")))
     assert(r.getDecimal(1) == new java.math.BigDecimal("13.13"))
     assert(!r.getBoolean(2))
-    // and the two formats' manifest checksums agree (canonical lines)
-    val ce = graft.sources.ManifestRead.entries(csv, "manifest.json").head
+    // the reader re-renders exactly the writer's canonical lines: its
+    // line hashes sum to the file checksum the sink recorded
     val pe = graft.sources.ManifestRead.entries(pq, "manifest.json").head
-    assert(ce.checksum == pe.checksum && ce.rows == pe.rows)
+    val hashes = spark.read.format("graft.sources.ManifestSource")
+      .schema(Ddl).option("path", pq).option("metadata", "true").load()
+      .select("_mf_linehash").collect().map(_.getLong(0))
+    assert(pe.rows == 50 && hashes.sum == pe.checksum)
   }
 
   test("timestamp zone maps prune files a time-range probe can't hit") {
@@ -70,7 +69,7 @@ class ManifestTypedSpec extends AnyFunSuite {
     (0 until 4).foreach { b =>
       fixture(100).filter(col("k") >= b * 25 && col("k") < (b + 1) * 25)
         .coalesce(1).write.format("graft.sources.ManifestSink")
-        .option("path", out).option("format", "parquet")
+        .option("path", out)
         .mode("append").save()
     }
     val probe = scan(out).filter(
@@ -85,7 +84,7 @@ class ManifestTypedSpec extends AnyFunSuite {
   test("pushed equality on decimal and boolean evaluates exactly") {
     val out = freshDir()
     fixture(50).coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", out).option("format", "parquet")
+      .option("path", out)
       .mode("append").save()
     assert(scan(out).filter("amt = 7.07").count() == 1)
     assert(scan(out).filter("amt = 7.0700").count() == 1, "value equality")
@@ -93,22 +92,5 @@ class ManifestTypedSpec extends AnyFunSuite {
     assert(scan(out).filter("flag = false").count() == 25)
     assert(scan(out).filter("ts = TIMESTAMP '2024-03-01T05:00:00Z'")
       .count() == 1)
-  }
-
-  test("csv→parquet compaction conserves typed tables exactly") {
-    val out = freshDir()
-    fixture(40).coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", out).mode("append").save()
-    fixture(80).filter(col("k") >= 40)
-      .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", out).mode("append").save()
-    val before = scan(out).orderBy("k").collect()
-    // conversion passes the internal row+checksum conservation guard
-    graft.sources.ManifestMaintenance.compact(
-      spark, out, Ddl, targetFiles = 1, format = "parquet")
-    val after = scan(out).orderBy("k").collect()
-    assert(after.length == 80 && before.sameElements(after))
-    val files = graft.sources.ManifestRead.files(out, "manifest.json")
-    assert(files.length == 1 && files.head._1.endsWith(".parquet"))
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q312 Theil–Sen, q313 CUSUM, q314 partition evolution. */
+/** q312 Theil–Sen, q313 CUSUM, q314 partition evolution (and its
+  * pruned directory read). */
 class ModernOps8Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -100,5 +101,24 @@ class ModernOps8Spec extends AnyFunSuite {
     val evolved = hist.select("l_returnflag").unionByName(cur.select("l_returnflag")).count()
     val base = Tables.load(spark, dir, "lineitem").filter(pred).count()
     assert(evolved === base)
+  }
+
+  test("q314 pruned read: an unlistable layout root falls back to the full read") {
+    // a root that is a plain parquet FILE lists as null: the full read
+    // of the root still answers
+    val file = java.nio.file.Files.createTempDirectory("graft_q314f")
+      .resolve("one.parquet").toString
+    spark.range(3).coalesce(1).write.parquet(file)
+    val single = new java.io.File(file).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    assert(operators.LakehouseOps.prunedRead(spark, single, "pd", _ => true)
+      .count() == 3)
+    // a missing root fails loudly in Spark's path check, not with an NPE
+    val missing = s"$file-missing"
+    val e = intercept[Exception] {
+      operators.LakehouseOps.prunedRead(spark, missing, "pd", _ => true)
+    }
+    assert(!e.isInstanceOf[NullPointerException])
+    assert(e.getMessage.contains("missing"), e.getMessage)
   }
 }

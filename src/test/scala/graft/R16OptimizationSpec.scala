@@ -42,7 +42,7 @@ class R16OptimizationSpec extends AnyFunSuite {
       .withColumn("dec", when(col("k") =!= 3L,
         (col("k").cast("decimal(12,2)") * 7 / 4).cast("decimal(12,2)")))
     df.write.format("graft.sources.ManifestSink")
-      .option("path", path).option("format", "parquet")
+      .option("path", path)
       .mode("append").save()
   }
 
@@ -87,7 +87,7 @@ class R16OptimizationSpec extends AnyFunSuite {
       (0L until 10L).map(i => (i, s"v$i")).toDF("k", "v")
         .coalesce(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", path).option("format", "parquet")
+        .option("path", path)
         .mode("append").save()
     } finally spark.conf.unset("parquet.rowgroup.row.count.limit")
     def read() = spark.read.format("graft.sources.ManifestSource")
@@ -105,32 +105,29 @@ class R16OptimizationSpec extends AnyFunSuite {
     // are REUSED across rows (r16 per-task-work pass); rows with
     // alternating null patterns + a string filter would surface any
     // cross-row aliasing (a stale slot passing/failing the filter or
-    // leaking a neighbor's value). Run on BOTH formats, with the table
-    // evolved so the CSV remap path is active.
+    // leaking a neighbor's value), with the read schema reordered
+    // against the file's column order.
     import spark.implicits._
-    for (fmt <- Seq("csv", "parquet")) {
-      val path = freshDir()
-      val rows = (0L until 200L).map { i =>
-        (i,
-          if (i % 3 == 0) None else Some(s"s${i % 7}"),
-          if (i % 2 == 0) None else Some(i * 11))
-      }
-      rows.toDF("k", "s", "extra")
-        .write.format("graft.sources.ManifestSink")
-        .option("path", path).option("format", fmt)
-        .mode("append").save()
-      // read under a REORDERED schema (extra before s) so remap != null
-      val got = spark.read.format("graft.sources.ManifestSource")
-        .schema("k BIGINT, extra BIGINT, s STRING")
-        .option("path", path).load()
-        .where("s = 's1' AND k < 100") // pushed to the scan
-        .orderBy("k").collect()
-      val want = rows.filter(r => r._2.contains("s1") && r._1 < 100)
-      assert(got.map(_.getLong(0)).toSeq == want.map(_._1), fmt)
-      assert(got.forall(r => r.getString(2) == "s1"), fmt)
-      assert(got.map(r => if (r.isNullAt(1)) -1L else r.getLong(1)).toSeq ==
-        want.map(r => r._3.getOrElse(-1L)), fmt)
+    val path = freshDir()
+    val rows = (0L until 200L).map { i =>
+      (i,
+        if (i % 3 == 0) None else Some(s"s${i % 7}"),
+        if (i % 2 == 0) None else Some(i * 11))
     }
+    rows.toDF("k", "s", "extra")
+      .write.format("graft.sources.ManifestSink")
+      .option("path", path).mode("append").save()
+    // read under a REORDERED schema (extra before s)
+    val got = spark.read.format("graft.sources.ManifestSource")
+      .schema("k BIGINT, extra BIGINT, s STRING")
+      .option("path", path).load()
+      .where("s = 's1' AND k < 100") // pushed to the scan
+      .orderBy("k").collect()
+    val want = rows.filter(r => r._2.contains("s1") && r._1 < 100)
+    assert(got.map(_.getLong(0)).toSeq == want.map(_._1))
+    assert(got.forall(r => r.getString(2) == "s1"))
+    assert(got.map(r => if (r.isNullAt(1)) -1L else r.getLong(1)).toSeq ==
+      want.map(r => r._3.getOrElse(-1L)))
   }
 
   // ---------------- ALTER fixes (round-15 ADVICE)
@@ -146,7 +143,7 @@ class R16OptimizationSpec extends AnyFunSuite {
   test("RENAME era freeze: VERSION AS OF the rename snapshot uses new name") {
     val cat = freshCatalog()
     val t = s"$cat.db.t"
-    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING csv")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING)")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a')") // v1
     spark.sql(s"ALTER TABLE $t RENAME COLUMN v TO w") // publishes v2 (renamed)
     spark.sql(s"INSERT INTO $t VALUES (2, 'b')") // v3

@@ -6,15 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-17 optimization internals.
   *
   * 1. Columnar hand-off (`supportColumnarReads` + OnHeapColumnVector):
-  *    an all-parquet manifest snapshot is served as ColumnarBatches, so
-  *    whole-stage codegen iterates vectors instead of one InternalRow
-  *    per row. Pinned here: the executed plan actually goes columnar
-  *    (ColumnarToRow present), values/nulls/meta columns are identical
-  *    to the CSV row path (canonical line hashes agree), delete vectors
-  *    and pushed filters survive, small (int-backed) and large
-  *    (long-backed) decimals land in the right vector layout, and a
-  *    MIXED-format table falls back to the row path with the same
-  *    results.
+  *    a manifest snapshot above the row gate is served as
+  *    ColumnarBatches, so whole-stage codegen iterates vectors instead
+  *    of one InternalRow per row. Pinned here: the executed plan
+  *    actually goes columnar (ColumnarToRow present) above the gate and
+  *    stays row-based below it, values/nulls/meta columns are identical
+  *    to the row path (canonical line hashes agree), delete vectors and
+  *    pushed filters survive, and small (int-backed) and large
+  *    (long-backed) decimals land in the right vector layout.
   */
 class R17OptimizationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -46,10 +45,9 @@ class R17OptimizationSpec extends AnyFunSuite {
         (col("k").cast("decimal(14,2)") * 1234567 / 4).cast("decimal(14,2)")))
   }
 
-  private def writeTable(path: String, fmt: String): Unit =
+  private def writeTable(path: String): Unit =
     typedDf.coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", path).option("format", fmt)
-      .mode("append").save()
+      .option("path", path).mode("append").save()
 
   private def read(path: String) = spark.read
     .format("graft.sources.ManifestSource")
@@ -68,35 +66,36 @@ class R17OptimizationSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.manifest.columnar.minRows")
   }
 
-  test("columnar hand-off: parquet scan goes columnar, CSV does not") { withColumnarGateOpen {
-    val pq = freshDir(); val csv = freshDir()
-    writeTable(pq, "parquet"); writeTable(csv, "csv")
-    val pqPlan = executedPlan(read(pq))
-    val csvPlan = executedPlan(read(csv))
-    assert(pqPlan.contains("ColumnarToRow"),
-      s"parquet manifest scan should hand off vectors:\n$pqPlan")
-    assert(!csvPlan.contains("ColumnarToRow"),
-      s"csv manifest scan must stay row-based:\n$csvPlan")
-  }}
+  test("columnar hand-off: large scans go columnar, small ones stay row-based") {
+    val pq = freshDir()
+    writeTable(pq)
+    val rowPlan = executedPlan(read(pq))
+    assert(!rowPlan.contains("ColumnarToRow"),
+      s"a scan under the row gate must stay row-based:\n$rowPlan")
+    withColumnarGateOpen {
+      val colPlan = executedPlan(read(pq))
+      assert(colPlan.contains("ColumnarToRow"),
+        s"a scan over the row gate should hand off vectors:\n$colPlan")
+    }
+  }
 
-  test("columnar values identical to the CSV row path (incl. linehash)") { withColumnarGateOpen {
-    val pq = freshDir(); val csv = freshDir()
-    writeTable(pq, "parquet"); writeTable(csv, "csv")
-    // data columns + the canonical line hash (the cross-format row
-    // identity); _mf_pos/_mf_file differ by design (ordinal vs offset)
-    def rows(path: String) = spark.read
+  test("columnar values identical to the row path (incl. linehash)") {
+    val pq = freshDir()
+    writeTable(pq)
+    // data columns + every row-identity meta column
+    def rows() = spark.read
       .format("graft.sources.ManifestSource")
-      .schema(ddl).option("path", path)
+      .schema(ddl).option("path", pq)
       .option("metadata", "true").load()
-      .select(col("*"), col("_mf_linehash").as("lh"))
-      .drop("_mf_file", "_mf_pos", "_mf_linehash")
       .orderBy("k").collect().map(_.toSeq).toSeq
-    assert(rows(pq) == rows(csv))
-  }}
+    val rowPath = rows()
+    assert(rowPath.length == 5)
+    assert(rowPath == withColumnarGateOpen(rows()))
+  }
 
   test("columnar: pushed filter + delete vectors + decimal layouts") { withColumnarGateOpen {
     val pq = freshDir()
-    writeTable(pq, "parquet")
+    writeTable(pq)
     val n = graft.sources.ManifestMaintenance.delete(
       spark, pq, ddl, "k = 4")
     assert(n == 1)
@@ -121,7 +120,7 @@ class R17OptimizationSpec extends AnyFunSuite {
         .map(j => (j.toLong, BigDecimal(j) + BigDecimal("0.25")))
         .toDF("k", "dec").withColumn("dec", col("dec").cast("decimal(12,2)"))
         .coalesce(1).write.format("graft.sources.ManifestSink")
-        .option("path", out).option("format", "parquet")
+        .option("path", out)
         .mode("append").save()
     }
     val df = spark.read.format("graft.sources.ManifestSource")
@@ -144,7 +143,7 @@ class R17OptimizationSpec extends AnyFunSuite {
       .withColumn("dec", col("dec").cast("decimal(12,2)"))
       .repartition(1).sortWithinPartitions("k")
       .write.format("graft.sources.ManifestSink")
-      .option("path", out).option("format", "parquet")
+      .option("path", out)
       .mode("append").save()
     finally saved.fold(spark.conf.unset("parquet.rowgroup.row.count.limit"))(
       spark.conf.set("parquet.rowgroup.row.count.limit", _))
@@ -258,19 +257,6 @@ class R17OptimizationSpec extends AnyFunSuite {
     val b2 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d, "direct.parquet"))
     assert(java.util.Arrays.equals(b1, b2),
       s"files differ: group=${b1.length}B direct=${b2.length}B")
-  }
-
-  test("mixed-format table falls back to the row path, same results") {
-    val mixed = freshDir()
-    writeTable(mixed, "csv")
-    writeTable(mixed, "parquet") // second commit in parquet: mixed table
-    val df = read(mixed)
-    val plan = executedPlan(df)
-    assert(!plan.contains("ColumnarToRow"),
-      s"mixed csv+parquet snapshot must stay row-based:\n$plan")
-    // both files hold the same 5 logical rows
-    assert(df.count() == 10)
-    assert(df.groupBy("k").count().collect().forall(_.getLong(1) == 2))
   }
 
   test("co-supply edge projection: join-free plan, brute-force-identical set") {
