@@ -1174,15 +1174,12 @@ object LakehouseOps {
   // ------------- q432: parquet data files in the manifest connector
 
   /** q432: the connector's COLUMNAR data path end-to-end
-    * (`format=parquet` — [[graft.sources.ManifestParquet]]): an
-    * orders-derived table written as parquet manifest files (snappy,
-    * per-file stats/Blooms/string bounds recorded from the same
-    * in-writer accumulation as CSV), a merge-on-read DELETE whose
-    * delete vectors key on ROW ORDINALS, and a filtered aggregate read
-    * back through the column-pruned Group reader (only the touched
-    * columns' chunks decode). The manifest/ACID layer is format-
-    * agnostic; at 100 TB parquet is the default — ~3-10× fewer bytes
-    * than CSV rows and no per-field tokenizing on the scan. */
+    * ([[graft.sources.ManifestParquet]]): an orders-derived table
+    * written as parquet manifest files (snappy, per-file stats/Blooms/
+    * string bounds recorded in the writer), a merge-on-read DELETE
+    * whose delete vectors key on ROW ORDINALS, and a filtered aggregate
+    * read back through the column-pruned batch reader (only the
+    * touched columns' chunks decode). */
   private val q432 = Q(
     "q432_manifest_parquet_format",
     """WITH o AS (
@@ -1613,8 +1610,7 @@ object LakehouseOps {
     * parquet format end to end — TIMESTAMP as INT64 micros (annotated),
     * DECIMAL(14,2) as unscaled INT64, BOOLEAN native — with the
     * canonical row rendering (micros digits / plain-scale decimal /
-    * true-false) shared with the CSV dialect, so checksums, delete
-    * vectors, and format-converting compactions stay exact. Zone maps
+    * true-false) that checksums and delete vectors hash. Zone maps
     * work on the TIMESTAMP: the fixture is one ts-sorted file with
     * exact 1000-row groups, and a time-range probe plans only the
     * groups whose [min,max] micros overlap — the events-table shape

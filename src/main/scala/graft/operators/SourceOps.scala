@@ -552,7 +552,7 @@ object SourceOps {
     val schema = StructType(Seq(
       StructField("s_suppkey", LongType), StructField("s_name", StringType),
       StructField("s_nationkey", LongType)))
-    s.read.schema(schema).csv(files.map(f => s"$out/$f"): _*)
+    s.read.schema(schema).parquet(files.map(f => s"$out/$f"): _*)
       .agg(count(lit(1)).as("n_rows"), sum("s_suppkey").as("sum_key"),
         countDistinct("s_nationkey").as("n_nations"))
   }

@@ -957,7 +957,7 @@ object StreamingOps2 {
         .json(s"$out/manifest.json")
         .selectExpr("explode(files.file) AS f")
         .collect().map(r => s"$out/${r.getString(0)}")
-      s.read.schema("event_type STRING, cents LONG").csv(files: _*)
+      s.read.schema("event_type STRING, cents LONG").parquet(files: _*)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
         .orderBy("event_type")
