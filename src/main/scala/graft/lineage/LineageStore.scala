@@ -56,7 +56,9 @@ object LineageStore {
     * these are metadata-scale driver-local rows (see object scaladoc).
     * The file is written into a sibling staging dir and swapped in by
     * rename, so a write that fails part-way leaves the previous entity
-    * in place and readable. */
+    * in place and readable. The part file goes through java.nio, not a
+    * Hadoop `LocalFileSystem`: that layer would add a `.crc` sidecar
+    * and, without native IO, fork a `chmod` process per file. */
   private[lineage] def writeEntity(
       path: String, schema: StructType, rows: Seq[Seq[Any]]): Unit = {
     def rm(f: java.io.File): Unit = {
@@ -70,7 +72,8 @@ object LineageStore {
     stage.mkdirs()
     try {
       val w = new graft.sources.ManifestParquet.RowParquetWriter(
-        new org.apache.hadoop.fs.Path(s"$stage/part-00000.snappy.parquet"),
+        new org.apache.parquet.io.LocalOutputFile(
+          new java.io.File(stage, "part-00000.snappy.parquet").toPath),
         schema, hconf)
       try rows.foreach { vals =>
         w.write { rc =>

@@ -7,6 +7,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.io.OutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.types._
@@ -101,8 +102,15 @@ private[graft] object ManifestParquet {
     * emits for non-null fields, so the produced bytes are identical by
     * construction (spec-pinned byte-for-byte in R17OptimizationSpec).
     */
-  final class RowParquetWriter(path: Path, schema: StructType,
-      conf: Configuration) {
+  final class RowParquetWriter private (out: Either[Path, OutputFile],
+      schema: StructType, conf: Configuration) {
+    /** A writer on a Hadoop filesystem path (the manifest sink's). */
+    def this(path: Path, schema: StructType, conf: Configuration) =
+      this(Left(path), schema, conf)
+    /** A writer on any parquet [[OutputFile]], e.g. a
+      * `org.apache.parquet.io.LocalOutputFile` over java.nio. */
+    def this(file: OutputFile, schema: StructType, conf: Configuration) =
+      this(Right(file), schema, conf)
     import org.apache.parquet.io.api.{Binary, RecordConsumer}
     private val mt = messageType(schema)
     private var consumer: RecordConsumer = _
@@ -124,13 +132,22 @@ private[graft] object ManifestParquet {
         consumer.endMessage()
       }
     }
-    private class B(p: Path)
-      extends ParquetWriter.Builder[AnyRef, B](p) {
-      override def self(): B = this
+    // ParquetWriter.Builder picks its target in its constructor, so one
+    // subclass per target kind
+    private class PathB(p: Path)
+      extends ParquetWriter.Builder[AnyRef, PathB](p) {
+      override def self(): PathB = this
       override def getWriteSupport(c: Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[AnyRef] = support
     }
-    private val writer: ParquetWriter[AnyRef] = new B(path)
+    private class FileB(f: OutputFile)
+      extends ParquetWriter.Builder[AnyRef, FileB](f) {
+      override def self(): FileB = this
+      override def getWriteSupport(c: Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[AnyRef] = support
+    }
+    private def build[B <: ParquetWriter.Builder[AnyRef, B]](b: B)
+      : ParquetWriter[AnyRef] = b
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(conf.getLong("parquet.block.size",
@@ -142,6 +159,8 @@ private[graft] object ManifestParquet {
       .withRowGroupRowCountLimit(conf.getInt(
         "parquet.rowgroup.row.count.limit", Int.MaxValue))
       .build()
+    private val writer: ParquetWriter[AnyRef] =
+      out.fold(p => build(new PathB(p)), f => build(new FileB(f)))
     private val names = schema.fieldNames
 
     /** Write one record: `f` adds this row's non-null fields via

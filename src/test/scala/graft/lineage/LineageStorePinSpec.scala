@@ -85,6 +85,13 @@ class LineageStorePinSpec extends AnyFunSuite {
     }
   }
 
+  test("the store writes no .crc sidecar files") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
+    try assert(files.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".crc")).toSeq.isEmpty)
+    finally files.close()
+  }
+
   test("each entity's rows are pinned") {
     schemas.keys.foreach { e =>
       val lines = ids.flatMap { id =>
