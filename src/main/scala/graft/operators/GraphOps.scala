@@ -36,7 +36,11 @@ import org.apache.spark.sql.types.DecimalType
 object GraphOps {
 
   /** Parts supplied by more than this many suppliers are excluded from
-    * the projection (size guard; see scaladoc). */
+    * the projection (size guard; see scaladoc). A null supplier counts
+    * toward the cap, as one row of the oracle's `SELECT DISTINCT`.
+    * The Spark side applies the cap after aggregation: each part's full
+    * distinct supplier set is buffered before the filter drops it, so a
+    * hot part costs memory in proportion to its supplier count. */
   private[operators] val PartCap = 50
 
   /** Shared oracle prelude: canonical (u < v) co-supply edge list.
@@ -70,13 +74,16 @@ object GraphOps {
     * exploded), and sorted-set order makes every emitted pair u < v,
     * so the result set is identical by construction to the oracle's
     * edgeCte. Parts with a single supplier produce no pairs in either
-    * shape; the size ≥ 2 filter just drops them before the explode. */
+    * shape; the size ≥ 2 filter just drops them before the explode.
+    * `collect_set` drops a null supplier, which the oracle's
+    * `count(*) <= PartCap` counts, so the cap adds it back. */
   private[operators] def edges(s: SparkSession, dir: String): DataFrame = {
     val sets = Tables.load(s, dir, "lineitem")
       .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
       .groupBy("p")
-      .agg(sort_array(collect_set(col("s"))).as("ss"))
-      .filter(size(col("ss")).between(2, PartCap))
+      .agg(sort_array(collect_set(col("s"))).as("ss"),
+        max(col("s").isNull.cast("int")).as("null_s"))
+      .filter(size(col("ss")) >= 2 && size(col("ss")) + col("null_s") <= PartCap)
     sets
       .select(col("ss"), posexplode(col("ss")))
       .select(col("col").as("u"),
