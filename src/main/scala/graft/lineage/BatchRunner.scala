@@ -43,8 +43,11 @@ object BatchRunner {
     * Within a worker, EXTRACTION runs sequentially — each file mutates
     * its session's catalog state (USE, CTAS) — while STORE WRITES are
     * catalog-independent and submitted async, overlapping the next
-    * file's extraction: the dominant cost is per-job latency on ~60
-    * tiny parquet writes, not data volume. */
+    * file's extraction. A store write runs no Spark job: it is seven
+    * small local parquet files written directly (see [[LineageStore]]).
+    * Workers share the external catalog, and a catalog write locks
+    * only its own table name (see [[FixtureCatalog]]), so extraction
+    * in different workers runs in parallel. */
   def run(spark: SparkSession, sqlDir: String, storeDir: String,
       numParallel: Int = 1): (Seq[String], Seq[(String, String)]) = {
     val files = new java.io.File(sqlDir).listFiles()
