@@ -7,6 +7,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.OutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -102,15 +103,13 @@ private[graft] object ManifestParquet {
     * emits for non-null fields, so the produced bytes are identical by
     * construction (spec-pinned byte-for-byte in R17OptimizationSpec).
     */
-  final class RowParquetWriter private (out: Either[Path, OutputFile],
-      schema: StructType, conf: Configuration) {
-    /** A writer on a Hadoop filesystem path (the manifest sink's). */
+  final class RowParquetWriter(file: OutputFile, schema: StructType,
+      conf: Configuration) {
+    /** A writer on a Hadoop filesystem path (the manifest sink's): the
+      * same writer `ParquetWriter.Builder(Path)` builds, which wraps the
+      * path exactly this way. */
     def this(path: Path, schema: StructType, conf: Configuration) =
-      this(Left(path), schema, conf)
-    /** A writer on any parquet [[OutputFile]], e.g. a
-      * `org.apache.parquet.io.LocalOutputFile` over java.nio. */
-    def this(file: OutputFile, schema: StructType, conf: Configuration) =
-      this(Right(file), schema, conf)
+      this(HadoopOutputFile.fromPath(path, conf), schema, conf)
     import org.apache.parquet.io.api.{Binary, RecordConsumer}
     private val mt = messageType(schema)
     private var consumer: RecordConsumer = _
@@ -132,22 +131,13 @@ private[graft] object ManifestParquet {
         consumer.endMessage()
       }
     }
-    // ParquetWriter.Builder picks its target in its constructor, so one
-    // subclass per target kind
-    private class PathB(p: Path)
-      extends ParquetWriter.Builder[AnyRef, PathB](p) {
-      override def self(): PathB = this
+    private class B(f: OutputFile)
+      extends ParquetWriter.Builder[AnyRef, B](f) {
+      override def self(): B = this
       override def getWriteSupport(c: Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[AnyRef] = support
     }
-    private class FileB(f: OutputFile)
-      extends ParquetWriter.Builder[AnyRef, FileB](f) {
-      override def self(): FileB = this
-      override def getWriteSupport(c: Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[AnyRef] = support
-    }
-    private def build[B <: ParquetWriter.Builder[AnyRef, B]](b: B)
-      : ParquetWriter[AnyRef] = b
+    private val writer: ParquetWriter[AnyRef] = new B(file)
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(conf.getLong("parquet.block.size",
@@ -159,8 +149,6 @@ private[graft] object ManifestParquet {
       .withRowGroupRowCountLimit(conf.getInt(
         "parquet.rowgroup.row.count.limit", Int.MaxValue))
       .build()
-    private val writer: ParquetWriter[AnyRef] =
-      out.fold(p => build(new PathB(p)), f => build(new FileB(f)))
     private val names = schema.fieldNames
 
     /** Write one record: `f` adds this row's non-null fields via
