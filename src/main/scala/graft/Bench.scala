@@ -59,9 +59,9 @@ object Bench {
         System.err.println(s"[bench] warmup($n) failed: ${e.getMessage}")
       }
     }
-    // Warm the lineage path too (fixture-catalog DDL + analyzer/walker
-    // JIT): without this the alphabetically-first lineage query bills
-    // several seconds of one-time session setup as query time.
+    // Warm the lineage path too (parser, analyzer and walker JIT):
+    // without this the alphabetically-first lineage query bills
+    // one-time setup as query time.
     try lineage.LineageRunner.run(spark, "SELECT * FROM dw.tab10;")
     catch { case _: Throwable => }
     // Pre-stage memoized table layouts (bucketed join pair, q314's two

@@ -32,22 +32,21 @@ object BatchRunner {
     * `numParallel > 1` mirrors the reference's thread-per-chunk shape
     * (`--num-parallel`, BatchProcessor.java:151-163: contiguous
     * even-sized chunks, one worker each). Each worker gets its own
-    * `spark.newSession()` — isolated session state (current database
-    * from USE, temp-function shims, temp views) over the shared
-    * SparkContext and external catalog, the Spark analogue of the
-    * reference's per-thread metastore/db-service connections. Per-file
+    * `spark.newSession()` — isolated session state (temp-function
+    * shims, temp views) over the shared SparkContext, the Spark
+    * analogue of the reference's per-thread metastore/db-service
+    * connections. Per-file
     * store outputs land in disjoint `storeDir/<name>` dirs and the
     * store's ids are content-hashes, so the store is byte-identical to
     * a sequential run (pinned by LineageSpec).
     *
-    * Within a worker, EXTRACTION runs sequentially — each file mutates
-    * its session's catalog state (USE, CTAS) — while STORE WRITES are
-    * catalog-independent and submitted async, overlapping the next
-    * file's extraction. A store write runs no Spark job: it is seven
-    * small local parquet files written directly (see [[LineageStore]]).
-    * Workers share the external catalog, and a catalog write locks
-    * only its own table name (see [[FixtureCatalog]]), so extraction
-    * in different workers runs in parallel. */
+    * Within a worker, EXTRACTION runs sequentially while STORE WRITES
+    * are submitted async, overlapping the next file's extraction. A
+    * store write runs no Spark job: it is seven small local parquet
+    * files written directly (see [[LineageStore]]). Extraction reads
+    * each file's own [[LineageRunner.Scope]] and never writes the
+    * catalog, so workers take no lock; a table one file creates is
+    * visible to files extracted after it, in any worker. */
   def run(spark: SparkSession, sqlDir: String, storeDir: String,
       numParallel: Int = 1): (Seq[String], Seq[(String, String)]) = {
     val files = new java.io.File(sqlDir).listFiles()

@@ -1,18 +1,29 @@
 package graft.lineage
 
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier, UnresolvedPartitionSpec, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, Expression}
+import org.apache.spark.sql.catalyst.analysis.{CTESubstitution, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedPartitionSpec, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Concat, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.command.CreateTableLikeCommand
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Script-level lineage extraction — the Spark-first equivalent of the
   * reference's per-file pipeline (BatchProcessor.ParsingTask.run,
   * BatchProcessor.java:232-286): preprocess → per statement parse →
-  * analyze → extract, maintaining session catalog state across
-  * statements (USE, CREATE TABLE, CTAS targets).
+  * analyze → extract. Extraction is a function of the script and a
+  * read-only base: each run keeps its USE database and its created,
+  * dropped and temporary tables in a [[Scope]], resolves tables from
+  * it, and never writes the session catalog or runs a statement.
   *
   * Permissive mode (SURVEY §7.4.1): the reference extracts lineage even
   * from scripts it can't fully validate ("90% coverage" philosophy,
@@ -24,7 +35,7 @@ import org.apache.spark.sql.types.StringType
   *    Bingql.g4:1436-1442) are shimmed on the fly with a pass-through
   *    that preserves argument references, then analysis is retried;
   *  - Hive-only DDL (STORED AS / typed PARTITIONED BY / s3 LOCATION) is
-  *    registered schema-only via the parsed column definitions.
+  *    kept schema-only, from the parsed column definitions.
   */
 object LineageRunner {
 
@@ -59,10 +70,101 @@ object LineageRunner {
         datasetType = "TABLE")
     }
 
+  /** Tables earlier scripts created, by lower-cased `db.tbl`: what a
+    * CREATE, CTAS or LIKE publishes and a DROP removes, so a later script
+    * on any session reads it (the reference's shared metastore view). */
+  private val registry = new ConcurrentHashMap[String, StructType]()
+
+  private val SessionCatalog = "spark_catalog"
+
+  private def key(db: String, tbl: String): String = s"$db.$tbl".toLowerCase(Locale.ROOT)
+
+  /** A table the script dropped and no [[MetaStore]] knows: unresolved,
+    * as a missing table is, and out of the analyzer's reach. */
+  private final case class DroppedRelation(name: Seq[String]) extends LeafNode {
+    override def output: Seq[Attribute] = Nil
+    override lazy val resolved: Boolean = false
+  }
+
+  /** One script's view of the catalog (reference tmptblCache and
+    * droppedTables, SqlMetaDataExtractor.java:46,79-100): its current
+    * database, the tables it created, the names it dropped, its
+    * temporary tables, the LOCATIONs it declared and the schemas its
+    * [[MetaStore]] answered. */
+  final class Scope(spark: SparkSession, metaStore: Option[MetaStore] = None) {
+    private[lineage] var db = "default"
+    private val created = mutable.HashMap.empty[String, StructType]
+    private val dropped = mutable.HashSet.empty[String]
+    private val fetched = mutable.HashMap.empty[String, Option[StructType]]
+    private[lineage] val temp = mutable.HashSet.empty[String]
+    private[lineage] val storageLocs = mutable.HashMap.empty[String, String]
+
+    private[lineage] def qualify(parts: Seq[String]): (String, String) =
+      if (parts.length >= 2) (parts.dropRight(1).mkString("."), parts.last)
+      else (db, parts.last)
+
+    private[lineage] def create(db: String, tbl: String, schema: StructType): Unit = {
+      val k = key(db, tbl)
+      created(k) = schema
+      dropped -= k
+      registry.put(k, schema)
+    }
+
+    private[lineage] def drop(db: String, tbl: String): Unit = {
+      val k = key(db, tbl)
+      created -= k
+      dropped += k
+      registry.remove(k)
+    }
+
+    /** Binds every table the plan reads, subqueries included; CTE names
+      * are substituted first, so a CTE never binds to a table. */
+    private[lineage] def bind(plan: LogicalPlan): LogicalPlan =
+      CTESubstitution(plan).transformUpWithSubqueries { case u: UnresolvedRelation => relation(u) }
+
+    /** Lookup order: the script's own tables; tables earlier scripts
+      * created; the fixtures; session-catalog tables and unqualified temp
+      * views, left to the analyzer; the [[MetaStore]]. A name the script
+      * dropped skips all but its own tables and the [[MetaStore]]. */
+    private def relation(u: UnresolvedRelation): LogicalPlan = {
+      val parts = u.multipartIdentifier
+      val (db, tbl) = qualify(parts)
+      val k = key(db, tbl)
+      val live = !dropped(k)
+      val catalog = spark.sessionState.catalog
+      // The analyzer resolves a name against the session's database, not
+      // the script's, so a name left to it is qualified first.
+      def qualified = if (parts.length >= 2) u else u.copy(multipartIdentifier = Seq(db, tbl))
+      def fetch = fetched.getOrElseUpdate(k, metaStore.flatMap(_.lookup(db, tbl)).map(cols =>
+        StructType.fromDDL(cols.map { case (n, t) => s"`$n` $t" }.mkString(", "))))
+      created.get(k)
+        .orElse(if (live) Option(registry.get(k)).orElse(FixtureCatalog.schemas.get(k)) else None)
+        .map(schemaOnly(db, tbl, _))
+        .getOrElse {
+          if (live && parts.length == 1 && catalog.getTempView(tbl).isDefined) u
+          else if (live && catalog.tableExists(TableIdentifier(tbl, Some(db)))) qualified
+          else fetch.map(schemaOnly(db, tbl, _))
+            .getOrElse(if (live) qualified else DroppedRelation(parts))
+        }
+    }
+
+    /** `spark_catalog.db.tbl` over a relation that has a schema and no
+      * data — the shape the analyzer gives a catalog table. */
+    private def schemaOnly(db: String, tbl: String, cols: StructType): LogicalPlan = {
+      val (d, t) = (db.toLowerCase(Locale.ROOT), tbl.toLowerCase(Locale.ROOT))
+      val table = CatalogTable(TableIdentifier(t, Some(d), Some(SessionCatalog)),
+        CatalogTableType.EXTERNAL, CatalogStorageFormat.empty, cols)
+      val relation = new BaseRelation {
+        val sqlContext = spark.sqlContext
+        val schema = CharVarcharUtils.replaceCharVarcharWithStringInSchema(cols)
+      }
+      SubqueryAlias(Seq(SessionCatalog, d, t), LogicalRelation(relation, table))
+    }
+  }
+
   def run(spark: SparkSession, script: String,
       metaStore: Option[MetaStore] = None): Result = {
-    FixtureCatalog.register(spark)
-    spark.sql("USE default")
+    val scope = new Scope(spark, metaStore)
     val edges = Seq.newBuilder[(String, ColumnEdge)]
     val inserts = scala.collection.mutable.ArrayBuffer.empty[TableInsert]
     val dsNodes = Seq.newBuilder[DatasetNode]
@@ -70,11 +172,6 @@ object LineageRunner {
     val addParts = Seq.newBuilder[AddPartitionEvent]
     val drops = Seq.newBuilder[TableDrop]
     val topSelects = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Same-script DROP bookkeeping (reference droppedTables,
-    // SqlMetaDataExtractor.java:46,637,894) + CREATE ... LOCATION capture
-    // for later ALTER ADD PARTITION default locations.
-    val droppedTables = scala.collection.mutable.HashSet.empty[String]
-    val storageLocs = scala.collection.mutable.HashMap.empty[String, String]
 
     // Temporary tables (reference tmptblCache + closeSession rename,
     // SqlMetaDataExtractor.java:79-100): Spark's parser rejects CREATE
@@ -82,7 +179,8 @@ object LineageRunner {
     // remembered — the created dataset becomes TEMPORARY_TABLE, and the
     // store renames its mapping out of scope at write time.
     val TempCreate = """(?is)^\s*create\s+temporary\s+(table\s+.*)$""".r
-    val tempTables = scala.collection.mutable.HashSet.empty[String]
+    def dsType(db: String, tbl: String) =
+      if (scope.temp.contains(key(db, tbl))) "TEMPORARY_TABLE" else "TABLE"
 
     val skippedStmts = Seq.newBuilder[String]
 
@@ -103,94 +201,80 @@ object LineageRunner {
         }
       parsedOpt.foreach { parsed =>
       if (isTemp) parsed match {
-        case ct: CreateTable => tempTables += identOf(spark, ct.name).toString
-        case ctas: CreateTableAsSelect => tempTables += identOf(spark, ctas.name).toString
+        case ct: CreateTable => scope.temp += (key _).tupled(identOf(scope, ct.name))
+        case ctas: CreateTableAsSelect => scope.temp += (key _).tupled(identOf(scope, ctas.name))
         case _ => ()
       }
       parsed match {
-        case _: SetCatalogAndNamespace =>
-          spark.sql(stmt)
+        case SetCatalogAndNamespace(ns: UnresolvedNamespace) =>
+          scope.db = ns.multipartIdentifier.last.toLowerCase(Locale.ROOT)
 
         case ct: CreateTable =>
-          val (db, tbl) = identOf(spark, ct.name)
-          registerParsedTable(spark, db, tbl, ct)
+          val (db, tbl) = identOf(scope, ct.name)
+          scope.create(db, tbl, parsedSchema(ct))
           val loc = ct.tableSpec match {
             case u: UnresolvedTableSpec => u.location.getOrElse("")
             case t: TableSpec => t.location.getOrElse("")
             case _ => ""
           }
-          if (loc.nonEmpty) storageLocs(s"$db.$tbl") = loc
-          droppedTables -= s"$db.$tbl"
-          val dsType =
-            if (tempTables.contains((db, tbl).toString)) "TEMPORARY_TABLE" else "TABLE"
-          dsNodes += DatasetNode(s"$db.$tbl", dsType, db, tbl, storageLoc = loc)
+          if (loc.nonEmpty) scope.storageLocs(key(db, tbl)) = loc
+          dsNodes += DatasetNode(s"$db.$tbl", dsType(db, tbl), db, tbl, storageLoc = loc)
           items ++= tableItems(db, tbl, ct.columns.map(c => c.name -> c.dataType.sql))
 
         case ctas: CreateTableAsSelect =>
-          val (db, tbl) = identOf(spark, ctas.name)
-          droppedTables -= s"$db.$tbl"
+          val (db, tbl) = identOf(scope, ctas.name)
           inserts += TableInsert(db, tbl, "CREATE TABLE AS")
-          val analyzed = analyzePermissive(spark, ctas.query, metaStore)
+          val analyzed = analyzePermissive(spark, ctas.query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
           items ++= tableItems(db, tbl,
             analyzed.output.map(a => a.name -> a.dataType.sql))
-          // Register the created table so later statements resolve it.
-          val cols = analyzed.output
-            .map(a => s"`${a.name}` ${a.dataType.sql}").mkString(", ")
-          FixtureCatalog.ensureTable(spark, db, tbl, cols)
-          dsNodes += DatasetNode(s"$db.$tbl",
-            if (tempTables.contains((db, tbl).toString)) "TEMPORARY_TABLE" else "TABLE",
-            db, tbl)
+          scope.create(db, tbl, analyzed.schema)
+          dsNodes += DatasetNode(s"$db.$tbl", dsType(db, tbl), db, tbl)
 
         case w: UnresolvedWith if collectInserts(w.child).nonEmpty =>
           // Hive multi-table INSERT sharing a CTE/FROM
           // (SqlMetaDataExtractor.java:163-169, test 0009): extract each
           // INSERT branch separately under the same CTE scope.
           collectInserts(w.child).foreach { ins =>
-            val (db, tbl) = insertTarget(spark, ins)
+            val (db, tbl) = insertTarget(scope, ins)
             inserts += TableInsert(db, tbl, insertType(ins))
             val branch = w.copy(child = ins.query)
-            val analyzed = analyzePermissive(spark, branch, metaStore)
+            val analyzed = analyzePermissive(spark, branch, scope)
             edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
             items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
           }
 
         case ins: InsertIntoStatement =>
-          val (db, tbl) = insertTarget(spark, ins)
+          val (db, tbl) = insertTarget(scope, ins)
           inserts += TableInsert(db, tbl, insertType(ins))
-          val analyzed = analyzePermissive(spark, ins.query, metaStore)
+          val analyzed = analyzePermissive(spark, ins.query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
 
         case d: DropTable =>
           // Reference removeTable (LineageDbService.java:274-287): purge
           // this job's table_insert rows for the table and remember the
-          // drop so a later same-script CREATE sees it gone.
+          // drop so later statements no longer see the table.
           val (db, tbl) = d.child match {
-            case u: UnresolvedTableOrView => qualify(spark, u.multipartIdentifier)
-            case u: UnresolvedIdentifier => qualify(spark, u.nameParts)
+            case u: UnresolvedTableOrView => scope.qualify(u.multipartIdentifier)
+            case u: UnresolvedIdentifier => scope.qualify(u.nameParts)
             case other => ("", other.nodeName)
           }
           inserts.filterInPlace(t => !(t.dbSchema == db && t.dbTable == tbl))
-          droppedTables += s"$db.$tbl"
+          scope.drop(db, tbl)
           drops += TableDrop(db, tbl)
-          spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tbl`")
 
         case ap: AddPartitions =>
           // Reference visitAlter_table_stmt (SqlMetaDataExtractor.java:
           // 848-869): only ADD PARTITION matters — record a
           // table_add_partition event carrying the partition LOCATION,
-          // falling back to the table's storage location.
+          // falling back to the LOCATION the script declared for the table.
           val (db, tbl) = ap.table match {
-            case u: UnresolvedTable => qualify(spark, u.multipartIdentifier)
+            case u: UnresolvedTable => scope.qualify(u.multipartIdentifier)
             case other => ("", other.nodeName)
           }
-          val tableLoc = storageLocs.getOrElse(s"$db.$tbl",
-            try spark.sessionState.catalog
-              .getTableMetadata(TableIdentifier(tbl, Some(db)))
-              .storage.locationUri.map(_.toString).getOrElse("")
-            catch { case _: Exception => "" })
+          val tableLoc = scope.storageLocs.getOrElse(key(db, tbl), "")
           ap.parts.foreach {
             case p: UnresolvedPartitionSpec =>
               addParts += AddPartitionEvent(db, tbl, p.location.getOrElse(tableLoc))
@@ -203,26 +287,24 @@ object LineageRunner {
           // (reference create_table_like_clause, Bingql.g4; the clone is
           // a TABLE dataset whose columns map to itself, not the source —
           // LIKE copies structure, not data lineage).
-          val (db, tbl) = (like.targetTable.database
-            .getOrElse(spark.catalog.currentDatabase), like.targetTable.table)
-          val srcDf = spark.table(like.sourceTable.quotedString)
-          val cols = srcDf.schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
-          FixtureCatalog.ensureTable(spark, db, tbl,
-            cols.map { case (n, t) => s"`$n` $t" }.mkString(", "))
-          droppedTables -= s"$db.$tbl"
+          val (db, tbl) = scope.qualify(
+            like.targetTable.database.toSeq :+ like.targetTable.table)
+          val schema = analyzePermissive(
+            spark, UnresolvedRelation(like.sourceTable.nameParts), scope).schema
+          scope.create(db, tbl, schema)
           dsNodes += DatasetNode(s"$db.$tbl", "TABLE", db, tbl)
-          items ++= tableItems(db, tbl, cols)
+          items ++= tableItems(db, tbl, schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
 
         case dir: InsertIntoDir =>
           // INSERT OVERWRITE [LOCAL] DIRECTORY '<path>': lineage lands on
           // the directory as the write target (reference grammar
-          // Bingql.g4:695-697; parse-only there, executed here).
+          // Bingql.g4:695-697; parse-only there, extracted here).
           val path = dir.storage.locationUri.map(_.toString).getOrElse("")
           val tgt = s"dir:$path"
           inserts += TableInsert("", tgt,
             if (dir.isLocal) "INSERT OVERWRITE LOCAL DIRECTORY"
             else "INSERT OVERWRITE DIRECTORY")
-          val analyzed = analyzePermissive(spark, dir.child, metaStore)
+          val analyzed = analyzePermissive(spark, dir.child, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => tgt -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => tgt -> it)
 
@@ -242,13 +324,10 @@ object LineageRunner {
           // any ident(args) call, Bingql.g4:1436-1442): register the
           // pass-through shim up front so later calls resolve without
           // the analyze-retry loop.
-          spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-            fn.identifier.funcName,
-            (exprs: Seq[Expression]) => Concat(exprs.map(Cast(_, StringType))),
-            "scala_udf")
+          shimFunction(spark, fn.identifier.funcName)
 
         case query =>
-          val analyzed = analyzePermissive(spark, query, metaStore)
+          val analyzed = analyzePermissive(spark, query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => "" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => "" -> it)
           // The top-level SELECT is itself a dataset — the consumption
@@ -274,33 +353,33 @@ object LineageRunner {
   private def insertType(i: InsertIntoStatement): String =
     if (i.overwrite) "INSERT OVERWRITE TABLE" else "INSERT INTO TABLE"
 
-  private def insertTarget(spark: SparkSession, i: InsertIntoStatement): (String, String) =
+  private def insertTarget(scope: Scope, i: InsertIntoStatement): (String, String) =
     i.table match {
-      case u: UnresolvedRelation => qualify(spark, u.multipartIdentifier)
+      case u: UnresolvedRelation => scope.qualify(u.multipartIdentifier)
       case other => ("", other.nodeName)
     }
 
-  private def identOf(spark: SparkSession, name: LogicalPlan): (String, String) =
+  private def identOf(scope: Scope, name: LogicalPlan): (String, String) =
     name match {
-      case u: UnresolvedIdentifier => qualify(spark, u.nameParts)
+      case u: UnresolvedIdentifier => scope.qualify(u.nameParts)
       case other => ("", other.toString)
     }
 
-  private def qualify(spark: SparkSession, parts: Seq[String]): (String, String) =
-    if (parts.length >= 2) (parts.dropRight(1).mkString("."), parts.last)
-    else (spark.catalog.currentDatabase, parts.last)
-
-  /** Register a parsed CREATE TABLE schema-only (USING parquet), ignoring
-    * Hive-only storage clauses and external locations. */
-  private def registerParsedTable(
-      spark: SparkSession, db: String, tbl: String, ct: CreateTable): Unit = {
-    val colDefs = ct.columns.map(c => s"`${c.name}` ${c.dataType.sql}")
+  /** A parsed CREATE TABLE's columns, ignoring Hive-only storage clauses
+    * and external locations. */
+  private def parsedSchema(ct: CreateTable): StructType = {
     val partCols = ct.partitioning.flatMap(_.references.map(_.fieldNames().mkString(".")))
     val declared = ct.columns.map(_.name).toSet
     // Hive-style typed partition columns may not be in `columns`.
-    val missingParts = partCols.filterNot(declared.contains).map(p => s"`$p` string")
-    FixtureCatalog.ensureTable(spark, db, tbl, (colDefs ++ missingParts).mkString(", "))
+    StructType(ct.columns.map(c => StructField(c.name, c.dataType)) ++
+      partCols.filterNot(declared.contains).map(StructField(_, StringType)))
   }
+
+  /** Registers a pass-through for an unknown function: a string
+    * concatenation of its arguments, so every argument stays a parent. */
+  private def shimFunction(spark: SparkSession, name: String): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name, (exprs: Seq[Expression]) => Concat(exprs.map(Cast(_, StringType))), "scala_udf")
 
   /** Resolve a plan WITHOUT CheckAnalysis — the reference extracts
     * lineage from scripts it can't fully validate (90%-coverage
@@ -308,61 +387,31 @@ object LineageRunner {
     * (e.g. `SELECT col, count(*)` with no GROUP BY in 0006) resolves but
     * fails Spark's CheckAnalysis. Spark itself skips CheckAnalysis for
     * command inner children, so this matches whole-statement behavior.
+    * Tables are bound from the script's [[Scope]] first.
     *
     * Unknown functions (the reference accepts any `ident(args)`,
     * Bingql.g4:1436-1442, README.md:80) are shimmed with a pass-through
     * preserving argument references, then resolution is retried.
     */
-  def analyzePermissive(spark: SparkSession, plan: LogicalPlan,
-      metaStore: Option[MetaStore] = None): LogicalPlan = {
+  def analyzePermissive(spark: SparkSession, plan: LogicalPlan, scope: Scope): LogicalPlan = {
     // LookupFunctions throws from a RESOLUTION batch (not CheckAnalysis),
     // so unknown functions surface as exceptions even under
     // analyzer.execute — catch, shim, retry.
     val Unresolved = """.*Cannot resolve routine `([^`]+)`.*""".r
-    var attempt = 0
-    while (true) {
-      try {
-        // Re-analysis of the SAME plan object after a failed relation
-        // lookup stays unresolved (a per-node memo survives the first
-        // execute); clone() yields a fresh tree the analyzer fully
-        // re-resolves, so catalog changes between attempts take effect.
-        val analyzed = spark.sessionState.analyzer.execute(plan.clone())
-        // Missing relations do NOT throw from analyzer.execute (only
-        // CheckAnalysis reports them) — the node just stays unresolved.
-        // Resolve its schema from the pluggable metastore, register, and
-        // re-analyze (reference lookup-then-cache flow,
-        // SqlMetaDataExtractor.java:898-929).
-        val missing = analyzed.collectFirst { case u: UnresolvedRelation => u }
-        missing match {
-          case Some(u) if metaStore.isDefined && attempt < 8 =>
-            val parts = u.multipartIdentifier
-            val (db, tbl) =
-              if (parts.length >= 2) (parts.dropRight(1).mkString("."), parts.last)
-              else (spark.catalog.currentDatabase, parts.last)
-            metaStore.get.lookup(db, tbl) match {
-              case Some(cols) =>
-                FixtureCatalog.ensureTable(spark, db, tbl,
-                  cols.map { case (n, t) => s"`$n` $t" }.mkString(", "))
-                attempt += 1
-              case None => return analyzed // permissive: leave unresolved
-            }
-          case _ => return analyzed
-        }
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if attempt < 8 && e.getMessage != null &&
-            e.getMessage.contains("UNRESOLVED_ROUTINE") =>
-          val fname = e.getMessage.replaceAll("\n", " ") match {
-            case Unresolved(n) => n
+    val bound = scope.bind(plan)
+    def attempt(n: Int): LogicalPlan =
+      // A failed run leaves per-node rule memos on the tree it analyzed;
+      // clone() gives each attempt a fresh tree.
+      try spark.sessionState.analyzer.execute(bound.clone())
+      catch {
+        case e: AnalysisException
+          if n < 8 && e.getMessage != null && e.getMessage.contains("UNRESOLVED_ROUTINE") =>
+          e.getMessage.replaceAll("\n", " ") match {
+            case Unresolved(fname) => shimFunction(spark, fname)
             case _ => throw e
           }
-          spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-            fname,
-            (exprs: Seq[Expression]) => Concat(exprs.map(Cast(_, StringType))),
-            "scala_udf")
-          attempt += 1
+          attempt(n + 1)
       }
-    }
-    throw new IllegalStateException("unreachable")
+    attempt(0)
   }
 }

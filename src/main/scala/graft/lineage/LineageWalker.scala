@@ -1,6 +1,5 @@
 package graft.lineage
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -23,10 +22,6 @@ object LineageWalker {
   type Origin = (String, String, String)
 
   val Asterisk = "$COL_ASTERISK$" // reference DatasetPool.java:171-195
-
-  def analyze(spark: SparkSession, sql: String): LogicalPlan =
-    spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(sql)).analyzed
 
   /** Base (schema, table) relations read anywhere in the plan. */
   def baseTables(plan: LogicalPlan): Seq[(String, String)] =
@@ -160,15 +155,6 @@ object LineageWalker {
   private def mergeChildren(ms: Seq[Map[ExprId, Set[Origin]]]): Map[ExprId, Set[Origin]] =
     if (ms.isEmpty) Map.empty else ms.reduce(_ ++ _)
 
-  /** Flattened column-level lineage edges of one statement, with the
-    * reference's context semantics: SELECT edges per output column;
-    * WHERE (Filter.condition) and JOIN (Join.condition) parents fanned
-    * out to every output column (Dataset.java:214-222). */
-  def columnEdges(spark: SparkSession, sql: String): Seq[ColumnEdge] = {
-    val plan = analyze(spark, sql)
-    edgesOf(plan)
-  }
-
   def edgesOf(plan: LogicalPlan): Seq[ColumnEdge] = {
     val query = unwrapCommand(plan)
     val env = origins(query)
@@ -288,32 +274,6 @@ object LineageWalker {
     selectRows ++ whereRows ++ joinRows
   }
 
-  /** Dataset nodes of one statement (reference DatasetType semantics,
-    * SURVEY §1.1): TABLE per base relation, CTE per cteDef,
-    * LATERAL_VIEW per Generate, SUBQUERY per SELECT block. */
-  def datasets(spark: SparkSession, sql: String): Seq[DatasetNode] = {
-    val plan = unwrapCommand(analyze(spark, sql))
-    val tables = baseTables(plan).map { case (d, t) =>
-      DatasetNode(s"$d.$t", "TABLE", d, t)
-    }
-    val ctes = plan.collect { case w: WithCTE =>
-      w.cteDefs.map { d =>
-        val name = d.child.collectFirst {
-          case sa: SubqueryAlias => sa.alias
-        }.getOrElse(s"cte_${d.id}")
-        DatasetNode(name, "CTE", "", "")
-      }
-    }.flatten
-    val lateral = plan.collect { case g: Generate =>
-      DatasetNode(g.qualifier.getOrElse("lateral"), "LATERAL_VIEW", "", "")
-    }
-    val subqueries = plan.collect {
-      case p: Project => p
-      case a: Aggregate => a
-    }.zipWithIndex.map { case (_, i) => DatasetNode(s"subquery_$i", "SUBQUERY", "", "") }
-    tables ++ ctes ++ lateral ++ subqueries
-  }
-
   /** Multi-level dataset graph: one node per SELECT-block scope (the
     * reference's dataset/dataset_rel structure — each SubqueryAlias'd
     * block or CTE becomes a Dataset row, with parent→child edges to the
@@ -388,33 +348,6 @@ object LineageWalker {
     nodes += DatasetNode(rootName, "SUBQUERY", "", "", isAggregated = hasAgg(query))
     walk(query, rootName).foreach(par => edges += rootName -> par)
     (nodes.result().distinct, edges.result().distinct)
-  }
-
-  /** INSERT/CTAS targets (reference table_insert,
-    * processInsertBySelect SqlMetaDataExtractor.java:1050-1075). */
-  def tableInserts(spark: SparkSession, sql: String): Seq[TableInsert] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
-    plan.collect {
-      case i: InsertIntoStatement =>
-        val (db, tbl) = tableOf(i.table)
-        val typ = if (i.overwrite) "INSERT OVERWRITE TABLE" else "INSERT INTO TABLE"
-        TableInsert(db, tbl, typ)
-      case c: CreateTableAsSelect =>
-        val parts = c.name match {
-          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier =>
-            u.nameParts
-          case other => Seq(other.toString)
-        }
-        TableInsert(parts.dropRight(1).mkString("."), parts.last, "CREATE TABLE AS")
-    }
-  }
-
-  private def tableOf(p: LogicalPlan): (String, String) = p match {
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-      val parts = u.multipartIdentifier
-      (parts.dropRight(1).mkString("."), parts.last)
-    case lr: LogicalRelation => relationName(lr)
-    case other => ("", other.nodeName)
   }
 
   /** Strip a top-level command wrapper (INSERT/CTAS) down to its query.

@@ -8,7 +8,7 @@ import scala.collection.mutable
 /** Pluggable schema source for lineage analysis — the Spark re-design of
   * the reference's metastore services: schemas are fetched on demand the
   * first time a statement touches an unknown table, then cached in the
-  * session catalog (lookup-then-insert flow,
+  * script's [[LineageRunner.Scope]] (lookup-then-insert flow,
   * SqlMetaDataExtractor.findTableInCacheOrPhysicalSrc,
   * SqlMetaDataExtractor.java:898-929).
   */

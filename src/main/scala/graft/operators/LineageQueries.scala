@@ -221,11 +221,9 @@ object LineageQueries {
     * 3 SUBQUERY datasets and the 3-hop dataset_rel chain). */
   private val q96 = Q("q96_lineage_dataset_graph", OracleValues.q96) { (s, _) =>
     import s.implicits._
-    graft.lineage.FixtureCatalog.register(s)
-    s.sql("USE default")
     val stmt = graft.lineage.SqlPreprocessor.preprocess(scripts("0002")).head
-    val plan = graft.lineage.LineageRunner.analyzePermissive(
-      s, s.sessionState.sqlParser.parsePlan(stmt))
+    val plan = LineageRunner.analyzePermissive(
+      s, s.sessionState.sqlParser.parsePlan(stmt), new LineageRunner.Scope(s))
     val (nodes, edges) = graft.lineage.LineageWalker.datasetGraph(plan)
     val n = nodes.map(d => ("node", d.name, d.dsType))
       .toDF("kind", "name", "detail")
@@ -271,11 +269,11 @@ object LineageQueries {
   }
 
   /** Pluggable schema sources (reference metastore services): a table
-    * unknown to the session catalog is resolved on demand — from parquet
-    * footers (ExternalHiveMetaStore's JDBC metastore scan re-expressed
-    * file-first) or from previously-persisted select_item rows of TABLE
-    * datasets (LocalHiveMetaStore) — then cached in the catalog
-    * (lookup-then-cache, SqlMetaDataExtractor.java:898-929). */
+    * no script created and no catalog holds is resolved on demand — from
+    * parquet footers (ExternalHiveMetaStore's JDBC metastore scan
+    * re-expressed file-first) or from previously-persisted select_item
+    * rows of TABLE datasets (LocalHiveMetaStore) — then cached in the
+    * script's scope (lookup-then-cache, SqlMetaDataExtractor.java:898-929). */
   private val q105 = Q("q105_metastore_schemas", OracleValues.q105) { (s, dir) =>
     import s.implicits._
     // Persist case 0006's lineage: the CTAS registers adhoc.test_tab101
@@ -283,10 +281,9 @@ object LineageQueries {
     val store = "/tmp/graft_metastore_q105"
     val res6 = LineageRunner.run(s, scripts("0006"))
     LineageStore.write(s, "0006.sql", res6, s"$store/0006")
-    // Drop both targets so their schemas exist ONLY in the stores.
-    s.sql("DROP TABLE IF EXISTS adhoc.test_tab101")
-    s.sql("CREATE DATABASE IF NOT EXISTS main LOCATION 'file:///tmp/graft_wh/main.db'")
-    s.sql("DROP TABLE IF EXISTS main.documents")
+    // A later script drops the created table, so its schema exists ONLY
+    // in the store; main.documents is known only to the parquet footers.
+    LineageRunner.run(s, "DROP TABLE adhoc.test_tab101;")
     val ms = MetaStore.chain(
       new ExternalParquetMetaStore(s, dir),
       new LocalLineageMetaStore(s, s"$store/0006/select_item"))
@@ -372,12 +369,11 @@ object LineageQueries {
   private val q108 = Q("q108_dataset_aggregated", OracleValues.q108) { (s, _) =>
     import s.implicits._
     Seq("0002", "0006", "0008").flatMap { c =>
-      graft.lineage.FixtureCatalog.register(s)
-      s.sql("USE default")
-      val stmts = graft.lineage.SqlPreprocessor.preprocess(scripts(c))
-      stmts.init.foreach(s.sql(_)) // any leading USE statements
+      // The last statement of each names every table it reads with its
+      // database, so a leading USE does not change its graph.
+      val stmt = graft.lineage.SqlPreprocessor.preprocess(scripts(c)).last
       val plan = LineageRunner.analyzePermissive(
-        s, s.sessionState.sqlParser.parsePlan(stmts.last))
+        s, s.sessionState.sqlParser.parsePlan(stmt), new LineageRunner.Scope(s))
       val (nodes, _) = graft.lineage.LineageWalker.datasetGraph(plan)
       nodes.map(d => (c, d.name, d.dsType, d.isAggregated))
     }.toDF("case_id", "name", "ds_type", "is_aggregated")

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Rank lock waits and forked processes in a JFR recording.
+"""Rank lock waits, forked processes or CPU samples in a JFR recording.
 
     JAVA_TOOL_OPTIONS=-XX:StartFlightRecording=filename=/tmp/x.jfr,settings=profile <command>
     jfr print --json --events jdk.JavaMonitorEnter,jdk.ProcessStart /tmp/x.jfr > x.json
@@ -8,8 +8,19 @@
 Prints, largest first: seconds threads spent blocked entering a monitor
 (jdk.JavaMonitorEnter), by monitor class and top frame; and processes
 started (jdk.ProcessStart), by command, each path argument folded to its
-file extension (`chmod 0644 <*.crc>`). Standard library only.
+file extension (`chmod 0644 <*.crc>`).
+
+    jfr print --json --stack-depth 400 --events jdk.ExecutionSample /tmp/x.jfr > cpu.json
+    python3 tools/jfr_top.py --cpu [--under <frame substring>]... cpu.json [top]
+
+With --cpu, ranks CPU samples (jdk.ExecutionSample) by the nearest
+`graft.` frame on their stack. Each --under keeps only the samples with a
+frame (`package.Class.method`) containing that substring; given more than
+once, a sample must match all. The default print depth of 5 frames hides
+most graft frames under Spark's, hence --stack-depth; record deep stacks
+too (-XX:FlightRecorderOptions=stackdepth=1024). Standard library only.
 """
+import argparse
 import collections
 import json
 import re
@@ -36,11 +47,39 @@ def fold(arg):
     return f"<*.{name.rsplit('.', 1)[-1]}>" if "." in name else "<path>"
 
 
+def frame_names(values):
+    fs = (values.get("stackTrace") or {}).get("frames") or []
+    return [f"{f['method']['type']['name'].replace('/', '.')}.{f['method']['name']}" for f in fs]
+
+
+def cpu(events, under, top):
+    samples, total = collections.Counter(), 0
+    for ev in events:
+        if ev["type"] != "jdk.ExecutionSample":
+            continue
+        names = frame_names(ev["values"])
+        if all(any(u in n for n in names) for u in under):
+            total += 1
+            samples[next((n for n in names if n.startswith("graft.")), "(no graft frame)")] += 1
+    label = " under " + " and ".join(under) if under else ""
+    print(f"# jdk.ExecutionSample: {total} samples{label}; samples, share, nearest graft frame")
+    for name, n in samples.most_common(top):
+        print(f"{n:10d} {100.0 * n / total:6.1f}%  {name}")
+
+
 def main():
-    src = open(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1] != "-" else sys.stdin
-    top = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--cpu", action="store_true")
+    ap.add_argument("--under", action="append", default=[])
+    ap.add_argument("json", nargs="?", default="-")
+    ap.add_argument("top", nargs="?", type=int, default=10)
+    args = ap.parse_args()
+    src = open(args.json) if args.json != "-" else sys.stdin
+    events, top = json.load(src)["recording"]["events"], args.top
+    if args.cpu:
+        return cpu(events, args.under, top)
     blocked, waits, forks = collections.Counter(), collections.Counter(), collections.Counter()
-    for ev in json.load(src)["recording"]["events"]:
+    for ev in events:
         v = ev["values"]
         if ev["type"] == "jdk.JavaMonitorEnter":
             key = (v["monitorClass"]["name"].replace("/", "."), top_frame(v))
