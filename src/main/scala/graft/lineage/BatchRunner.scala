@@ -35,10 +35,10 @@ object BatchRunner {
     * `spark.newSession()` — isolated session state (temp-function
     * shims, temp views) over the shared SparkContext, the Spark
     * analogue of the reference's per-thread metastore/db-service
-    * connections. Per-file
-    * store outputs land in disjoint `storeDir/<name>` dirs and the
-    * store's ids are content-hashes, so the store is byte-identical to
-    * a sequential run (pinned by LineageSpec).
+    * connections. Per-file store outputs land in disjoint
+    * `storeDir/<name>` dirs and the store's ids are content-hashes, so
+    * the store is byte-identical to a sequential run (pinned by
+    * LineageSpec).
     *
     * Within a worker, EXTRACTION runs sequentially while STORE WRITES
     * are submitted async, overlapping the next file's extraction. A

@@ -200,17 +200,13 @@ object LineageRunner {
             None
         }
       parsedOpt.foreach { parsed =>
-      if (isTemp) parsed match {
-        case ct: CreateTable => scope.temp += (key _).tupled(identOf(scope, ct.name))
-        case ctas: CreateTableAsSelect => scope.temp += (key _).tupled(identOf(scope, ctas.name))
-        case _ => ()
-      }
       parsed match {
         case SetCatalogAndNamespace(ns: UnresolvedNamespace) =>
           scope.db = ns.multipartIdentifier.last.toLowerCase(Locale.ROOT)
 
         case ct: CreateTable =>
           val (db, tbl) = identOf(scope, ct.name)
+          if (isTemp) scope.temp += key(db, tbl)
           scope.create(db, tbl, parsedSchema(ct))
           val loc = ct.tableSpec match {
             case u: UnresolvedTableSpec => u.location.getOrElse("")
@@ -223,6 +219,7 @@ object LineageRunner {
 
         case ctas: CreateTableAsSelect =>
           val (db, tbl) = identOf(scope, ctas.name)
+          if (isTemp) scope.temp += key(db, tbl)
           inserts += TableInsert(db, tbl, "CREATE TABLE AS")
           val analyzed = analyzePermissive(spark, ctas.query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
