@@ -5,6 +5,7 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
@@ -47,7 +48,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Data files are parquet, the connector's only data-file format
   * ([[ManifestParquet]]); a `format` option asking for anything else
   * fails loudly. Row identity is the hash of each row's canonical CSV
-  * rendering ([[ManifestSink.csvField]] per string field): a hash input,
+  * rendering ([[ManifestSink.appendField]] per field): a hash input,
   * not a file format — `_mf_linehash`, delete vectors and the file
   * checksum (an order-independent sum of line hashes, so file-internal
   * row order never matters) are all defined over it.
@@ -81,6 +82,49 @@ private[graft] object ManifestSink {
       "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
         .replace("\n", "\\n").replace("\r", "\\r") + "\""
     else v
+
+  // Value kinds of the types ManifestParquet stores, as int tags so the
+  // per-row loops on both sides (the sink's write pass, the reader's
+  // filters and line hash) dispatch without DataType pattern matches.
+  final val KLong = 0
+  final val KInt = 1
+  final val KStr = 2
+  final val KTs = 3 // session-UTC epoch MICROSECONDS, long-backed
+  final val KDec = 4
+  final val KBool = 5
+  final val KDbl = 6
+
+  def kindOf(dt: DataType): Int = dt match {
+    case LongType => KLong
+    case IntegerType => KInt
+    case StringType => KStr
+    case TimestampType => KTs
+    case _: DecimalType => KDec
+    case BooleanType => KBool
+    case DoubleType => KDbl
+    case _ => throw new UnsupportedOperationException(
+      s"ManifestSink: unsupported column type $dt")
+  }
+
+  /** Appends NON-NULL field `i` of `row` (of kind `kind`; precision and
+    * scale matter for decimals only) in the canonical row rendering —
+    * the ONE definition of a row's identity: the sink's file checksum
+    * and the reader's `_mf_linehash` both build lines with it (fields
+    * comma-joined in file column order, a NULL field empty). Longs,
+    * ints and timestamps (epoch micros) as integer digits, doubles as
+    * `Double.toString`, booleans as true/false, decimals scale-stable
+    * and plain ("12.30", never scientific notation), strings through
+    * [[csvField]]. */
+  def appendField(sb: java.lang.StringBuilder, row: SpecializedGetters,
+      i: Int, kind: Int, prec: Int, scale: Int): Unit = kind match {
+    case KLong | KTs => sb.append(row.getLong(i))
+    case KInt => sb.append(row.getInt(i))
+    case KStr => sb.append(csvField(row.getUTF8String(i).toString))
+    case KDec =>
+      sb.append(row.getDecimal(i, prec, scale).toJavaBigDecimal.toPlainString)
+    case KBool => sb.append(row.getBoolean(i))
+    case KDbl => sb.append(row.getDouble(i))
+  }
 
   /** The lock at `lock` must still carry exactly `myBody` — a
     * different (or unreadable) body means a racing committer clobbered
@@ -631,19 +675,11 @@ private class ManifestFileWriter(
     }
   }
 
-  // per-column dispatch precompiled to int tags so the per-row loop
-  // does no DataType pattern matching and allocates no field array /
-  // closure: 0=long, 1=int, 2=string, 3=timestamp(micros long),
-  // 4=decimal, 5=boolean, 6=double (the types ManifestParquet writes)
-  private val colKind: Array[Int] = schema.fields.map(_.dataType match {
-    case LongType => 0
-    case IntegerType => 1
-    case StringType => 2
-    case TimestampType => 3
-    case _: DecimalType => 4
-    case BooleanType => 5
-    case DoubleType => 6
-  })
+  // per-column dispatch precompiled to int tags (ManifestSink.kindOf)
+  // so the per-row loop does no DataType pattern matching and allocates
+  // no field array / closure
+  private val colKind: Array[Int] =
+    schema.fields.map(f => ManifestSink.kindOf(f.dataType))
   private val colPrec: Array[Int] = schema.fields.map(_.dataType match {
     case d: DecimalType => d.precision; case _ => 0 })
   private val colScale: Array[Int] = schema.fields.map(_.dataType match {
@@ -668,13 +704,14 @@ private class ManifestFileWriter(
           val fn = schema.fields(i).name
           rc.startField(fn, i)
           colKind(i) match {
-            case 0 | 3 => rc.addLong(r.getLong(i))
-            case 1 => rc.addInteger(r.getInt(i))
-            case 2 => rc.addBinary(
+            case ManifestSink.KLong | ManifestSink.KTs =>
+              rc.addLong(r.getLong(i))
+            case ManifestSink.KInt => rc.addInteger(r.getInt(i))
+            case ManifestSink.KStr => rc.addBinary(
               org.apache.parquet.io.api.Binary.fromString(strVals(i)))
-            case 4 => rc.addLong(decVals(i))
-            case 5 => rc.addBoolean(r.getBoolean(i))
-            case 6 => rc.addDouble(r.getDouble(i))
+            case ManifestSink.KDec => rc.addLong(decVals(i))
+            case ManifestSink.KBool => rc.addBoolean(r.getBoolean(i))
+            case ManifestSink.KDbl => rc.addDouble(r.getDouble(i))
           }
           rc.endField(fn, i)
         }
@@ -683,72 +720,67 @@ private class ManifestFileWriter(
     }
 
   def write(r: InternalRow): Unit = {
-    // ONE fused pass per row: render the canonical CSV line (the
-    // checksum/stats/delete-vector identity — see ManifestSink) into a
-    // reused StringBuilder; the row then streams straight into the
-    // record consumer (renderRow above) — no per-row Group.
+    import ManifestSink._
+    // ONE fused pass per row: zone-map / Bloom stats, and the canonical
+    // line (the checksum/delete-vector identity, rendered by
+    // ManifestSink.appendField) into a reused StringBuilder; the row then
+    // streams straight into the record consumer (renderRow above) — no
+    // per-row Group.
     val sb = lineSb
     sb.setLength(0)
     var i = 0
     while (i < nFields) {
       if (i > 0) sb.append(',')
       if (r.isNullAt(i)) nNulls(i) += 1 // canonical rendering: empty
-      else colKind(i) match {
-        case 0 | 3 =>
-          // LONG, and session-UTC MICROSECONDS timestamps: the
-          // InternalRow long itself is the canonical rendering
-          // (integer-exact) and the zone-map bound
-          // (total order, no NaN/zone hazards); INT64 in parquet
-          val v = r.getLong(i)
-          if (v < minL(i)) minL(i) = v
-          if (v > maxL(i)) maxL(i) = v
-          sawNum(i) = true
-          sb.append(v)
-        case 1 =>
-          val v = r.getInt(i)
-          if (v < minL(i)) minL(i) = v.toLong
-          if (v > maxL(i)) maxL(i) = v.toLong
-          sawNum(i) = true
-          sb.append(v)
-        case 2 =>
-          val v = r.getUTF8String(i).toString
-          ManifestBloom.add(blooms(i), v)
-          trackStrBounds(i, v)
-          sawStr(i) = true
-          sb.append(ManifestSink.csvField(v))
-          strVals(i) = v
-        case 4 =>
-          // scale-stable plain rendering ("12.30" at scale 2 — never
-          // scientific notation, identical to the reader's rawString);
-          // unscaled long, INT64(decimal) in parquet. Zone maps track
-          // the UNSCALED long (order-preserving at the column's fixed
-          // scale — getDecimal normalizes to it) at zero extra cost.
-          val d = r.getDecimal(i, colPrec(i), colScale(i))
-          val u = d.toUnscaledLong
-          if (u < minL(i)) minL(i) = u
-          if (u > maxL(i)) maxL(i) = u
-          sawNum(i) = true
-          sb.append(d.toJavaBigDecimal.toPlainString)
-          decVals(i) = u
-        case 5 =>
-          sb.append(r.getBoolean(i)) // "true" / "false"
-        case 6 =>
-          val v = r.getDouble(i)
-          if (v.isNaN) sawNaN(i) = true
-          else {
-            // Spark's nanSafeCompareDoubles treats -0.0 == 0.0; the
-            // pruner compares with the same semantics, so bounds must
-            // be recorded under it too — otherwise a file holding both
-            // ±0.0 could record min=0.0 and a pushed `d < 0.0` probe
-            // would prune a row the scan should emit. Normalizing the
-            // *bound* (not the stored value) keeps primitive </> and
-            // Double.compare in agreement for every non-NaN double.
-            val b = if (v == 0.0d) 0.0d else v
-            if (b < minD(i)) minD(i) = b
-            if (b > maxD(i)) maxD(i) = b
+      else {
+        colKind(i) match {
+          case KLong | KTs =>
+            // LONG, and session-UTC MICROSECONDS timestamps: the
+            // InternalRow long itself is the zone-map bound (total
+            // order, no NaN/zone hazards); INT64 in parquet
+            val v = r.getLong(i)
+            if (v < minL(i)) minL(i) = v
+            if (v > maxL(i)) maxL(i) = v
             sawNum(i) = true
-          }
-          sb.append(v)
+          case KInt =>
+            val v = r.getInt(i)
+            if (v < minL(i)) minL(i) = v.toLong
+            if (v > maxL(i)) maxL(i) = v.toLong
+            sawNum(i) = true
+          case KStr =>
+            val v = r.getUTF8String(i).toString
+            ManifestBloom.add(blooms(i), v)
+            trackStrBounds(i, v)
+            sawStr(i) = true
+            strVals(i) = v
+          case KDec =>
+            // unscaled long, INT64(decimal) in parquet. Zone maps track
+            // the UNSCALED long (order-preserving at the column's fixed
+            // scale — getDecimal normalizes to it) at zero extra cost.
+            val u = r.getDecimal(i, colPrec(i), colScale(i)).toUnscaledLong
+            if (u < minL(i)) minL(i) = u
+            if (u > maxL(i)) maxL(i) = u
+            sawNum(i) = true
+            decVals(i) = u
+          case KBool =>
+          case KDbl =>
+            val v = r.getDouble(i)
+            if (v.isNaN) sawNaN(i) = true
+            else {
+              // Spark's nanSafeCompareDoubles treats -0.0 == 0.0; the
+              // pruner compares with the same semantics, so bounds must
+              // be recorded under it too — otherwise a file holding both
+              // ±0.0 could record min=0.0 and a pushed `d < 0.0` probe
+              // would prune a row the scan should emit. Normalizing the
+              // *bound* (not the stored value) keeps primitive </> and
+              // Double.compare in agreement for every non-NaN double.
+              val b = if (v == 0.0d) 0.0d else v
+              if (b < minD(i)) minD(i) = b
+              if (b > maxD(i)) maxD(i) = b
+              sawNum(i) = true
+            }
+        }
+        appendField(sb, r, i, colKind(i), colPrec(i), colScale(i))
       }
       i += 1
     }

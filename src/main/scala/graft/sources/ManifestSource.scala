@@ -200,10 +200,11 @@ private object ManifestFilters {
     * IsNull can match then. Entries without stats (pre-round-12
     * manifests) never prune. */
   /** Double comparison under Spark's semantics (nanSafeCompareDoubles):
-    * -0.0 == 0.0. The sink records bounds under the same rule, so the
-    * three sites — stat recording, pruning, row eval — can never
-    * disagree on ±0.0 data (NaN never reaches here: it poisons bounds
-    * at the sink and fails every pushed comparison at eval). */
+    * -0.0 == 0.0, and NaN equals itself and sorts above every other
+    * value. The sink records bounds under the same rule, so the three
+    * sites — stat recording, pruning, row eval — can never disagree on
+    * ±0.0 data (NaN poisons a file's bounds at the sink, so pruning
+    * never compares against it). */
   def dblCompare(x: Double, y: Double): Int =
     java.lang.Double.compare(if (x == 0.0d) 0.0d else x,
       if (y == 0.0d) 0.0d else y)
@@ -324,60 +325,96 @@ private object ManifestFilters {
     }
   }
 
-  /** Evaluate one filter against the rows' raw renderings (null =
-    * NULL). Comparisons convert through the declared column type; a
-    * NULL operand fails every comparison (SQL 3VL: unknown rows are
-    * filtered). */
-  def eval(schema: StructType, fields: Array[String], f: Filter): Boolean = {
-    import org.apache.spark.sql.sources._
-    def raw(a: String): String = fields(schema.fieldIndex(a))
-    def cmp(a: String, v: Any): Option[Int] = {
-      val r = raw(a)
-      if (r == null || v == null) None
-      else schema(schema.fieldIndex(a)).dataType match {
-        case LongType => Some(java.lang.Long.compare(r.toLong, v.asInstanceOf[Number].longValue()))
-        case IntegerType => Some(java.lang.Integer.compare(r.toInt, v.asInstanceOf[Number].intValue()))
-        case DoubleType => Some(ManifestFilters.dblCompare(r.toDouble, v.asInstanceOf[Number].doubleValue()))
-        // Spark's string order = unsigned UTF-8 bytes (UTF8String), NOT
-        // Java's UTF-16 compareTo — they disagree on supplementary chars
-        case StringType => Some(ManifestStrBounds.cmpB(
-          ManifestStrBounds.utf8(r), ManifestStrBounds.utf8(v.toString)))
-        case TimestampType => // raw field = canonical epoch micros
-          ManifestFilters.tsMicros(v)
-            .map(java.lang.Long.compare(r.toLong, _))
-        case _: DecimalType => // value compare: 12.3 == 12.30
-          ManifestFilters.toBigDec(v)
-            .map(new java.math.BigDecimal(r).compareTo(_))
-        case BooleanType => v match {
-          case b: java.lang.Boolean =>
-            Some(java.lang.Boolean.compare(r.toBoolean, b))
-          case _ => None
+  /** One pushed filter bound to a file's decoded columns: `col` is the
+    * ordinal of its column among them (-1: the file never stored the
+    * column, so every value is NULL), and `lit` its literal converted
+    * ONCE to the form a decoded value compares against — null when the
+    * filter has none, the literal is NULL, or the column is absent. */
+  final class Bound(val f: Filter, val col: Int, dt: DataType) {
+    val kind: Int = if (col < 0) -1 else ManifestSink.kindOf(dt)
+    val (prec, scale) = dt match {
+      case d: DecimalType => (d.precision, d.scale)
+      case _ => (0, 0)
+    }
+    val lit: Any = (f match {
+      case EqualTo(_, v) => v
+      case GreaterThan(_, v) => v
+      case GreaterThanOrEqual(_, v) => v
+      case LessThan(_, v) => v
+      case LessThanOrEqual(_, v) => v
+      case StringStartsWith(_, p) => p
+      case _ => null
+    }) match {
+      case null => null
+      case _ if col < 0 => null
+      case v => kind match {
+        case ManifestSink.KLong => v.asInstanceOf[Number].longValue()
+        case ManifestSink.KInt => v.asInstanceOf[Number].intValue()
+        case ManifestSink.KDbl => v.asInstanceOf[Number].doubleValue()
+        case ManifestSink.KStr => UTF8String.fromString(v.toString)
+        case ManifestSink.KTs => tsMicros(v).map(Long.box).orNull
+        case ManifestSink.KDec => toBigDec(v).orNull
+        case ManifestSink.KBool => v match {
+          case b: java.lang.Boolean => b
+          case _ => null
         }
-        case dt => throw new UnsupportedOperationException(s"filter on $dt")
       }
     }
-    f match {
-      case EqualTo(a, v) => cmp(a, v).contains(0)
-      case GreaterThan(a, v) => cmp(a, v).exists(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(a, v).exists(_ >= 0)
-      case LessThan(a, v) => cmp(a, v).exists(_ < 0)
-      case LessThanOrEqual(a, v) => cmp(a, v).exists(_ <= 0)
-      case StringStartsWith(a, p) =>
-        // UTF-8 BYTE prefix (Spark's UTF8_BINARY semantics), not Java's
-        // UTF-16 String.startsWith — they diverge on prefix literals
-        // containing unpaired surrogates (encoded as '?' bytes), and the
-        // pruning bounds on this path already compare UTF-8 bytes
-        raw(a) != null && p != null && {
-          val rb = ManifestStrBounds.utf8(raw(a))
-          val pb = ManifestStrBounds.utf8(p)
-          rb.length >= pb.length &&
-            java.util.Arrays.equals(rb, 0, pb.length, pb, 0, pb.length)
+  }
+
+  /** Evaluate one bound filter on a decoded row. Values compare as the
+    * types they are: longs, ints and timestamp micros as integers,
+    * doubles by [[dblCompare]], decimals by value (12.3 == 12.30),
+    * strings and StartsWith on the stored UTF-8 bytes (Spark's
+    * UTF8String order; Java's UTF-16 compareTo disagrees on
+    * supplementary characters). A NULL operand fails every comparison
+    * (SQL 3VL: unknown rows are filtered). */
+  def eval(b: Bound, row: InternalRow): Boolean = {
+    val c = b.col
+    val isNull = c < 0 || row.isNullAt(c)
+    b.f match {
+      case _: IsNull => isNull
+      case _: IsNotNull => !isNull
+      case _ if isNull || b.lit == null => false
+      case _: StringStartsWith =>
+        row.getUTF8String(c).startsWith(b.lit.asInstanceOf[UTF8String])
+      case f =>
+        val x = b.kind match {
+          case ManifestSink.KLong | ManifestSink.KTs =>
+            java.lang.Long.compare(row.getLong(c), b.lit.asInstanceOf[Long])
+          case ManifestSink.KInt =>
+            java.lang.Integer.compare(row.getInt(c), b.lit.asInstanceOf[Int])
+          case ManifestSink.KDbl =>
+            dblCompare(row.getDouble(c), b.lit.asInstanceOf[Double])
+          case ManifestSink.KStr =>
+            row.getUTF8String(c).binaryCompare(b.lit.asInstanceOf[UTF8String])
+          case ManifestSink.KDec =>
+            row.getDecimal(c, b.prec, b.scale).toJavaBigDecimal
+              .compareTo(b.lit.asInstanceOf[java.math.BigDecimal])
+          case ManifestSink.KBool => java.lang.Boolean.compare(
+            row.getBoolean(c), b.lit.asInstanceOf[Boolean])
         }
-      case IsNull(a) => raw(a) == null
-      case IsNotNull(a) => raw(a) != null
-      case other => throw new IllegalStateException(s"unpushable filter $other")
+        f match {
+          case _: EqualTo => x == 0
+          case _: GreaterThan => x > 0
+          case _: GreaterThanOrEqual => x >= 0
+          case _: LessThan => x < 0
+          case _: LessThanOrEqual => x <= 0
+          case other => throw new IllegalStateException(s"unpushable filter $other")
+        }
     }
   }
+}
+
+private[graft] object ManifestScan {
+  /** Snapshot rows at and above which a scan hands Spark column vectors
+    * instead of rows. ColumnarToRow and the per-scan vector setup are
+    * fixed costs that only amortize over enough rows: tiny fixture and
+    * metadata scans stay row-based (columnar-always regressed
+    * many-small-file corpora ~9% at bench scale), while clean
+    * 20-40M-row scans run 1.55-1.62x faster columnar
+    * (OPTIMIZATION_r17.md). */
+  val ColumnarMinRows = 262144L
 }
 
 private[sources] class ManifestScan(
@@ -722,18 +759,11 @@ private[sources] class ManifestScan(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // scale gate: vector allocation + ColumnarToRow conversion are
-    // per-scan fixed costs that only amortize over enough rows — tiny
-    // fixture/metadata scans stay row-based (measured: many-small-file
-    // corpora regressed ~9% columnar-always at bench scale). Snapshot
-    // row counts come free from the already-parsed manifest; the bound
-    // is a session conf so production can retune it without a rebuild.
-    // Decided per SCAN: Spark requires a scan's partitions to be
-    // uniformly columnar or row-based.
-    val minRows = spark.conf
-      .get("spark.graft.manifest.columnar.minRows", "262144").toLong
+    // scale gate (ManifestScan.ColumnarMinRows), decided per SCAN: Spark
+    // requires a scan's partitions to be uniformly columnar or
+    // row-based. Snapshot row counts come free from the parsed manifest.
     val columnar = snapshot._1.nonEmpty &&
-      snapshot._1.iterator.map(_.rows).sum >= minRows
+      snapshot._1.iterator.map(_.rows).sum >= ManifestScan.ColumnarMinRows
     new ManifestReaderFactory(fullSchema, required,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       filters, metaCols, columnar)
@@ -1514,6 +1544,7 @@ private class ManifestReaderFactory(
     metaCols: Seq[String] = Nil,
     columnar: Boolean = false)
   extends PartitionReaderFactory {
+  import ManifestSink.{KBool, KDbl, KDec, KInt, KLong, KStr, KTs}
 
   /** Columnar hand-off, decided once per scan (Spark requires partitions
     * of one scan to be uniformly columnar or uniformly row-based), so
@@ -1522,62 +1553,25 @@ private class ManifestReaderFactory(
 
   override def createColumnarReader(
       p: InputPartition): PartitionReader[ColumnarBatch] = p match {
-    case g: ManifestGroupPartition =>
-      // same file-chaining contract as the row path: per-file tamper
-      // guards and delete-vector application are preserved
-      new PartitionReader[ColumnarBatch] {
-        private val it = g.files.iterator
-        private var cur: PartitionReader[ColumnarBatch] = _
-        override def next(): Boolean = {
-          while (true) {
-            if (cur == null) {
-              if (!it.hasNext) return false
-              val (name, rows, cols) = it.next()
-              cur = createColumnarReader(ManifestFilePartition(
-                s"${g.tableDir}/$name", rows, dvFiles = g.dvFiles,
-                cols = cols))
-            }
-            if (cur.next()) return true
-            cur.close(); cur = null
-          }
-          false
-        }
-        override def get(): ColumnarBatch = cur.get()
-        override def close(): Unit = if (cur != null) cur.close()
-      }
-    case k: ManifestKeyedPartition =>
-      createColumnarReader(ManifestGroupPartition(k.tableDir, k.files, k.dvFiles))
-    case part: ManifestFilePartition =>
-      createParquetColumnarReader(part)
+    case part: ManifestFilePartition => createParquetColumnarReader(part)
+    case _ => new ChainedReader(filesOf(p), createParquetColumnarReader)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
-    case g: ManifestGroupPartition =>
-      // chain the group's files through one reader after another —
-      // each file keeps its own whole-file tamper guard and dv skips
-      new PartitionReader[InternalRow] {
-        private val it = g.files.iterator
-        private var cur: PartitionReader[InternalRow] = _
-        override def next(): Boolean = {
-          while (true) {
-            if (cur == null) {
-              if (!it.hasNext) return false
-              val (name, rows, cols) = it.next()
-              cur = createReader(ManifestFilePartition(
-                s"${g.tableDir}/$name", rows, dvFiles = g.dvFiles,
-                cols = cols))
-            }
-            if (cur.next()) return true
-            cur.close(); cur = null
-          }
-          false
-        }
-        override def get(): InternalRow = cur.get()
-        override def close(): Unit = if (cur != null) cur.close()
-      }
-    case k: ManifestKeyedPartition =>
-      createReader(ManifestGroupPartition(k.tableDir, k.files, k.dvFiles))
     case part: ManifestFilePartition => createParquetReader(part)
+    case _ => new ChainedReader(filesOf(p), createParquetReader)
+  }
+
+  /** The whole files of a group (compaction) or keyed (partition-value)
+    * split, in order. */
+  private def filesOf(p: InputPartition): Iterator[ManifestFilePartition] = {
+    val (dir, files, dvFiles) = p match {
+      case g: ManifestGroupPartition => (g.tableDir, g.files, g.dvFiles)
+      case k: ManifestKeyedPartition => (k.tableDir, k.files, k.dvFiles)
+    }
+    files.iterator.map { case (name, rows, cols) =>
+      ManifestFilePartition(s"$dir/$name", rows, dvFiles = dvFiles, cols = cols)
+    }
   }
 
   /** Deleted record positions for ONE data file (merge-on-read): dv
@@ -1605,22 +1599,20 @@ private class ManifestReaderFactory(
     set
   }
 
-  /** Shared per-file decode state for BOTH parquet readers (row and
-    * columnar): decodes ONLY the projected columns' chunks (required +
-    * pushed-filter columns; everything when the canonical line hash is
-    * requested) in BATCHES — each column chunk is walked in one tight
-    * loop into a typed array (ManifestParquetBatchReader). Delete
-    * vectors apply by ROW ORDINAL and the pushed-filter eval runs over
-    * raw renderings built only for the filter's own columns; survivors
+  /** Per-file decode state shared by BOTH hand-offs (row and columnar):
+    * decodes ONLY the projected columns' chunks (required + pushed-filter
+    * columns; every file column when the canonical line hash is
+    * requested) in BATCHES into column vectors
+    * (ManifestParquetBatchReader). Delete vectors apply by ROW ORDINAL
+    * and the pushed filters evaluate on the decoded values; survivors
     * land in a selection vector the wrapping reader serves rows (or
     * column vectors) from. */
-  private final class ParquetCursor(part: ManifestFilePartition,
-      vectorMode: Boolean = false) {
+  private final class ParquetCursor(part: ManifestFilePartition) {
     private val fp = new Path(part.file)
     private val fs = fp.getFileSystem(hadoopConf.value)
     private val fileName = fp.getName
     private val deletedPos = deletedPosFor(fs, fp, part.dvFiles)
-    def hasDeletes: Boolean = !deletedPos.isEmpty
+    val hasDeletes: Boolean = !deletedPos.isEmpty
     // the FILE's own column layout, in file column order: schema
     // evolution by name against the read schema, and (when the manifest
     // records it) by position against the file's columns, so a
@@ -1635,8 +1627,11 @@ private class ManifestReaderFactory(
           s"$fileName — file columns ${unknown.mkString(",")} are not in " +
           "the read schema")
     }
+    // an unsupported read type fails loudly, even where no file stores it
+    required.fields.foreach(f => ManifestSink.kindOf(f.dataType))
     private def dtOf(n: String) = fullSchema(fullSchema.fieldIndex(n)).dataType
-    // projection: exactly the file columns this scan touches
+    // projection: exactly the file columns this scan touches, in FILE
+    // order — with the line hash requested, every file column
     private val neededNames: Array[String] = {
       val want =
         if (needLinehash) fullSchema.fieldNames.toSeq
@@ -1652,38 +1647,22 @@ private class ManifestReaderFactory(
     val batch = new ManifestParquetBatchReader(fp, neededNames,
       neededNames.map(dtOf), hadoopConf.value,
       if (rgSplit) Some((part.start, part.start + part.len)) else None,
-      vectorMode, part.cols.map(_ => neededNames.map(n => fileCols.indexOf(n))))
-    private val hasFilters = filters.nonEmpty
+      part.cols.map(_ => neededNames.map(n => fileCols.indexOf(n))))
     // projected-column index by name (-1 = not in this file)
     private def idxOf(n: String): Int = neededNames.indexOf(n)
-    // required output column → projected index
+    // required output column → decoded column
     val reqIdx: Array[Int] = required.fields.map(f => idxOf(f.name))
-    private val reqTypes: Array[DataType] = required.fields.map(_.dataType)
-    // filter eval renders ONLY the filter's referenced columns (the
-    // old path rendered every projected column per row)
-    private val filterRefs: Set[String] = filters.flatMap(_.references).toSet
-    private val filterIdx: Array[Int] = fullSchema.fields.map(f =>
-      if (filterRefs.contains(f.name)) idxOf(f.name) else -1)
-    // linehash walks the file's own column order
-    private val lineIdx: Array[Int] = fileCols.map(idxOf)
-    private val lineIsStr: Array[Boolean] = fileCols.map(n =>
-      fullSchema.find(_.name == n).exists(_.dataType == StringType))
-    // per-row dispatch precompiled to int tags (no DataType pattern
-    // match in the hot loop); decimal scale/precision kept alongside
-    val reqKind: Array[Int] = reqTypes.map {
-      case LongType | TimestampType => 0
-      case IntegerType => 1
-      case DoubleType => 2
-      case StringType => 3
-      case BooleanType => 4
-      case _: DecimalType => 5
-      case dt => throw new UnsupportedOperationException(
-        s"ManifestSource: unsupported read type $dt")
+    // per decoded column: value kind (ManifestSink.kindOf) and decimal
+    // precision/scale, so the per-row loops dispatch on int tags
+    val kinds: Array[Int] = neededNames.map(n => ManifestSink.kindOf(dtOf(n)))
+    val precs: Array[Int] = neededNames.map(dtOf(_) match {
+      case d: DecimalType => d.precision; case _ => 0 })
+    private val scales: Array[Int] = neededNames.map(dtOf(_) match {
+      case d: DecimalType => d.scale; case _ => 0 })
+    private val bound: Array[ManifestFilters.Bound] = filters.map { f =>
+      val a = f.references.head
+      new ManifestFilters.Bound(f, idxOf(a), dtOf(a))
     }
-    val reqPrec: Array[Int] = reqTypes.map {
-      case d: DecimalType => d.precision; case _ => 0 }
-    val reqScale: Array[Int] = reqTypes.map {
-      case d: DecimalType => d.scale; case _ => 0 }
     // meta columns: 0=_mf_file, 1=_mf_pos, 2=_mf_linehash
     val metaKind: Array[Int] = metaCols.toArray.map {
       case "_mf_file" => 0
@@ -1691,10 +1670,6 @@ private class ManifestReaderFactory(
       case "_mf_linehash" => 2
     }
     val fileNameUtf8: UTF8String = UTF8String.fromString(fileName)
-    // reused per-row filter buffer: every referenced column's slot is
-    // rewritten each row; unreferenced slots are never read by eval
-    private val filterFields =
-      if (filters.nonEmpty) new Array[String](fullSchema.length) else null
     private var ordinal = if (rgSplit) part.rowStart else 0L
     private var readCount = 0L
     // survivors of the CURRENT decode batch: row index within the batch
@@ -1702,12 +1677,10 @@ private class ManifestReaderFactory(
     val sel = new Array[Int](ManifestParquetBatchReader.BatchRows)
     val selOrd = new Array[Long](ManifestParquetBatchReader.BatchRows)
 
-    /** Decode the next batch and apply delete vectors + pushed filters;
-      * fills `sel`/`selOrd`. Returns the surviving row count (possibly
-      * 0 — call again), or -1 at EOF (tamper guard checked: whole files
-      * against the manifest row count, row-group splits against their
-      * group's own count). */
-    def nextSelection(): Int = {
+    /** Decode the next batch: its row count, or -1 at EOF (tamper guard
+      * checked: whole files against the manifest row count, row-group
+      * splits against their group's own count). */
+    private def load(): Int = {
       val n = batch.loadNextBatch()
       if (n < 0) {
         if (readCount != part.rows)
@@ -1719,66 +1692,71 @@ private class ManifestReaderFactory(
         return -1
       }
       readCount += n
+      n
+    }
+
+    /** Decode the next batch and apply delete vectors + pushed filters;
+      * fills `sel`/`selOrd`. Returns the surviving row count (possibly
+      * 0 — call again), or -1 at EOF. */
+    def nextSelection(): Int = {
+      val n = load()
       var m = 0
       var r = 0
       while (r < n) {
         val recOrdinal = ordinal // row ordinal = parquet row identity
         ordinal += 1
-        val deleted = !deletedPos.isEmpty && deletedPos.contains(recOrdinal)
-        if (!deleted) {
-          // pushed filters on the raw rendering (SQL 3VL, UTF-8
-          // byte order for strings)
-          val ok = !hasFilters || {
-            var i = 0
-            while (i < fullSchema.length) {
-              val c = filterIdx(i)
-              if (c >= 0) filterFields(i) = batch.rawString(c, r)
-              i += 1
-            }
-            filters.forall(ManifestFilters.eval(fullSchema, filterFields, _))
-          }
-          if (ok) { sel(m) = r; selOrd(m) = recOrdinal; m += 1 }
+        if (!(hasDeletes && deletedPos.contains(recOrdinal)) && passes(r)) {
+          sel(m) = r; selOrd(m) = recOrdinal; m += 1
         }
         r += 1
       }
-      m
+      if (n < 0) -1 else m
+    }
+
+    private def passes(r: Int): Boolean = {
+      val row = batch.row(r)
+      var i = 0
+      while (i < bound.length) {
+        if (!ManifestFilters.eval(bound(i), row)) return false
+        i += 1
+      }
+      true
     }
 
     /** Fast-path batch load (no delete vectors, no pushed filters, no
-      * meta columns): skips the per-row selection walk entirely. Same
-      * EOF tamper guard as [[nextSelection]]. */
+      * meta columns): skips the per-row selection walk entirely. */
     def nextBatchDirect(): Int = {
-      val n = batch.loadNextBatch()
-      if (n < 0) {
-        if (readCount != part.rows)
-          throw new java.io.IOException(
-            s"ManifestSource: ${part.file}" +
-              (if (rgSplit) s" row group @${part.start}" else "") +
-              s" has $readCount rows, manifest says ${part.rows} — " +
-              "torn or tampered file")
-        return -1
-      }
-      readCount += n
-      ordinal += n
+      val n = load()
+      if (n > 0) ordinal += n
       n
+    }
+
+    /** Decoded column `c` of non-NULL `row` as a value that outlives the
+      * batch: strings are copied out of the reused vectors. */
+    def value(row: InternalRow, c: Int): Any = kinds(c) match {
+      case KLong | KTs => row.getLong(c)
+      case KInt => row.getInt(c)
+      case KDbl => row.getDouble(c)
+      case KStr => row.getUTF8String(c).copy()
+      case KBool => row.getBoolean(c)
+      case KDec => row.getDecimal(c, precs(c), scales(c))
     }
 
     private val lineSb = new java.lang.StringBuilder()
 
-    /** EXACTLY the writer's canonical line over the file's own column
-      * order (escaped string fields, "" for NULL), hashed — identical
-      * to the sink's per-row checksum term. */
+    /** The sink's per-row checksum term: decoded row `r` rendered by
+      * [[ManifestSink.appendField]] in the file's own column order
+      * (which is the decode order once the line hash is requested),
+      * hashed. */
     def linehash(r: Int): Long = {
+      val row = batch.row(r)
       lineSb.setLength(0)
-      var j = 0
-      while (j < lineIdx.length) {
-        if (j > 0) lineSb.append(',')
-        val c = lineIdx(j)
-        val raw = if (c < 0) null else batch.rawString(c, r)
-        if (raw != null)
-          lineSb.append(if (lineIsStr(j)) ManifestSink.csvField(raw)
-            else raw)
-        j += 1
+      var c = 0
+      while (c < kinds.length) {
+        if (c > 0) lineSb.append(',')
+        if (!row.isNullAt(c))
+          ManifestSink.appendField(lineSb, row, c, kinds(c), precs(c), scales(c))
+        c += 1
       }
       lineSb.toString.hashCode.toLong
     }
@@ -1803,22 +1781,12 @@ private class ManifestReaderFactory(
         val r = cur.sel(k)
         val recOrdinal = cur.selOrd(k)
         k += 1
-        val batch = cur.batch
+        val row = cur.batch.row(r)
         val vals = new Array[Any](required.length + cur.metaKind.length)
         var i = 0
         while (i < required.length) {
           val c = cur.reqIdx(i)
-          vals(i) =
-            if (c < 0 || batch.isNull(c, r)) null
-            else cur.reqKind(i) match {
-              case 0 => batch.getLong(c, r) // long / timestamp micros
-              case 1 => batch.getInt(c, r)
-              case 2 => batch.getDouble(c, r)
-              case 3 => UTF8String.fromBytes(batch.getBytes(c, r))
-              case 4 => batch.getBoolean(c, r)
-              case _ => org.apache.spark.sql.types.Decimal(
-                batch.getUnscaled(c, r), cur.reqPrec(i), cur.reqScale(i))
-            }
+          vals(i) = if (c < 0 || row.isNullAt(c)) null else cur.value(row, c)
           i += 1
         }
         var m = 0
@@ -1840,8 +1808,7 @@ private class ManifestReaderFactory(
     }
   }
 
-  /** Columnar reader over the same cursor, decode landing DIRECTLY in
-    * OnHeapColumnVectors (vector-mode batch reader).
+  /** Columnar reader over the same cursor and the same decode vectors.
     *
     * FAST PATH — no delete vectors, no pushed filters, no meta columns
     * (the common shape of a big clean scan): the decode vectors
@@ -1854,12 +1821,12 @@ private class ManifestReaderFactory(
     * GATHER PATH — otherwise: survivors of each decode batch are
     * gathered column by column into reused output vectors. Values,
     * nulls, delete vectors, pushed-filter 3VL and the `_mf_*` meta
-    * columns are byte-identical to the row path — same cursor, same
+    * columns are identical to the row path — same cursor, same
     * decode. */
   private def createParquetColumnarReader(
       part: ManifestFilePartition): PartitionReader[ColumnarBatch] = {
     new PartitionReader[ColumnarBatch] {
-      private val cur = new ParquetCursor(part, vectorMode = true)
+      private val cur = new ParquetCursor(part)
       private val fast =
         filters.isEmpty && metaCols.isEmpty && !cur.hasDeletes
 
@@ -1897,6 +1864,32 @@ private class ManifestReaderFactory(
       private val fileNameBytes =
         cur.fileNameUtf8.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
+      /** Copies the `m` selected rows of decoded column `c` into `v`. */
+      private def gather(c: Int,
+          v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
+          m: Int): Unit = {
+        val src = cur.batch.vectors(c)
+        val kind = cur.kinds(c)
+        val intBacked = kind == KDec &&
+          cur.precs(c) <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS
+        var k = 0
+        while (k < m) {
+          val r = cur.sel(k)
+          if (src.isNullAt(r)) v.putNull(k)
+          else kind match {
+            case KInt => v.putInt(k, src.getInt(r))
+            case KDec if intBacked => v.putInt(k, src.getInt(r))
+            case KLong | KTs | KDec => v.putLong(k, src.getLong(r))
+            case KDbl => v.putDouble(k, src.getDouble(r))
+            case KBool => v.putBoolean(k, src.getBoolean(r))
+            case KStr =>
+              val b = src.getUTF8String(r).getBytes
+              v.putByteArray(k, b, 0, b.length)
+          }
+          k += 1
+        }
+      }
+
       override def next(): Boolean = {
         if (fast) {
           val n = cur.nextBatchDirect()
@@ -1908,71 +1901,12 @@ private class ManifestReaderFactory(
           val m = cur.nextSelection()
           if (m < 0) return false
           if (m > 0) {
-            val sel = cur.sel
-            val batch = cur.batch
             var i = 0
             while (i < required.length) {
               val v = vectors(i)
               v.reset()
               val c = cur.reqIdx(i)
-              if (c < 0) v.putNulls(0, m)
-              else cur.reqKind(i) match {
-                case 0 => // long / timestamp micros
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else v.putLong(k, batch.getLong(c, r))
-                    k += 1
-                  }
-                case 1 =>
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else v.putInt(k, batch.getInt(c, r))
-                    k += 1
-                  }
-                case 2 =>
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else v.putDouble(k, batch.getDouble(c, r))
-                    k += 1
-                  }
-                case 3 =>
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else {
-                      val b = batch.getBytes(c, r)
-                      v.putByteArray(k, b, 0, b.length)
-                    }
-                    k += 1
-                  }
-                case 4 =>
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else v.putBoolean(k, batch.getBoolean(c, r))
-                    k += 1
-                  }
-                case _ =>
-                  // decimal(<=18): unscaled int-/long-backed per
-                  // precision (Spark's fixed-decimal contract)
-                  val asInt = cur.reqPrec(i) <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS
-                  var k = 0
-                  while (k < m) {
-                    val r = sel(k)
-                    if (batch.isNull(c, r)) v.putNull(k)
-                    else if (asInt) v.putInt(k, batch.getUnscaled(c, r).toInt)
-                    else v.putLong(k, batch.getUnscaled(c, r))
-                    k += 1
-                  }
-              }
+              if (c < 0) v.putNulls(0, m) else gather(c, v, m)
               i += 1
             }
             var mi = 0
@@ -1991,7 +1925,7 @@ private class ManifestReaderFactory(
                   while (k < m) { v.putLong(k, cur.selOrd(k)); k += 1 }
                 case _ =>
                   var k = 0
-                  while (k < m) { v.putLong(k, cur.linehash(sel(k))); k += 1 }
+                  while (k < m) { v.putLong(k, cur.linehash(cur.sel(k))); k += 1 }
               }
               i += 1; mi += 1
             }
@@ -2006,6 +1940,30 @@ private class ManifestReaderFactory(
       override def close(): Unit = cur.close()
     }
   }
+}
+
+/** Reads a split's files one after another, each through its own
+  * per-file reader — so every file keeps its own whole-file tamper guard
+  * and delete-vector skips. The one chaining reader of both hand-offs
+  * (`T` = InternalRow or ColumnarBatch). */
+private final class ChainedReader[T](
+    files: Iterator[ManifestFilePartition],
+    open: ManifestFilePartition => PartitionReader[T])
+  extends PartitionReader[T] {
+  private var cur: PartitionReader[T] = _
+  override def next(): Boolean = {
+    while (true) {
+      if (cur == null) {
+        if (!files.hasNext) return false
+        cur = open(files.next())
+      }
+      if (cur.next()) return true
+      cur.close(); cur = null
+    }
+    false
+  }
+  override def get(): T = cur.get()
+  override def close(): Unit = if (cur != null) cur.close()
 }
 
 /** Inverse of the canonical row rendering ([[ManifestSink.csvField]]),

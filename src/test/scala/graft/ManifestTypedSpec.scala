@@ -45,15 +45,6 @@ class ManifestTypedSpec extends AnyFunSuite {
     fixture(50).coalesce(1).write.format("graft.sources.ManifestSink")
       .option("path", pq).mode("append").save()
     val a = scan(pq).orderBy("k").collect()
-    spark.conf.set("spark.graft.manifest.columnar.minRows", "0")
-    val b = try scan(pq).orderBy("k").collect()
-      finally spark.conf.unset("spark.graft.manifest.columnar.minRows")
-    assert(a.length == 50 && a.sameElements(b))
-    val r = a(13)
-    assert(r.getTimestamp(0) == java.sql.Timestamp.from(
-      java.time.Instant.parse("2024-03-01T13:00:00Z")))
-    assert(r.getDecimal(1) == new java.math.BigDecimal("13.13"))
-    assert(!r.getBoolean(2))
     // the reader re-renders exactly the writer's canonical lines: its
     // line hashes sum to the file checksum the sink recorded
     val pe = graft.sources.ManifestRead.entries(pq, "manifest.json").head
@@ -61,6 +52,19 @@ class ManifestTypedSpec extends AnyFunSuite {
       .schema(Ddl).option("path", pq).option("metadata", "true").load()
       .select("_mf_linehash").collect().map(_.getLong(0))
     assert(pe.rows == 50 && hashes.sum == pe.checksum)
+    // a filler file (k < 0, other columns absent) takes the snapshot
+    // past the columnar row gate
+    spark.range(graft.sources.ManifestScan.ColumnarMinRows)
+      .select((-col("id") - 1L).as("k")).coalesce(1)
+      .write.format("graft.sources.ManifestSink")
+      .option("path", pq).mode("append").save()
+    val b = scan(pq).where("k >= 0").orderBy("k").collect()
+    assert(a.length == 50 && a.sameElements(b))
+    val r = a(13)
+    assert(r.getTimestamp(0) == java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-03-01T13:00:00Z")))
+    assert(r.getDecimal(1) == new java.math.BigDecimal("13.13"))
+    assert(!r.getBoolean(2))
   }
 
   test("timestamp zone maps prune files a time-range probe can't hit") {

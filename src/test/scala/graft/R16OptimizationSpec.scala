@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-16 optimization internals.
   *
   * 1. ManifestParquetBatchReader (the batched column-chunk decode that
-  *    replaced the row-at-a-time Group reader): typed round trip with
-  *    nulls, rawString rendering equality with the writer's canonical
-  *    line, row-group-range reads, zero-column projection.
+  *    replaced the row-at-a-time Group reader, decoding into the
+  *    column vectors both scan hand-offs read): typed round trip with
+  *    nulls, projection, row-group-range reads with file-global
+  *    ordinals, and reused vectors and buffers never aliasing rows.
   * 2. ManifestCatalog ALTER fixes (round-15 ADVICE): the rename era is
   *    frozen at the PRE-rename head so `VERSION AS OF` the rename
   *    snapshot reads renamed data under the new name; stats keys are
@@ -69,8 +70,8 @@ class R16OptimizationSpec extends AnyFunSuite {
   test("batched decode: projection reads only requested columns") {
     val path = freshDir()
     writeTyped(path)
-    // projected read (column pruning path) + filtered read (filter
-    // rendering path) both serve from the batch arrays
+    // projected read (column pruning path) + filtered read (pushed
+    // filter path) both serve from the decode vectors
     val proj = spark.read.format("graft.sources.ManifestSource")
       .schema(typedDdl).option("path", path).load()
       .select("s", "k").where("k >= 2").orderBy("k").collect()

@@ -58,13 +58,15 @@ class R17OptimizationSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  /** The columnar row gate defaults to 256k rows (fixture scans stay
-    * row-based); these specs use tiny tables, so they open the gate. */
-  private def withColumnarGateOpen[T](f: => T): T = {
-    spark.conf.set("spark.graft.manifest.columnar.minRows", "0")
-    try f
-    finally spark.conf.unset("spark.graft.manifest.columnar.minRows")
-  }
+  /** Appends one file of filler rows that takes the snapshot past the
+    * columnar row gate (fixture scans stay row-based below it): `k` is
+    * negative and every other column is absent, so `k >= 0` selects the
+    * typed rows again. */
+  private def padPastGate(path: String): Unit =
+    spark.range(graft.sources.ManifestScan.ColumnarMinRows)
+      .select((-col("id") - 1L).as("k")).coalesce(1)
+      .write.format("graft.sources.ManifestSink")
+      .option("path", path).mode("append").save()
 
   test("columnar hand-off: large scans go columnar, small ones stay row-based") {
     val pq = freshDir()
@@ -72,11 +74,10 @@ class R17OptimizationSpec extends AnyFunSuite {
     val rowPlan = executedPlan(read(pq))
     assert(!rowPlan.contains("ColumnarToRow"),
       s"a scan under the row gate must stay row-based:\n$rowPlan")
-    withColumnarGateOpen {
-      val colPlan = executedPlan(read(pq))
-      assert(colPlan.contains("ColumnarToRow"),
-        s"a scan over the row gate should hand off vectors:\n$colPlan")
-    }
+    padPastGate(pq)
+    val colPlan = executedPlan(read(pq))
+    assert(colPlan.contains("ColumnarToRow"),
+      s"a scan over the row gate should hand off vectors:\n$colPlan")
   }
 
   test("columnar values identical to the row path (incl. linehash)") {
@@ -87,15 +88,17 @@ class R17OptimizationSpec extends AnyFunSuite {
       .format("graft.sources.ManifestSource")
       .schema(ddl).option("path", pq)
       .option("metadata", "true").load()
-      .orderBy("k").collect().map(_.toSeq).toSeq
+      .where("k >= 0").orderBy("k").collect().map(_.toSeq).toSeq
     val rowPath = rows()
     assert(rowPath.length == 5)
-    assert(rowPath == withColumnarGateOpen(rows()))
+    padPastGate(pq)
+    assert(rowPath == rows())
   }
 
-  test("columnar: pushed filter + delete vectors + decimal layouts") { withColumnarGateOpen {
+  test("columnar: pushed filter + delete vectors + decimal layouts") {
     val pq = freshDir()
     writeTable(pq)
+    padPastGate(pq)
     val n = graft.sources.ManifestMaintenance.delete(
       spark, pq, ddl, "k = 4")
     assert(n == 1)
@@ -110,7 +113,7 @@ class R17OptimizationSpec extends AnyFunSuite {
     // k=3: dec9 null, dec18 present; k=5: s null
     assert(got(1).isNullAt(1) && !got(1).isNullAt(2))
     assert(got(2).isNullAt(3))
-  }}
+  }
 
   test("decimal zone maps: disjoint files prune on a decimal predicate") {
     import spark.implicits._
