@@ -35,7 +35,9 @@ import scala.collection.mutable
   *    Bingql.g4:1436-1442) are shimmed on the fly with a pass-through
   *    that preserves argument references, then analysis is retried;
   *  - Hive-only DDL (STORED AS / typed PARTITIONED BY / s3 LOCATION) is
-  *    kept schema-only, from the parsed column definitions.
+  *    kept schema-only, from the parsed column definitions;
+  *  - a statement reading a table no source resolves is skipped, and
+  *    the rest of the script is still extracted.
   */
 object LineageRunner {
 
@@ -52,9 +54,10 @@ object LineageRunner {
       topSelects: Seq[String] = Seq.empty,
       /** Statements skipped as non-lineage residue — unparseable
         * (GRANT, transactions, HPL-SQL procedural leftovers) or
-        * parse-only DML (MERGE/UPDATE/DELETE). The reference's grammar
-        * swallows these with no visitor (90%-coverage stance); we
-        * record them instead of aborting the script. */
+        * parse-only DML (MERGE/UPDATE/DELETE) — and statements reading
+        * a table no source resolves. The reference's grammar swallows
+        * the former with no visitor (90%-coverage stance); we record
+        * them instead of aborting the script. */
       skippedStatements: Seq[String] = Seq.empty)
 
   /** Registered physical columns of a created table become TABLE-dataset
@@ -78,6 +81,10 @@ object LineageRunner {
   private val SessionCatalog = "spark_catalog"
 
   private def key(db: String, tbl: String): String = s"$db.$tbl".toLowerCase(Locale.ROOT)
+
+  /** A statement read a table no source resolves. */
+  private final class UnknownTable(name: String)
+    extends RuntimeException(s"no source resolves table $name")
 
   /** A table the script dropped and no [[MetaStore]] knows: unresolved,
     * as a missing table is, and out of the analyzer's reach. */
@@ -184,6 +191,19 @@ object LineageRunner {
 
     val skippedStmts = Seq.newBuilder[String]
 
+    // A table no source resolves stays an unresolved leaf after analysis,
+    // and the walker cannot draw lineage through it: its statement is
+    // skipped (recorded, contributing nothing) and the script goes on.
+    // Each case below analyzes before it records anything.
+    def analyze(plan: LogicalPlan): LogicalPlan = {
+      val analyzed = analyzePermissive(spark, plan, scope)
+      analyzed.collectWithSubqueries {
+        case u: UnresolvedRelation => u.multipartIdentifier
+        case d: DroppedRelation => d.name
+      }.headOption.foreach(n => throw new UnknownTable(n.mkString(".")))
+      analyzed
+    }
+
     SqlPreprocessor.preprocess(script).foreach { stmt0 =>
       val (stmt, isTemp) = stmt0 match {
         case TempCreate(rest) => (s"CREATE $rest", true)
@@ -200,7 +220,7 @@ object LineageRunner {
             None
         }
       parsedOpt.foreach { parsed =>
-      parsed match {
+      try parsed match {
         case SetCatalogAndNamespace(ns: UnresolvedNamespace) =>
           scope.db = ns.multipartIdentifier.last.toLowerCase(Locale.ROOT)
 
@@ -219,9 +239,9 @@ object LineageRunner {
 
         case ctas: CreateTableAsSelect =>
           val (db, tbl) = identOf(scope, ctas.name)
+          val analyzed = analyze(ctas.query)
           if (isTemp) scope.temp += key(db, tbl)
           inserts += TableInsert(db, tbl, "CREATE TABLE AS")
-          val analyzed = analyzePermissive(spark, ctas.query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
           items ++= tableItems(db, tbl,
@@ -233,19 +253,19 @@ object LineageRunner {
           // Hive multi-table INSERT sharing a CTE/FROM
           // (SqlMetaDataExtractor.java:163-169, test 0009): extract each
           // INSERT branch separately under the same CTE scope.
-          collectInserts(w.child).foreach { ins =>
+          collectInserts(w.child).map(ins =>
+            ins -> analyze(w.copy(child = ins.query))
+          ).foreach { case (ins, analyzed) =>
             val (db, tbl) = insertTarget(scope, ins)
             inserts += TableInsert(db, tbl, insertType(ins))
-            val branch = w.copy(child = ins.query)
-            val analyzed = analyzePermissive(spark, branch, scope)
             edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
             items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
           }
 
         case ins: InsertIntoStatement =>
+          val analyzed = analyze(ins.query)
           val (db, tbl) = insertTarget(scope, ins)
           inserts += TableInsert(db, tbl, insertType(ins))
-          val analyzed = analyzePermissive(spark, ins.query, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => s"$db.$tbl" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => s"$db.$tbl" -> it)
 
@@ -298,10 +318,10 @@ object LineageRunner {
           // Bingql.g4:695-697; parse-only there, extracted here).
           val path = dir.storage.locationUri.map(_.toString).getOrElse("")
           val tgt = s"dir:$path"
+          val analyzed = analyze(dir.child)
           inserts += TableInsert("", tgt,
             if (dir.isLocal) "INSERT OVERWRITE LOCAL DIRECTORY"
             else "INSERT OVERWRITE DIRECTORY")
-          val analyzed = analyzePermissive(spark, dir.child, scope)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => tgt -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => tgt -> it)
 
@@ -324,7 +344,7 @@ object LineageRunner {
           shimFunction(spark, fn.identifier.funcName)
 
         case query =>
-          val analyzed = analyzePermissive(spark, query, scope)
+          val analyzed = analyze(query)
           edges ++= LineageWalker.edgesOf(analyzed).map(e => "" -> e)
           items ++= LineageWalker.selectItems(analyzed).map(it => "" -> it)
           // The top-level SELECT is itself a dataset — the consumption
@@ -333,6 +353,8 @@ object LineageRunner {
           val name = s"query_${topSelects.size}"
           dsNodes += DatasetNode(name, "SUBQUERY", "", "")
           topSelects += name
+      } catch {
+        case _: UnknownTable => skippedStmts += stmt
       }
       }
     }
