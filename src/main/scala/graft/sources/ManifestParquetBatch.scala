@@ -67,18 +67,13 @@ private[sources] final class ManifestParquetBatchReader(
     reader.getFooter.getFileMetaData.getCreatedBy
 
   private val nCols = names.length
-  // 0=long-backed (LONG/TIMESTAMP/DECIMAL(10..18)), 1=int, 2=double,
-  // 3=boolean, 4=string(binary), 5=DECIMAL(<=9): an INT64 in the file,
-  // unscaled in an INT vector (Spark's fixed-decimal physical layout)
-  private val kinds: Array[Int] = types.map {
-    case LongType | TimestampType => 0
-    case d: DecimalType => if (d.precision <= Decimal.MAX_INT_DIGITS) 5 else 0
-    case IntegerType => 1
-    case DoubleType => 2
-    case BooleanType => 3
-    case StringType => 4
-    case dt => throw new UnsupportedOperationException(
-      s"ManifestParquetBatch: unsupported column type $dt")
+  // value kinds (ManifestSink.kindOf); a DECIMAL(<=9) is an INT64 in the
+  // file and lands unscaled in an INT vector (Spark's fixed-decimal
+  // physical layout), any other decimal in a LONG vector
+  private val kinds: Array[Int] = types.map(ManifestSink.kindOf)
+  private val intDecimal: Array[Boolean] = types.map {
+    case d: DecimalType => d.precision <= Decimal.MAX_INT_DIGITS
+    case _ => false
   }
 
   /** The decode target, in `names` order: the very vectors Spark may
@@ -146,35 +141,42 @@ private[sources] final class ManifestParquetBatchReader(
     val v = vectors(c)
     v.reset()
     kinds(c) match {
-      case 0 =>
+      case ManifestSink.KDec if intDecimal(c) =>
+        var i = 0
+        while (i < n) {
+          if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
+          else v.putInt(i, cr.getLong.toInt)
+          cr.consume(); i += 1
+        }
+      case ManifestSink.KLong | ManifestSink.KTs | ManifestSink.KDec =>
         var i = 0
         while (i < n) {
           if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
           else v.putLong(i, cr.getLong)
           cr.consume(); i += 1
         }
-      case 1 =>
+      case ManifestSink.KInt =>
         var i = 0
         while (i < n) {
           if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
           else v.putInt(i, cr.getInteger)
           cr.consume(); i += 1
         }
-      case 2 =>
+      case ManifestSink.KDbl =>
         var i = 0
         while (i < n) {
           if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
           else v.putDouble(i, cr.getDouble)
           cr.consume(); i += 1
         }
-      case 3 =>
+      case ManifestSink.KBool =>
         var i = 0
         while (i < n) {
           if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
           else v.putBoolean(i, cr.getBoolean)
           cr.consume(); i += 1
         }
-      case 4 =>
+      case ManifestSink.KStr =>
         var i = 0
         while (i < n) {
           if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
@@ -182,13 +184,6 @@ private[sources] final class ManifestParquetBatchReader(
             val b = cr.getBinary.getBytes
             v.putByteArray(i, b, 0, b.length)
           }
-          cr.consume(); i += 1
-        }
-      case 5 =>
-        var i = 0
-        while (i < n) {
-          if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-          else v.putInt(i, cr.getLong.toInt)
           cr.consume(); i += 1
         }
     }

@@ -103,7 +103,7 @@ private[graft] object ManifestSink {
     case BooleanType => KBool
     case DoubleType => KDbl
     case _ => throw new UnsupportedOperationException(
-      s"ManifestSink: unsupported column type $dt")
+      s"Manifest connector: unsupported column type $dt")
   }
 
   /** Appends NON-NULL field `i` of `row` (of kind `kind`; precision and

@@ -158,6 +158,7 @@ private class ManifestReadTable(
 
 private object ManifestFilters {
   import org.apache.spark.sql.sources._
+  import ManifestSink.{KBool, KDbl, KDec, KInt, KLong, KStr, KTs}
 
   /** Comparable columns: numerics, and — since round 13 — strings,
     * whose pushed comparisons and recorded bounds BOTH use Spark's own
@@ -348,13 +349,13 @@ private object ManifestFilters {
       case null => null
       case _ if col < 0 => null
       case v => kind match {
-        case ManifestSink.KLong => v.asInstanceOf[Number].longValue()
-        case ManifestSink.KInt => v.asInstanceOf[Number].intValue()
-        case ManifestSink.KDbl => v.asInstanceOf[Number].doubleValue()
-        case ManifestSink.KStr => UTF8String.fromString(v.toString)
-        case ManifestSink.KTs => tsMicros(v).map(Long.box).orNull
-        case ManifestSink.KDec => toBigDec(v).orNull
-        case ManifestSink.KBool => v match {
+        case KLong => v.asInstanceOf[Number].longValue()
+        case KInt => v.asInstanceOf[Number].intValue()
+        case KDbl => v.asInstanceOf[Number].doubleValue()
+        case KStr => UTF8String.fromString(v.toString)
+        case KTs => tsMicros(v).map(Long.box).orNull
+        case KDec => toBigDec(v).orNull
+        case KBool => v match {
           case b: java.lang.Boolean => b
           case _ => null
         }
@@ -380,18 +381,18 @@ private object ManifestFilters {
         row.getUTF8String(c).startsWith(b.lit.asInstanceOf[UTF8String])
       case f =>
         val x = b.kind match {
-          case ManifestSink.KLong | ManifestSink.KTs =>
+          case KLong | KTs =>
             java.lang.Long.compare(row.getLong(c), b.lit.asInstanceOf[Long])
-          case ManifestSink.KInt =>
+          case KInt =>
             java.lang.Integer.compare(row.getInt(c), b.lit.asInstanceOf[Int])
-          case ManifestSink.KDbl =>
+          case KDbl =>
             dblCompare(row.getDouble(c), b.lit.asInstanceOf[Double])
-          case ManifestSink.KStr =>
+          case KStr =>
             row.getUTF8String(c).binaryCompare(b.lit.asInstanceOf[UTF8String])
-          case ManifestSink.KDec =>
+          case KDec =>
             row.getDecimal(c, b.prec, b.scale).toJavaBigDecimal
               .compareTo(b.lit.asInstanceOf[java.math.BigDecimal])
-          case ManifestSink.KBool => java.lang.Boolean.compare(
+          case KBool => java.lang.Boolean.compare(
             row.getBoolean(c), b.lit.asInstanceOf[Boolean])
         }
         f match {
