@@ -194,10 +194,11 @@ object LineageRunner {
     // A table no source resolves stays an unresolved leaf after analysis,
     // and the walker cannot draw lineage through it: its statement is
     // skipped (recorded, contributing nothing) and the script goes on.
-    // Each case below analyzes before it records anything.
+    // Each case below analyzes before it records anything. A resolved
+    // plan, the common case, is not walked.
     def analyze(plan: LogicalPlan): LogicalPlan = {
       val analyzed = analyzePermissive(spark, plan, scope)
-      analyzed.collectWithSubqueries {
+      if (!analyzed.resolved) analyzed.collectWithSubqueries {
         case u: UnresolvedRelation => u.multipartIdentifier
         case d: DroppedRelation => d.name
       }.headOption.foreach(n => throw new UnknownTable(n.mkString(".")))
