@@ -53,12 +53,14 @@ class ManifestTypedSpec extends AnyFunSuite {
       .select("_mf_linehash").collect().map(_.getLong(0))
     assert(pe.rows == 50 && hashes.sum == pe.checksum)
     // a filler file (k < 0, other columns absent) takes the snapshot
-    // past the columnar row gate
+    // past the columnar row gate; the scan pushes no filter, so the
+    // decode vectors go to Spark as they are, and the filler sorts
+    // before the typed rows
     spark.range(graft.sources.ManifestScan.ColumnarMinRows)
       .select((-col("id") - 1L).as("k")).coalesce(1)
       .write.format("graft.sources.ManifestSink")
       .option("path", pq).mode("append").save()
-    val b = scan(pq).where("k >= 0").orderBy("k").collect()
+    val b = scan(pq).orderBy("k").tail(50)
     assert(a.length == 50 && a.sameElements(b))
     val r = a(13)
     assert(r.getTimestamp(0) == java.sql.Timestamp.from(
