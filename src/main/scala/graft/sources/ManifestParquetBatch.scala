@@ -67,14 +67,18 @@ private[sources] final class ManifestParquetBatchReader(
     reader.getFooter.getFileMetaData.getCreatedBy
 
   private val nCols = names.length
-  // value kinds (ManifestSink.kindOf); a DECIMAL(<=9) is an INT64 in the
-  // file and lands unscaled in an INT vector (Spark's fixed-decimal
-  // physical layout), any other decimal in a LONG vector
-  private val kinds: Array[Int] = types.map(ManifestSink.kindOf)
-  private val intDecimal: Array[Boolean] = types.map {
-    case d: DecimalType => d.precision <= Decimal.MAX_INT_DIGITS
-    case _ => false
-  }
+  // per decoded column, worked out once for every reader of the
+  // vectors: value kind (ManifestSink.kindOf) and decimal
+  // precision/scale. A DECIMAL(<=9) is an INT64 in the file and lands
+  // unscaled in an INT vector (Spark's fixed-decimal physical layout),
+  // any other decimal in a LONG vector.
+  val kinds: Array[Int] = types.map(ManifestSink.kindOf)
+  val precs: Array[Int] = types.map {
+    case d: DecimalType => d.precision; case _ => 0 }
+  val scales: Array[Int] = types.map {
+    case d: DecimalType => d.scale; case _ => 0 }
+  val intDecimal: Array[Boolean] = kinds.indices.map(c =>
+    kinds(c) == ManifestSink.KDec && precs(c) <= Decimal.MAX_INT_DIGITS).toArray
 
   /** The decode target, in `names` order: the very vectors Spark may
     * iterate. */

@@ -327,16 +327,14 @@ private object ManifestFilters {
   }
 
   /** One pushed filter bound to a file's decoded columns: `col` is the
-    * ordinal of its column among them (-1: the file never stored the
+    * ordinal of its column among `dec`'s (-1: the file never stored the
     * column, so every value is NULL), and `lit` its literal converted
     * ONCE to the form a decoded value compares against — null when the
     * filter has none, the literal is NULL, or the column is absent. */
-  final class Bound(val f: Filter, val col: Int, dt: DataType) {
-    val kind: Int = if (col < 0) -1 else ManifestSink.kindOf(dt)
-    val (prec, scale) = dt match {
-      case d: DecimalType => (d.precision, d.scale)
-      case _ => (0, 0)
-    }
+  final class Bound(val f: Filter, val col: Int, dec: ManifestParquetBatchReader) {
+    val kind: Int = if (col < 0) -1 else dec.kinds(col)
+    val prec: Int = if (col < 0) 0 else dec.precs(col)
+    val scale: Int = if (col < 0) 0 else dec.scales(col)
     val lit: Any = (f match {
       case EqualTo(_, v) => v
       case GreaterThan(_, v) => v
@@ -1653,17 +1651,11 @@ private class ManifestReaderFactory(
     private def idxOf(n: String): Int = neededNames.indexOf(n)
     // required output column → decoded column
     val reqIdx: Array[Int] = required.fields.map(f => idxOf(f.name))
-    // per decoded column: value kind (ManifestSink.kindOf) and decimal
-    // precision/scale, so the per-row loops dispatch on int tags
-    val kinds: Array[Int] = neededNames.map(n => ManifestSink.kindOf(dtOf(n)))
-    val precs: Array[Int] = neededNames.map(dtOf(_) match {
-      case d: DecimalType => d.precision; case _ => 0 })
-    private val scales: Array[Int] = neededNames.map(dtOf(_) match {
-      case d: DecimalType => d.scale; case _ => 0 })
-    private val bound: Array[ManifestFilters.Bound] = filters.map { f =>
-      val a = f.references.head
-      new ManifestFilters.Bound(f, idxOf(a), dtOf(a))
-    }
+    // per decoded column type facts, worked out once by the decoder:
+    // the per-row loops dispatch on these int tags
+    import batch.{kinds, precs, scales}
+    private val bound: Array[ManifestFilters.Bound] = filters.map(f =>
+      new ManifestFilters.Bound(f, idxOf(f.references.head), batch))
     // meta columns: 0=_mf_file, 1=_mf_pos, 2=_mf_linehash
     val metaKind: Array[Int] = metaCols.toArray.map {
       case "_mf_file" => 0
@@ -1870,9 +1862,8 @@ private class ManifestReaderFactory(
           v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
           m: Int): Unit = {
         val src = cur.batch.vectors(c)
-        val kind = cur.kinds(c)
-        val intBacked = kind == KDec &&
-          cur.precs(c) <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS
+        val kind = cur.batch.kinds(c)
+        val intBacked = cur.batch.intDecimal(c)
         var k = 0
         while (k < m) {
           val r = cur.sel(k)
