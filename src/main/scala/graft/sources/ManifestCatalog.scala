@@ -50,7 +50,7 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
 
   private def spark = org.apache.spark.sql.SparkSession.active
   private def fs(p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+    ManifestFs.of(p, spark.sessionState.newHadoopConf())
 
   /** Identifier → directory, with every segment validated: a crafted
     * segment (backquoted `..`, an embedded `/`) would otherwise map a
@@ -365,7 +365,8 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
         s"""{"dv":"$n","rows":$r,"checksum":$c}"""
       }.mkString(""","deletes":[""", ",", "]")
     } + ManifestRead.renderEpochs(ManifestRead.streamEpochs(txt)) + "}"
-    ManifestMaintenance.publishBody(f, dirP, body)
+    ManifestFs.publish(f, dirP, ManifestRead.latestVersion(dir) + 1, body,
+      "ManifestCatalog")
   }
 
   /** Rename the TOP-LEVEL key `from` to `to` in a per-file stats JSON

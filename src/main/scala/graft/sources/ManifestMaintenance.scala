@@ -28,7 +28,7 @@ object ManifestMaintenance {
       path: String, keepLast: Int): Int = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) return 0
     ManifestLock.withLock(fs, dir,
       s"expire-snapshots-${java.util.UUID.randomUUID()}",
@@ -130,7 +130,7 @@ object ManifestMaintenance {
       // streaming sink, for the DML verb
       epoch: Option[(String, Long)] = None): (Long, Long) = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
     val before = ManifestRead.files(path, "manifest.json")
     val beforeDvs = ManifestRead.dvs(path, "manifest.json")
     val tag = java.util.UUID.randomUUID()
@@ -146,7 +146,7 @@ object ManifestMaintenance {
         spark.sessionState.newHadoopConf())
       val dvParts = matchedPos.queryExecution.toRdd.mapPartitions { it =>
         val stage = new Path(scratchDv)
-        val w = new ManifestDvWriter(stage.getFileSystem(conf.value), stage,
+        val w = new ManifestDvWriter(ManifestFs.of(stage, conf.value), stage,
           s"dvstage-${java.util.UUID.randomUUID()}.csv")
         try it.foreach(r =>
           w.add(r.getUTF8String(0).toString, r.getLong(1), r.getLong(2)))
@@ -206,7 +206,7 @@ object ManifestMaintenance {
         val nowEntries = ManifestRead.entriesOfText(lockTxt)
         val dataEntries = (nowEntries ++ insEntries)
           .sortBy(_.file).map(ManifestRead.render)
-        publish(fs, dir,
+        ManifestFs.publish(fs, dir, ManifestRead.latestVersion(path) + 1,
           s"""{"total_rows":${now.map(_._2).sum + inserted},""" +
             s""""files":${dataEntries.mkString("[", ",", "]")},""" +
             s""""deletes":${
@@ -217,7 +217,7 @@ object ManifestMaintenance {
             // ledger, and a CDC-apply commit advances its own entry
             ManifestRead.renderEpochs(
               prevEpochs ++ epoch.map { case (q, e) => q -> e }) +
-            "}")
+            "}", "ManifestMaintenance")
         cleanup()
         (deleted, inserted)
       } catch { case e: Throwable =>
@@ -317,34 +317,6 @@ object ManifestMaintenance {
     } else all.reduce(_ unionByName _)
   }
 
-  /** Write-complete-then-swap of `manifest.json` AND the next numbered
-    * version manifest (the sink's torn-free publish discipline).
-    * Caller must hold `_commit.lock`. */
-  private[sources] def publishBody(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path, body: String): Unit =
-    publish(fs, dir, body)
-
-  private def publish(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path, body: String): Unit = {
-    val vRe = """manifest-v(\d+)\.json""".r
-    val nextV = fs.listStatus(dir).map(_.getPath.getName).collect {
-      case vRe(v) => v.toLong
-    }.foldLeft(0L)(math.max) + 1
-    val tmp = new Path(dir, s"_manifest-pub-$nextV.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(dir, "manifest.json"), false)
-    if (!fs.rename(tmp, new Path(dir, "manifest.json")))
-      throw new java.io.IOException(
-        s"ManifestMaintenance: failed to publish manifest at $dir")
-    val vTmp = new Path(dir, s"_manifest-pub-v$nextV.tmp")
-    val vOut = fs.create(vTmp, true)
-    try vOut.write(body.getBytes("UTF-8")) finally vOut.close()
-    if (!fs.rename(vTmp, new Path(dir, s"manifest-v$nextV.json")))
-      throw new java.io.IOException(
-        s"ManifestMaintenance: failed to publish manifest-v$nextV at $dir")
-  }
-
   /** Small-file COMPACTION (the rewrite_data_files analog): bin-packs
     * the CURRENT snapshot's data files into size-bounded groups
     * (first-fit decreasing; budget = `targetBytes`, or total size /
@@ -391,7 +363,7 @@ object ManifestMaintenance {
       targetBytes: Long = 0L, clusterBy: Seq[String] = Nil): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
     val before = ManifestRead.files(path, "manifest.json")
     val beforeDvs = ManifestRead.dvs(path, "manifest.json")
     // with delete vectors pending, compaction must run even at the
@@ -518,24 +490,8 @@ object ManifestMaintenance {
         s""""files":$entries""" +
         ManifestRead.renderEpochs(ManifestRead.streamEpochs(
           ManifestRead.manifestText(path, "manifest.json"))) + "}"
-      val vRe = """manifest-v(\d+)\.json""".r
-      val nextV = fs.listStatus(dir).map(_.getPath.getName).collect {
-        case vRe(v) => v.toLong
-      }.foldLeft(0L)(math.max) + 1
-      // same torn-free publish discipline as the sink: write temp, swap
-      val tmp = new Path(dir, s"_compact-manifest-$nextV.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      fs.delete(new Path(dir, "manifest.json"), false)
-      if (!fs.rename(tmp, new Path(dir, "manifest.json")))
-        throw new java.io.IOException(
-          s"ManifestMaintenance: failed to publish compacted manifest")
-      val vTmp = new Path(dir, s"_compact-manifest-v$nextV.tmp")
-      val vOut = fs.create(vTmp, true)
-      try vOut.write(body.getBytes("UTF-8")) finally vOut.close()
-      if (!fs.rename(vTmp, new Path(dir, s"manifest-v$nextV.json")))
-        throw new java.io.IOException(
-          s"ManifestMaintenance: failed to publish manifest-v$nextV")
+      ManifestFs.publish(fs, dir, ManifestRead.latestVersion(path) + 1, body,
+        "ManifestMaintenance")
       fs.delete(new Path(scratch), true)
       (before.length, compacted.length)
     } catch { case e: Throwable =>
@@ -559,7 +515,7 @@ object ManifestMaintenance {
   def removeOrphans(
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) return 0
     ManifestLock.withLock(fs, dir,
       s"remove-orphans-${java.util.UUID.randomUUID()}",

@@ -105,11 +105,17 @@ private[graft] object ManifestParquet {
     */
   final class RowParquetWriter(file: OutputFile, schema: StructType,
       conf: Configuration) {
-    /** A writer on a Hadoop filesystem path (the manifest sink's): the
-      * same writer `ParquetWriter.Builder(Path)` builds, which wraps the
-      * path exactly this way. */
+    /** A writer on a filesystem path (the manifest sink's): a local
+      * path is written through `java.nio` ([[ManifestFs]]'s local
+      * branch: no `.crc` sidecar, no forked `chmod`), any other scheme
+      * through its Hadoop filesystem, as `ParquetWriter.Builder(Path)`
+      * wraps it. */
     def this(path: Path, schema: StructType, conf: Configuration) =
-      this(HadoopOutputFile.fromPath(path, conf), schema, conf)
+      this(
+        if (ManifestFs.isLocal(path, conf))
+          new org.apache.parquet.io.LocalOutputFile(ManifestFs.localFile(path))
+        else HadoopOutputFile.fromPath(path, conf),
+        schema, conf)
     import org.apache.parquet.io.api.{Binary, RecordConsumer}
     private val mt = messageType(schema)
     private var consumer: RecordConsumer = _

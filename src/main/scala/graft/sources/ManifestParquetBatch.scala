@@ -51,7 +51,10 @@ private[sources] final class ManifestParquetBatchReader(
   import ManifestParquetBatchReader._
 
   private val reader: ParquetFileReader = {
+    // parquet writes a CRC per page by default: verifying it is what
+    // catches a corrupt data file now that no `.crc` sidecar exists
     val b = HadoopReadOptions.builder(conf, file)
+      .usePageChecksumVerification(true)
     range.foreach { case (s, e) => b.withRange(s, e) }
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), b.build())
   }

@@ -109,7 +109,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
     * must survive DML) plus the new ones. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val table = new Path(dir)
-    val fs = table.getFileSystem(hadoopConf.value)
+    val fs = ManifestFs.of(table, hadoopConf.value)
     val tmp = new Path(table, tmpDirName)
     val commits = messages.toSeq.collect {
       case m: ManifestDeltaCommit => m
@@ -171,21 +171,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
            s"""{"dv":"$n","rows":$r,"checksum":$c}"""
          }.mkString(""","deletes":[""", ",", "]")) +
         ManifestRead.renderEpochs(prevEpochs) + "}"
-      // write-complete-then-swap, current + immutable numbered version
-      val nextV = snapshotV + 1
-      val mTmp = new Path(tmp, "manifest.json.new")
-      val out = fs.create(mTmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      fs.delete(new Path(table, "manifest.json"), false)
-      if (!fs.rename(mTmp, new Path(table, "manifest.json")))
-        throw new java.io.IOException(
-          s"ManifestRowLevel: failed to publish manifest at $dir")
-      val vTmp = new Path(table, s"_manifest-v$nextV.tmp")
-      val vOut = fs.create(vTmp, true)
-      try vOut.write(body.getBytes("UTF-8")) finally vOut.close()
-      if (!fs.rename(vTmp, new Path(table, s"manifest-v$nextV.json")))
-        throw new java.io.IOException(
-          s"ManifestRowLevel: failed to publish manifest-v$nextV at $dir")
+      ManifestFs.publish(fs, table, snapshotV + 1, body, "ManifestRowLevel")
       fs.delete(tmp, true)
     } catch { case e: Throwable =>
       fs.delete(tmp, true)
@@ -194,7 +180,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(hadoopConf.value)
+    val fs = ManifestFs.of(new Path(dir), hadoopConf.value)
     fs.delete(new Path(new Path(dir), tmpDirName), true)
   }
 }
@@ -221,7 +207,7 @@ private class ManifestDeltaWriterFactory(dir: String, writeId: String,
           partitionBy).createWriter(partitionId, taskId)
       // one positional delete-vector stage file per task
       private val dv = new ManifestDvWriter(
-        new Path(dir).getFileSystem(hadoopConf.value),
+        ManifestFs.of(new Path(dir), hadoopConf.value),
         new Path(new Path(dir), s"_tmp-$writeId"),
         f"dvstage-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.csv")
 

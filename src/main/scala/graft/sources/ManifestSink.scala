@@ -185,11 +185,17 @@ private[graft] object ManifestSink {
   * fails loudly; an unconditional delete here would be check-then-act:
   * the loser could delete the winner's FRESH lock and both would enter
   * the manifest read-merge-write silently); a FRESH lock still fails
-  * loudly with its age and owner in the message. After creating the
-  * lock, ownership is re-verified (second line of defense behind the
-  * atomic rename): if a racing committer with a stale view clobbered
-  * ours between create and verify, the commit aborts BEFORE touching
-  * the manifest and leaves the clobberer's lock alone. */
+  * loudly with its age and owner in the message.
+  *
+  * On local paths the exclusive create is atomic: [[ManifestFs]] opens
+  * the lock with `CREATE_NEW`, so of racing committers exactly one
+  * holds it and the others fail loudly. Other schemes get their Hadoop
+  * filesystem's `create(overwrite = false)`, which is atomic on HDFS
+  * but may be check-then-create elsewhere (object stores); there,
+  * ownership is re-verified after the create as a second line of
+  * defense: if a racing committer clobbered ours between create and
+  * verify, the commit aborts BEFORE touching the manifest and leaves
+  * the clobberer's lock alone. */
 private[graft] object ManifestLock {
   private val staleMs = 10 * 60 * 1000L
 
@@ -343,7 +349,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
       .getOrElse(new Configuration()))
 
   private def fs(): FileSystem =
-    new Path(path).getFileSystem(hadoopConf.value)
+    ManifestFs.of(new Path(path), hadoopConf.value)
 
   private[sources] def writerFactory: ManifestWriterFactory =
     new ManifestWriterFactory(path, writeId, schema, hadoopConf, partitionBy)
@@ -448,30 +454,11 @@ private class ManifestBatchWrite(path: String, schema: StructType,
         }.mkString(""","deletes":[""", ",", "]")) +
         ManifestRead.renderEpochs(newEpochs)
       val total = all.map(_.rows).sum
-      // write complete, then swap into place (delete-then-rename: no
-      // reader ever sees a torn manifest)
-      val manifestTmp = new Path(tmpDir, "manifest.json.new")
-      val out = f.create(manifestTmp, true)
-      try out.write(
-        s"""{"total_rows":$total,"files":$manifest}""".getBytes("UTF-8"))
-      finally out.close()
-      f.delete(manifestPath, false)
-      if (!f.rename(manifestTmp, manifestPath))
-        throw new java.io.IOException(
-          s"ManifestSink: failed to publish manifest at $manifestPath")
-      // snapshot history: every commit also publishes an IMMUTABLE
-      // numbered manifest (time travel — ManifestSource option
-      // "version"). Numbering under the commit lock, so no races; the
-      // write is temp + rename so a version file is never seen torn.
-      val nextV = maxExistingV + 1
-      val vTmp = new Path(dir, s"_manifest-v$nextV.tmp")
-      val vOut = f.create(vTmp, true)
-      try vOut.write(
-        s"""{"total_rows":$total,"files":$manifest}""".getBytes("UTF-8"))
-      finally vOut.close()
-      if (!f.rename(vTmp, new Path(dir, s"manifest-v$nextV.json")))
-        throw new java.io.IOException(
-          s"ManifestSink: failed to publish manifest-v$nextV at $path")
+      // snapshot history: every commit publishes the current manifest
+      // AND an IMMUTABLE numbered one (time travel — ManifestSource
+      // option "version"), numbered under the commit lock
+      ManifestFs.publish(f, dir, maxExistingV + 1,
+        s"""{"total_rows":$total,"files":$manifest}""", "ManifestSink")
       // losers' temp files (failed/speculative attempts) die with the dir
       f.delete(tmpDir, true)
     }
@@ -507,7 +494,7 @@ private[sources] class ManifestWriterFactory(path: String, writeId: String,
       // executors resolve the FS from the DRIVER's Hadoop conf (shipped
       // via SerializableConfiguration) so session-level spark.hadoop.*
       // settings — s3a credentials, endpoint overrides — apply here too
-      private val fs = new Path(path).getFileSystem(hadoopConf.value)
+      private val fs = ManifestFs.of(new Path(path), hadoopConf.value)
       private val tmpDir = new Path(new Path(path), tmpDirName)
       fs.mkdirs(tmpDir)
       // identity-partition FAN-OUT (sink option "partitionBy", a BIGINT

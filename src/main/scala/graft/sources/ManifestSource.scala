@@ -516,7 +516,7 @@ private[sources] class ManifestScan(
     // metadata calls per planning pass dwarf planning itself. The stat
     // fallback only fires for pre-round-15 manifests lacking "bytes",
     // and the filesystem handle is resolved lazily for the same reason.
-    lazy val fs = new Path(path).getFileSystem(
+    lazy val fs = ManifestFs.of(new Path(path),
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     var bytes = 0L
     var rows = 0L
@@ -1011,9 +1011,10 @@ private[graft] object ManifestRead {
   def manifestText(path: String, manifestName: String): String =
     text(path, manifestName)
 
-  /** CURRENT-snapshot text with the commit swap window bridged: every
-    * committer publishes `manifest.json` delete-then-rename, so a
-    * reader racing a commit can see it absent for a few milliseconds.
+  /** CURRENT-snapshot text with the commit swap window bridged: on
+    * non-local schemes a committer publishes `manifest.json`
+    * delete-then-rename ([[ManifestFs.publish]]), so a reader racing a
+    * commit can see it absent for a few milliseconds.
     * Absence only means "empty table" when the directory holds NO
     * committed version manifest either (a catalog CREATE with no
     * INSERT yet is the one legitimately-empty case); a table with
@@ -1057,7 +1058,7 @@ private[graft] object ManifestRead {
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = ManifestFs.of(dir, conf)
     val mp = new Path(dir, manifestName)
     if (!fs.exists(mp))
       throw new java.io.FileNotFoundException(
@@ -1097,7 +1098,7 @@ private[graft] object ManifestRead {
     * a pure rewrite whose files the streaming tail must not re-emit. */
   def isCompaction(path: String, manifestName: String): Boolean = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
     val mp = new Path(new Path(path), manifestName)
     if (!fs.exists(mp)) return false
     val in = fs.open(mp)
@@ -1155,7 +1156,7 @@ private[graft] object ManifestRead {
   /** Highest committed manifest version at `path` (0 = none). */
   def latestVersion(path: String): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
     val dir = new Path(path)
     if (!fs.exists(dir)) return 0L
     val vRe = """manifest-v(\d+)\.json""".r
@@ -1587,10 +1588,13 @@ private class ManifestReaderFactory(
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         fs.open(new Path(tableDir, dv)), "UTF-8"))
       try {
+        // the sink's own `file,pos,hash` lines (file names need no
+        // escaping): parse pos only on this file's lines
+        val prefix = fileName + ","
         var l = in.readLine()
         while (l != null) {
-          val f = ManifestDialect.splitCsv(l)
-          if (f(0) == fileName) set.add(f(1).toLong)
+          if (l.startsWith(prefix))
+            set.add(l.substring(prefix.length, l.indexOf(',', prefix.length)).toLong)
           l = in.readLine()
         }
       } finally in.close()
@@ -1608,7 +1612,7 @@ private class ManifestReaderFactory(
     * column vectors) from. */
   private final class ParquetCursor(part: ManifestFilePartition) {
     private val fp = new Path(part.file)
-    private val fs = fp.getFileSystem(hadoopConf.value)
+    private val fs = ManifestFs.of(fp, hadoopConf.value)
     private val fileName = fp.getName
     private val deletedPos = deletedPosFor(fs, fp, part.dvFiles)
     val hasDeletes: Boolean = !deletedPos.isEmpty

@@ -43,7 +43,7 @@ object ManifestTables {
     * at that instant. */
   def versionAtTimestamp(path: String, micros: Long): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
     val dir = new Path(path)
     if (!fs.exists(dir)) return 0L
     val vRe = """manifest-v(\d+)\.json""".r

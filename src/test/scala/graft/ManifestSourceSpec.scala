@@ -173,10 +173,9 @@ class ManifestSourceSpec extends AnyFunSuite {
     Seq(1L, 2L, 3L).toDF("k").coalesce(1)
       .write.format("graft.sources.ManifestSink")
       .option("path", out).mode("append").save()
-    // swap in a valid one-row file behind the manifest's back (drop
-    // the local-FS .crc sidecar too, so OUR row-count guard fires rather
-    // than Hadoop's checksum layer — on object stores there is no
-    // sidecar and this guard is the only tamper detection)
+    // swap in a valid one-row file behind the manifest's back: its
+    // pages carry valid checksums and the connector writes no `.crc`
+    // sidecar, so OUR row-count guard is what catches a whole-file swap
     val short = freshDir()
     Seq(1L).toDF("k").coalesce(1)
       .write.format("graft.sources.ManifestSink")
@@ -185,7 +184,6 @@ class ManifestSourceSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("part-")).head
     java.nio.file.Files.copy(part(short).toPath, part(out).toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(out, s".${part(out).getName}.crc").delete()
     val e = intercept[Exception] {
       spark.read.format("graft.sources.ManifestSource")
         .schema("k LONG").option("path", out).load().collect()
