@@ -30,10 +30,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - abort deletes the job's temp dir — losers and failures leave no
   *    visible state.
   *
-  * All I/O goes through the Hadoop [[FileSystem]] API, so the path may
-  * be any Hadoop-visible filesystem (file:/, hdfs:/, s3a:/ …) shared
-  * by driver and executors — executors resolve the filesystem from the
-  * cluster's default Hadoop configuration. Concurrent appends to the
+  * All I/O goes through the Hadoop [[FileSystem]] API, resolved by
+  * [[ManifestFs]], so the path may be any Hadoop-visible filesystem
+  * (file:/, hdfs:/, s3a:/ …) shared by driver and executors — executors
+  * resolve the filesystem from the cluster's default Hadoop
+  * configuration. Concurrent appends to the
   * same path are serialized by an exclusive `_commit.lock` created
   * atomically (create-no-overwrite) around the manifest
   * read-merge-write; a second committer arriving while the lock is
@@ -41,9 +42,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * manifest entries. The lock body records (timestamp, writeId); a lock
   * older than 10 minutes — a crashed driver, since commits take
   * seconds — is broken automatically so the path self-heals.
-  * The manifest replace itself is delete-then-rename: readers
-  * racing a commit can observe a missing manifest for an instant, but
-  * never a torn one.
+  * The manifest is published by [[ManifestFs.publish]]: never torn,
+  * and on local paths never missing either (elsewhere a reader racing
+  * a commit can find it missing for an instant).
   *
   * Data files are parquet, the connector's only data-file format
   * ([[ManifestParquet]]); a `format` option asking for anything else
@@ -191,8 +192,8 @@ private[graft] object ManifestSink {
   * the lock with `CREATE_NEW`, so of racing committers exactly one
   * holds it and the others fail loudly. Other schemes get their Hadoop
   * filesystem's `create(overwrite = false)`, which is atomic on HDFS
-  * but may be check-then-create elsewhere (object stores); there,
-  * ownership is re-verified after the create as a second line of
+  * but may be check-then-create elsewhere (object stores). So on every
+  * scheme ownership is re-verified after the create as a second line of
   * defense: if a racing committer clobbered ours between create and
   * verify, the commit aborts BEFORE touching the manifest and leaves
   * the clobberer's lock alone. */
