@@ -88,7 +88,8 @@ class DialectParser(delegate: ParserInterface) extends ParserInterface {
                 Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
               require(micros != null, s"TIMESTAMP AS OF $e is not a timestamp")
               graft.sources.ManifestTables.versionAtTimestamp(
-                path, micros.asInstanceOf[Long])
+                graft.sources.ManifestRead.fsFor(path), path,
+                micros.asInstanceOf[Long])
             }
             require(version > 0,
               s"no snapshot of ${ur.multipartIdentifier.mkString(".")} at the requested point")

@@ -107,7 +107,8 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
   /** `TIMESTAMP AS OF ts` (micros) — the last snapshot published at or
     * before the instant (commit mtimes; see ManifestTables). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val v = ManifestTables.versionAtTimestamp(dirOf(ident), timestamp)
+    val dir = dirOf(ident)
+    val v = ManifestTables.versionAtTimestamp(fs(new Path(dir)), dir, timestamp)
     if (v <= 0) throw new NoSuchTableException(
       Seq(catName) ++ ident.namespace() :+ ident.name())
     load(ident, Some(v))
@@ -243,7 +244,8 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     // one lock spans era-freeze + manifest rewrite + DDL swap: a reader
     // can never observe the rename window, and an INSERT can't slip a
     // snapshot between the latestVersion read and the schema publish
-    ManifestLock.withLock(fs(dirP), dirP,
+    val f = fs(dirP)
+    ManifestLock.withLock(f, dirP,
       s"alter-${java.util.UUID.randomUUID()}", "ManifestCatalog") {
     val raw = readDdl(dir).getOrElse(throw new NoSuchTableException(
       Seq(catName) ++ ident.namespace() :+ ident.name()))
@@ -268,8 +270,7 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     // silently serving NULLs). Freeze first, too, so a crash between
     // the freeze and the manifest rewrite leaves only a harmless frozen
     // copy of the still-current schema.
-    val head = ManifestRead.latestVersion(dir)
-    val f = fs(dirP)
+    val head = ManifestRead.latestVersion(f, dirP)
     if (head > 0) {
       val frozen = new Path(dir, s"_schema-upto-v$head.ddl")
       // create-if-absent — two ALTERs with no commits between must keep
@@ -310,7 +311,7 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
         require(!pBy.toSeq.flatMap(ManifestPartSpec.parseMulti)
           .exists(_.col == from),
           "ManifestCatalog: cannot rename a partition column")
-        renameInManifest(dir, from, to)
+        renameInManifest(f, dirP, from, to)
         schema = StructType(schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f))
       case other => throw new UnsupportedOperationException(
@@ -341,33 +342,22 @@ class ManifestCatalog extends TableCatalog with FunctionCatalog {
     * and publish one new snapshot under the commit lock. Readers map
     * `cols` to the file's columns by position, so the renamed column
     * keeps its data. */
-  private def renameInManifest(dir: String, from: String, to: String): Unit = {
-    val dirP = new Path(dir)
-    val f = fs(dirP)
-    if (ManifestRead.latestVersion(dir) == 0L) return // never written
-    // caller (alterTable) already holds _commit.lock for the table dir
-    val txt = ManifestRead.manifestText(dir, "manifest.json")
-    val renamed = ManifestRead.entriesOfText(txt).map { e =>
-      e.copy(
-        cols = e.cols.map(_.split(',')
-          .map(c => if (c == from) to else c).mkString(",")),
-        stats = e.stats.map(renameStatsKey(_, from, to)),
-        rgs = e.rgs.map(r => ManifestParquet.renderRgs(
-          ManifestParquet.parseRgs(r).map(g =>
-            g.copy(stats = renameStatsKey(g.stats, from, to))))))
+  private def renameInManifest(f: org.apache.hadoop.fs.FileSystem, dir: Path,
+      from: String, to: String): Unit =
+    // alterTable already holds _commit.lock for the table dir
+    ManifestCommit(f, dir, s"rename-column-${java.util.UUID.randomUUID()}",
+      "ManifestCatalog", None, lockHeld = true) { snap =>
+      if (snap.version == 0) None // never written
+      else Some(ManifestCommit.Change(snap.entries.map { e =>
+        e.copy(
+          cols = e.cols.map(_.split(',')
+            .map(c => if (c == from) to else c).mkString(",")),
+          stats = e.stats.map(renameStatsKey(_, from, to)),
+          rgs = e.rgs.map(r => ManifestParquet.renderRgs(
+            ManifestParquet.parseRgs(r).map(g =>
+              g.copy(stats = renameStatsKey(g.stats, from, to))))))
+      }, snap.dvs, snap.epochs))
     }
-    val body = s"""{"total_rows":${renamed.map(_.rows).sum},""" +
-      s""""files":${renamed.sortBy(_.file).map(ManifestRead.render)
-        .mkString("[", ",", "]")}""" + {
-      val dvs = ManifestRead.dvsOfText(txt)
-      if (dvs.isEmpty) ""
-      else dvs.sortBy(_._1).map { case (n, r, c) =>
-        s"""{"dv":"$n","rows":$r,"checksum":$c}"""
-      }.mkString(""","deletes":[""", ",", "]")
-    } + ManifestRead.renderEpochs(ManifestRead.streamEpochs(txt)) + "}"
-    ManifestFs.publish(f, dirP, ManifestRead.latestVersion(dir) + 1, body,
-      "ManifestCatalog")
-  }
 
   /** Rename the TOP-LEVEL key `from` to `to` in a per-file stats JSON
     * object. Quote- and depth-aware: the same byte sequence occurring

@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Maintenance for a [[ManifestSink]] directory: snapshot expiry.
   *
@@ -46,8 +49,8 @@ object ManifestMaintenance {
   /** Row-level DELETE, merge-on-read (the delete-vector analog): rows
     * matching `predicate` (a SQL expression over the table's columns)
     * are recorded as POSITIONAL delete vectors — (dataFile, rowOrdinal,
-    * lineHash) lines, staged distributed through [[ManifestDvWriter]] —
-    * and a new manifest version carries the data
+    * lineHash) lines written by [[ManifestDvWriter]], the writer SQL
+    * `DELETE` uses — and a new manifest version carries the data
     * entries unchanged plus the dv entries. No data file is rewritten:
     * readers apply the dvs at scan time (batch, time travel, and the
     * streaming tail all skip deleted records), and [[compact]] later
@@ -61,10 +64,12 @@ object ManifestMaintenance {
     * the lineHash term lets compact's checksum conservation stay exact
     * net-of-deletes.
     *
-    * Concurrency: the scan runs outside the lock; the publish takes
-    * `_commit.lock`, then verifies the scanned data files AND the dv
-    * set are unchanged (an append is fine — its new files can't match
-    * a scan that never saw them — but a compaction/truncate/delete
+    * One Spark job stages the positions into `_tmp-delete-<id>`; the
+    * publish runs through the one commit step ([[ManifestCommit]]).
+    * Concurrency: the scan runs outside the lock; under it the publish
+    * verifies the scanned data files are still current AND the dv set
+    * is unchanged (an append is fine — its new files can't match a scan
+    * that never saw them — but a compaction/truncate/delete
     * invalidates positions; abort loudly, retry). Returns the number
     * of rows deleted. */
   def delete(
@@ -88,7 +93,11 @@ object ManifestMaintenance {
     * keys insert. No data file is rewritten; [[compact]] later applies
     * the supersedes physically. The matching scan reads through current
     * dvs (a twice-upserted key supersedes the LATEST version of the
-    * row, never re-deletes the same position). Returns
+    * row, never re-deletes the same position). The positions and the
+    * inserted rows are staged by one Spark job into `_tmp-upsert-<id>`,
+    * through the writers SQL `MERGE` uses; the publish and its conflict
+    * rules are [[delete]]'s. `epoch` = Some((ledgerKey, epochId)) makes
+    * a replayed streaming micro-batch a no-op. Returns
     * (supersededRows, upsertedRows). */
   def upsert(
       spark: org.apache.spark.sql.SparkSession,
@@ -113,11 +122,11 @@ object ManifestMaintenance {
   /** Shared merge-on-read mutation: record `matchedPos` rows —
     * (_mf_file, _mf_pos, _mf_linehash) of rows to supersede — as new
     * delete vectors, optionally append `inserts` as new data files,
-    * and publish BOTH in one manifest version. Scans/writes run
-    * distributed OUTSIDE the lock; the publish takes `_commit.lock`
-    * and verifies the data-file set and dv list are unchanged since
-    * the scan (appends are fine; rewrites/deletes invalidate positions
-    * — abort loudly, retry). Returns (deletedRows, insertedRows). */
+    * and publish BOTH in one manifest version. Both are staged by one
+    * Spark job outside the lock; the commit verifies the scanned
+    * data files are still current and the dv list is unchanged
+    * (appends are fine; rewrites/deletes invalidate positions — abort
+    * loudly, retry). Returns (deletedRows, insertedRows). */
   private def mutate(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -130,104 +139,47 @@ object ManifestMaintenance {
       // streaming sink, for the DML verb
       epoch: Option[(String, Long)] = None): (Long, Long) = {
     val dir = new Path(path)
-    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
-    val before = ManifestRead.files(path, "manifest.json")
-    val beforeDvs = ManifestRead.dvs(path, "manifest.json")
-    val tag = java.util.UUID.randomUUID()
-    val scratchDv = s"$path/_tmp-$opName-dv-$tag"
-    val scratchIns = s"$path/_tmp-$opName-ins-$tag"
-    def cleanup(): Unit = {
-      fs.delete(new Path(scratchDv), true)
-      fs.delete(new Path(scratchIns), true)
+    // one copy of the session's Hadoop conf for the whole operation
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = ManifestFs.of(dir, conf)
+    val before = ManifestRead.text(fs, dir, "manifest.json")
+    val beforeFiles = ManifestRead.entriesOfText(before).map(_.file).toSet
+    val beforeDvs = ManifestRead.dvsOfText(before).map(_._1)
+    val id = java.util.UUID.randomUUID().toString
+    val stageName = s"_tmp-$opName-$id"
+    val (dvs, added) = ManifestStage(spark, conf, fs, path, stageName,
+      Some(matchedPos.queryExecution.toRdd),
+      inserts.map(df => (df.queryExecution.toRdd, df.schema)))
+    val deleted = dvs.map(_.rows).sum
+    val inserted = added.map(_.rows).sum
+    val stageDir = new Path(dir, stageName)
+    if (deleted == 0 && inserted == 0) {
+      fs.delete(stageDir, true)
+      return (0L, 0L)
     }
-    try {
-      // one staged dv file per task that matched anything
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val dvParts = matchedPos.queryExecution.toRdd.mapPartitions { it =>
-        val stage = new Path(scratchDv)
-        val w = new ManifestDvWriter(ManifestFs.of(stage, conf.value), stage,
-          s"dvstage-${java.util.UUID.randomUUID()}.csv")
-        try it.foreach(r =>
-          w.add(r.getUTF8String(0).toString, r.getLong(1), r.getLong(2)))
-        catch { case e: Throwable => w.abort(); throw e }
-        w.finish().iterator
-      }.collect().toSeq
-      val deleted = dvParts.map(_.rows).sum
-      val insEntries: Seq[ManifestEntry] = inserts match {
-        case None => Nil
-        case Some(df) =>
-          df.write.format("graft.sources.ManifestSink")
-            .option("path", scratchIns).mode("append").save()
-          readEntries(fs, new Path(scratchIns, "manifest.json"))
-            .filter(_.rows > 0)
-      }
-      val inserted = insEntries.map(_.rows).sum
-      if (deleted == 0 && inserted == 0) { cleanup(); return (0L, 0L) }
-      // ---- publish under the commit lock (shared ManifestLock
-      // protocol: stale takeover + ownership re-verify)
-      try ManifestLock.withLock(fs, dir, s"$opName-$tag",
-        "ManifestMaintenance") {
-        // EPOCH GUARD first (streaming CDC apply): a replayed epoch's
-        // rows are already merged — its scratch output is discarded
-        // BEFORE the staleness check (the replay's positions are
-        // legitimately stale against the post-commit state)
-        val lockTxt = ManifestRead.manifestText(path, "manifest.json")
-        val prevEpochs = ManifestRead.streamEpochs(lockTxt)
-        val isReplay = epoch.exists { case (qid, e) =>
-          prevEpochs.get(qid).exists(_ >= e)
-        }
-        if (isReplay) { cleanup(); return (0L, 0L) }
-        val now = ManifestRead.files(path, "manifest.json")
-        val nowDvs = ManifestRead.dvs(path, "manifest.json")
-        if (!before.map(_._1).toSet.subsetOf(now.map(_._1).toSet) ||
-          nowDvs.map(_._1) != beforeDvs.map(_._1))
+    val published = ManifestCommit(fs, dir, id, "ManifestMaintenance",
+      Some(stageDir)) { snap =>
+      // EPOCH GUARD first (streaming CDC apply): a replayed epoch's rows
+      // are already merged — its staged files are discarded BEFORE the
+      // staleness check (the replay's positions are legitimately stale
+      // against the post-commit state)
+      if (epoch.exists { case (q, e) => snap.epochs.get(q).exists(_ >= e) })
+        None
+      else {
+        if (!beforeFiles.subsetOf(snap.entries.map(_.file).toSet) ||
+          snap.dvs.map(_._1) != beforeDvs)
           throw new IllegalStateException(
             s"ManifestMaintenance: concurrent rewrite/delete changed " +
               s"$path during the $opName scan — positions are stale; retry")
-        // move position files in under dv- names, insert files as-is
-        // (task-uuid names can't collide with committed files)
-        val movedDvs = dvParts.zipWithIndex.map { case (c, i) =>
-          val dvName = s"dv-$tag-$i.csv"
-          if (!fs.rename(new Path(s"$scratchDv/${c.file}"), new Path(dir, dvName)))
-            throw new java.io.IOException(
-              s"ManifestMaintenance: failed to move delete vector ${c.file}")
-          (dvName, c.rows, c.checksum)
-        }
-        insEntries.foreach { e =>
-          if (!fs.rename(new Path(s"$scratchIns/${e.file}"), new Path(dir, e.file)))
-            throw new java.io.IOException(
-              s"ManifestMaintenance: failed to move inserted file ${e.file}")
-        }
-        val allDvs = nowDvs ++ movedDvs
-        // carry the table's entries forward VERBATIM (cols/stats
-        // included — file skipping must survive DML) + the inserts'
-        // own sink-written entries
-        val nowEntries = ManifestRead.entriesOfText(lockTxt)
-        val dataEntries = (nowEntries ++ insEntries)
-          .sortBy(_.file).map(ManifestRead.render)
-        ManifestFs.publish(fs, dir, ManifestRead.latestVersion(path) + 1,
-          s"""{"total_rows":${now.map(_._2).sum + inserted},""" +
-            s""""files":${dataEntries.mkString("[", ",", "]")},""" +
-            s""""deletes":${
-              allDvs.sortBy(_._1).map { case (n, r, c) =>
-                s"""{"dv":"$n","rows":$r,"checksum":$c}"""
-              }.mkString("[", ",", "]")}""" +
-            // a DML commit must not lose the streaming exactly-once
-            // ledger, and a CDC-apply commit advances its own entry
-            ManifestRead.renderEpochs(
-              prevEpochs ++ epoch.map { case (q, e) => q -> e }) +
-            "}", "ManifestMaintenance")
-        cleanup()
-        (deleted, inserted)
-      } catch { case e: Throwable =>
-        cleanup()
-        throw e
+        // the table's entries carry forward VERBATIM (cols/stats
+        // included — file skipping must survive DML); a DML commit
+        // keeps the streaming exactly-once ledger, and a CDC-apply
+        // commit advances its own entry
+        Some(ManifestCommit.Change(snap.entries, snap.dvs,
+          snap.epochs ++ epoch, added, dvs))
       }
-    } catch { case e: Throwable =>
-      cleanup()
-      throw e
     }
+    if (published) (deleted, inserted) else (0L, 0L)
   }
 
   /** CDC CHANGE FEED between two committed versions (the
@@ -256,17 +208,23 @@ object ManifestMaintenance {
     import org.apache.spark.sql.functions._
     val cols = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
       .fieldNames.toSeq
-    var prevFiles = ManifestRead.files(path, s"manifest-v$fromV.json")
-      .map(_._1).toSet
-    var prevDvs = ManifestRead.dvs(path, s"manifest-v$fromV.json")
-      .map(_._1).toSet
+    val fs = ManifestRead.fsFor(path)
+    val dir = new Path(path)
+    // (data files, dv files) of one version, from one read
+    def names(m: String): (Seq[String], Seq[String]) = {
+      val txt = ManifestRead.text(fs, dir, m)
+      (ManifestRead.entriesOfText(txt).map(_.file),
+        ManifestRead.dvsOfText(txt).map(_._1))
+    }
+    val (fromFiles, fromDvs) = names(s"manifest-v$fromV.json")
+    var prevFiles = fromFiles.toSet
+    var prevDvs = fromDvs.toSet
     val insertsByV = Seq.newBuilder[(Long, Seq[String])]
     val dvsByV = Seq.newBuilder[(Long, Seq[String])]
     ((fromV + 1) to toV).foreach { v =>
       val m = s"manifest-v$v.json"
-      val cur = ManifestRead.files(path, m).map(_._1)
-      val curDvs = ManifestRead.dvs(path, m).map(_._1)
-      if (!ManifestRead.isCompaction(path, m)) {
+      val (cur, curDvs) = names(m)
+      if (!ManifestRead.isCompaction(fs, dir, m)) {
         val nf = cur.filterNot(prevFiles)
         if (nf.nonEmpty) insertsByV += ((v, nf))
       }
@@ -283,8 +241,8 @@ object ManifestMaintenance {
         .option("skipdvs", "true")
       (if (withMeta) r.option("metadata", "true") else r).load()
     }
-    val insertDfs = insertsByV.result().map { case (v, fs) =>
-      readFiles(v, fs, withMeta = false)
+    val insertDfs = insertsByV.result().map { case (v, files) =>
+      readFiles(v, files, withMeta = false)
         .select(lit("insert").as("op") +: lit(v).as("version") +:
           cols.map(col): _*)
     }
@@ -321,9 +279,10 @@ object ManifestMaintenance {
     * the CURRENT snapshot's data files into size-bounded groups
     * (first-fit decreasing; budget = `targetBytes`, or total size /
     * `targetFiles` when unset), rewrites each group with its own task
-    * through the DSv2 source+sink pair (same order-independent
-    * checksums; pending delete vectors are applied —
-    * and consumed — by the rewrite), and publishes a new manifest
+    * — the DSv2 source reads it, the sink's writer stages it into
+    * `_compact-<id>`, all groups in one Spark job (same
+    * order-independent checksums; pending delete vectors are applied —
+    * and consumed — by the rewrite) — and publishes a new manifest
     * version listing ONLY the compacted files. One task never rewrites
     * more than one group, so compaction parallelism scales with the
     * table instead of collapsing to a single funnel. Old part files
@@ -332,9 +291,11 @@ object ManifestMaintenance {
     * [[expireSnapshots]] + [[removeOrphans]] reclaim them.
     *
     * Safety: the distributed rewrite runs OUTSIDE the lock (it can be
-    * long); the publish step takes `_commit.lock` and re-reads the
-    * manifest — if a concurrent append changed the file set since the
-    * rewrite began, it aborts loudly (optimistic concurrency, retry).
+    * long); the publish runs through the one commit step
+    * ([[ManifestCommit]]), which re-reads the manifest under
+    * `_commit.lock` — if a concurrent commit changed the file set or
+    * the dv list since the rewrite began, it aborts loudly (optimistic
+    * concurrency, retry).
     * Conservation guard: the sum of per-file checksums and row counts
     * is invariant under a pure rewrite (checksums are order-independent
     * sums of row-line hashes), so any lost/duplicated/altered row
@@ -352,9 +313,10 @@ object ManifestMaintenance {
     * instead of just merging small files. The conservation guard is
     * unchanged: per-file checksums are order-independent sums of row
     * hashes, so their global sum is invariant under any re-clustering.
-    * (The bucket writes run one filtered pass per bucket over a pinned
-    * localCheckpoint; a range-exchange single-pass write would trade
-    * that for sampled, nondeterministic boundaries.)
+    * (The bucket writes are one single-partition filtered pass per
+    * bucket over a pinned localCheckpoint, all tasks of one job; a
+    * range-exchange single-pass write would trade that for sampled,
+    * nondeterministic boundaries.)
     *
     * Returns (filesBefore, filesAfter). */
   def compact(
@@ -363,9 +325,11 @@ object ManifestMaintenance {
       targetBytes: Long = 0L, clusterBy: Seq[String] = Nil): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val dir = new Path(path)
-    val fs = ManifestFs.of(dir, spark.sessionState.newHadoopConf())
-    val before = ManifestRead.files(path, "manifest.json")
-    val beforeDvs = ManifestRead.dvs(path, "manifest.json")
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = ManifestFs.of(dir, conf)
+    val beforeText = ManifestRead.text(fs, dir, "manifest.json")
+    val before = ManifestRead.entriesOfText(beforeText).map(e => (e.file, e.rows))
+    val beforeDvs = ManifestRead.dvsOfText(beforeText)
     // with delete vectors pending, compaction must run even at the
     // target file count — it is what applies the deletes physically;
     // a layout request likewise always rewrites (re-clustering IS the
@@ -399,15 +363,16 @@ object ManifestMaintenance {
     val groups = bins.map(_._1.toSeq).toSeq
     if (groups.length == before.length && beforeDvs.isEmpty && clusterBy.isEmpty)
       return (before.length, before.length) // nothing to merge
-    // distributed rewrite into a scratch manifest dir: the sink's own
-    // writer produces the part files AND their (rows, checksum) entries
-    val scratch = s"$path/_compact-${java.util.UUID.randomUUID()}"
-    if (clusterBy.isEmpty) {
-      spark.read.format("graft.sources.ManifestSource")
+    // distributed rewrite: ONE Spark job stages one data file per group
+    // (or layout bucket) into `_compact-<id>` through the sink's writer,
+    // which records each file's (rows, checksum) entry
+    val id = java.util.UUID.randomUUID().toString
+    val stageName = s"_compact-$id"
+    val (toWrite, schema) = if (clusterBy.isEmpty) {
+      val df = spark.read.format("graft.sources.ManifestSource")
         .schema(schemaDdl).option("path", path)
         .option("groups", groups.map(_.mkString(",")).mkString(";")).load()
-        .write.format("graft.sources.ManifestSink")
-        .option("path", scratch).mode("append").save()
+      (df.queryExecution.toRdd, df.schema)
     } else {
       import org.apache.spark.sql.functions.{col, expr}
       // layout rewrite: exact-ntile buckets over (clusterBy, all
@@ -426,88 +391,58 @@ object ManifestMaintenance {
           .otherwise(expr(
             s"CAST($m + (__rk - 1 - $cut) div ${math.max(q, 1L)} AS INT)")))
         .localCheckpoint()
-      (0L until k).foreach { b =>
-        bucketed.filter(col("__b") === b).drop("__rk", "__b")
-          .coalesce(1)
-          .write.format("graft.sources.ManifestSink")
-          .option("path", scratch).mode("append").save()
-      }
+      // one single-partition filtered pass per bucket, all in one job
+      val buckets = (0L until k).map(b =>
+        bucketed.filter(col("__b") === b).drop("__rk", "__b").coalesce(1))
+      (spark.sparkContext.union(buckets.map(_.queryExecution.toRdd)),
+        buckets.head.schema)
     }
-    val compactedEntries = readEntries(fs, new Path(scratch, "manifest.json"))
-    val compacted = compactedEntries.map(e => (e.file, e.rows))
-    val compactedChecksums =
-      compactedEntries.map(e => e.file -> e.checksum).toMap
-    // ---- publish under the commit lock (shared ManifestLock
-    // protocol: stale takeover + ownership re-verify)
-    try ManifestLock.withLock(fs, dir,
-      s"compact-${java.util.UUID.randomUUID()}", "ManifestMaintenance") {
-      val now = ManifestRead.files(path, "manifest.json")
-      val nowDvs = ManifestRead.dvs(path, "manifest.json")
-      if (now.map(_._1).toSet != before.map(_._1).toSet ||
-        nowDvs.map(_._1) != beforeDvs.map(_._1)) {
-        fs.delete(new Path(scratch), true)
+    val (_, compacted) = ManifestStage(spark, conf, fs, path, stageName, None,
+      Some((toWrite, schema)))
+    // ---- publish through the one commit step (ManifestCommit)
+    ManifestCommit(fs, dir, s"compact-$id", "ManifestMaintenance",
+      Some(new Path(dir, stageName))) { snap =>
+      if (snap.entries.map(_.file).toSet != before.map(_._1).toSet ||
+        snap.dvs.map(_._1) != beforeDvs.map(_._1))
         throw new IllegalStateException(
           s"ManifestMaintenance: concurrent commit changed $path during " +
             "compaction — rewrite is stale; retry")
-      }
-      val beforeChecksums = readChecksums(fs, new Path(dir, "manifest.json"))
       // Conservation, NET of pending deletes: a pure rewrite preserves
       // every surviving row, so rows must match gross − deleted and the
       // order-independent checksum must match the before-sum minus the
       // deleted rows' line hashes (recorded per-row in the dvs exactly
       // for this). With no dvs both reduce to strict equality.
-      val dvRows = nowDvs.map(_._2).sum
-      val dvHashSum = dvLineHashSum(fs, dir, nowDvs.map(_._1))
+      val rowsBefore = snap.entries.map(_.rows).sum
+      val dvRows = snap.dvs.map(_._2).sum
+      val dvHashSum = dvLineHashSum(fs, dir, snap.dvs.map(_._1))
+      val sumBefore = snap.entries.map(_.checksum).sum
+      val rowsAfter = compacted.map(_.rows).sum
+      val sumAfter = compacted.map(_.checksum).sum
       // The CHECKSUM leg of the guard holds only when every input file
       // shares the rewrite's column layout: rewriting an older-schema
       // file re-renders its lines (added columns materialize as empty
       // trailing fields), so line hashes legitimately change. The ROW
       // conservation leg always holds.
-      val schemaCols = org.apache.spark.sql.types.StructType
-        .fromDDL(schemaDdl).fieldNames.mkString(",")
-      val homogeneous = readEntries(fs, new Path(dir, "manifest.json"))
-        .forall(e => e.cols.forall(_ == schemaCols))
-      require(
-        now.map(_._2).sum - dvRows == compacted.map(_._2).sum &&
-          (!homogeneous || beforeChecksums.values.sum - dvHashSum ==
-            compactedChecksums.values.sum),
+      val schemaCols = StructType.fromDDL(schemaDdl).fieldNames.mkString(",")
+      val homogeneous = snap.entries.forall(e => e.cols.forall(_ == schemaCols))
+      require(rowsBefore - dvRows == rowsAfter &&
+        (!homogeneous || sumBefore - dvHashSum == sumAfter),
         s"ManifestMaintenance: compaction conservation check failed at " +
-          s"$path (rows ${now.map(_._2).sum} - $dvRows deleted -> " +
-          s"${compacted.map(_._2).sum}, " +
-          s"checksum ${beforeChecksums.values.sum} - $dvHashSum -> " +
-          s"${compactedChecksums.values.sum}) — aborting publish")
-      compacted.foreach { case (name, _) =>
-        if (!fs.rename(new Path(s"$scratch/$name"), new Path(dir, name)))
-          throw new java.io.IOException(
-            s"ManifestMaintenance: failed to move compacted file $name")
-      }
-      val entries = compactedEntries.sortBy(_.file)
-        .map(ManifestRead.render).mkString("[", ",", "]")
-      val total = compacted.map(_._2).sum
+          s"$path (rows $rowsBefore - $dvRows deleted -> $rowsAfter, " +
+          s"checksum $sumBefore - $dvHashSum -> $sumAfter) — aborting publish")
       // "compaction":true = a PURE REWRITE (dataChange=false in Delta
       // terms): the streaming tail must NOT re-emit these files as new
-      val body = s"""{"total_rows":$total,"compaction":true,""" +
-        s""""files":$entries""" +
-        ManifestRead.renderEpochs(ManifestRead.streamEpochs(
-          ManifestRead.manifestText(path, "manifest.json"))) + "}"
-      ManifestFs.publish(fs, dir, ManifestRead.latestVersion(path) + 1, body,
-        "ManifestMaintenance")
-      fs.delete(new Path(scratch), true)
-      (before.length, compacted.length)
-    } catch { case e: Throwable =>
-      // a failed publish must not strand the scratch dir; any files
-      // already moved in are unreferenced and removeOrphans reclaims
-      // them (the manifest was never swapped, so no reader sees them)
-      fs.delete(new Path(scratch), true)
-      throw e
+      Some(ManifestCommit.Change(Nil, Nil, snap.epochs, compacted,
+        compaction = true))
     }
+    (before.length, compacted.length)
   }
 
   /** Orphan-file cleanup (the remove_orphan_files analog): deletes
     * `part-*` data files and `dv-*` delete vectors referenced by NO surviving manifest — neither
     * the current one nor any retained `manifest-v{n}.json` — plus
     * crashed writers' `_tmp-*` staging dirs and crashed compactions'
-    * `_compact-*` scratch dirs older than 10 minutes.
+    * `_compact-*` staging dirs older than 10 minutes.
     * Runs under `_commit.lock`, so no committer is mid-publish while
     * files are judged; uncommitted in-flight data lives in `_tmp-*`
     * dirs (never as root `part-*`), so a live writer can't lose files.
@@ -525,9 +460,11 @@ object ManifestMaintenance {
         n == "manifest.json" || vRe.findFirstIn(n).contains(n))
       // both data files and delete vectors count as referenced while
       // ANY surviving manifest (current or retained history) lists them
-      val referenced = manifests.flatMap(m =>
-        ManifestRead.files(path, m).map(_._1) ++
-          ManifestRead.dvs(path, m).map(_._1)).toSet
+      val referenced = manifests.flatMap { m =>
+        val txt = ManifestRead.text(fs, dir, m)
+        ManifestRead.entriesOfText(txt).map(_.file) ++
+          ManifestRead.dvsOfText(txt).map(_._1)
+      }.toSet
       var removed = 0
       fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
@@ -539,8 +476,8 @@ object ManifestMaintenance {
           System.currentTimeMillis() - st.getModificationTime > 10 * 60 * 1000L) {
           // _compact-* : a hard-crashed compaction (killed before its
           // in-code catch ran) strands a full rewritten copy of the
-          // dataset in its scratch dir; a LIVE compaction never holds
-          // a scratch dir past its lock-protected publish, so the age
+          // dataset in its staging dir; a LIVE compaction never holds
+          // a staging dir past its lock-protected publish, so the age
           // threshold is safe
           fs.delete(st.getPath, true)
         }
@@ -569,24 +506,54 @@ object ManifestMaintenance {
     }
     sum
   }
+}
 
-  /** file -> checksum entries of one manifest. */
-  private def readChecksums(
-      fs: org.apache.hadoop.fs.FileSystem, mp: Path): Map[String, Long] =
-    readEntries(fs, mp).map(e => e.file -> e.checksum).toMap
+/** The one Spark job that stages maintenance DML's and compaction's
+  * files into `path/stageName`: each partition of `positions`
+  * ((_mf_file, _mf_pos, _mf_linehash) rows) becomes one delete-vector
+  * file through [[ManifestDvWriter]], and each partition of `rows` (with
+  * its schema) one data file through the sink's writer — the writers SQL
+  * `MERGE`/`UPDATE`/`DELETE` use, so bytes, checksums and line hashes are
+  * theirs. Returns (delete vectors, data files); a failed job drops the
+  * staging directory.
+  *
+  * The task function lives in this small object on purpose: Spark's
+  * closure cleaner parses the class file that defines a task function
+  * on every job, and [[ManifestMaintenance]]'s is large. One `runJob`
+  * over the union, not `mapPartitions` + `collect`, cleans only that one
+  * function. */
+private object ManifestStage {
+  def apply(
+      spark: org.apache.spark.sql.SparkSession,
+      hadoopConf: org.apache.hadoop.conf.Configuration, fs: FileSystem,
+      path: String, stageName: String,
+      positions: Option[RDD[InternalRow]],
+      rows: Option[(RDD[InternalRow], StructType)])
+    : (Seq[ManifestFileCommit], Seq[ManifestFileCommit]) = {
+    val conf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
+    val stageDir = s"$path/$stageName"
+    val writers = rows.map { case (_, schema) =>
+      new ManifestWriterFactory(path, stageName, schema, conf) }.orNull
+    val nDv = positions.fold(0)(_.getNumPartitions)
+    val input = spark.sparkContext.union(positions.toSeq ++ rows.map(_._1))
+    val staged = new Array[Seq[ManifestFileCommit]](input.getNumPartitions)
+    try spark.sparkContext.runJob(input,
+      (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) =>
+        if (ctx.partitionId() < nDv) dvFile(stageDir, conf.value, it)
+        else writers.writeAll(it),
+      staged.indices, (i: Int, files: Seq[ManifestFileCommit]) => staged(i) = files)
+    catch { case e: Throwable => fs.delete(new Path(stageDir), true); throw e }
+    (staged.take(nDv).flatten.toSeq, staged.drop(nDv).flatten.toSeq)
+  }
 
-  /** Full data-file entries of one manifest at an explicit fs path
-    * (scratch manifests live outside the table dir). */
-  private def readEntries(
-      fs: org.apache.hadoop.fs.FileSystem, mp: Path): Seq[ManifestEntry] = {
-    val in = fs.open(mp)
-    val txt = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    ManifestRead.entriesOfText(txt)
+  private def dvFile(stageDir: String, conf: org.apache.hadoop.conf.Configuration,
+      positions: Iterator[InternalRow]): Seq[ManifestFileCommit] = {
+    val dir = new Path(stageDir)
+    val w = new ManifestDvWriter(ManifestFs.of(dir, conf), dir,
+      s"dvstage-${java.util.UUID.randomUUID()}.csv")
+    try positions.foreach(r =>
+      w.add(r.getUTF8String(0).toString, r.getLong(1), r.getLong(2)))
+    catch { case e: Throwable => w.abort(); throw e }
+    w.finish().toSeq
   }
 }

@@ -7,6 +7,7 @@ import org.apache.parquet.column.ColumnReader
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -56,7 +57,12 @@ private[sources] final class ManifestParquetBatchReader(
     val b = HadoopReadOptions.builder(conf, file)
       .usePageChecksumVerification(true)
     range.foreach { case (s, e) => b.withRange(s, e) }
-    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), b.build())
+    // a local split is read straight through java.nio, as ManifestFs
+    // writes it (no checksummed LocalFileSystem, no `.crc` probe)
+    val in =
+      if (ManifestFs.isLocal(file, conf)) new LocalInputFile(ManifestFs.localFile(file))
+      else HadoopInputFile.fromPath(file, conf)
+    ParquetFileReader.open(in, b.build())
   }
 
   private val projection: MessageType = {

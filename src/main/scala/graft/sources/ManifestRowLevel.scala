@@ -21,14 +21,16 @@ import org.apache.spark.util.SerializableConfiguration
   *    positional identity `(_mf_file, _mf_pos)`, metadata = the row's
   *    line hash) and/or an insert (the full new row);
   *  - deletes become POSITIONAL DELETE VECTOR files — the same
-  *    (dataFile, rowOrdinal, lineHash) lines [[ManifestMaintenance]]
-  *    writes, through the same [[ManifestDvWriter]] — and inserts stream through the sink's own fan-out
-  *    writer (identity-partitioned tables keep their SPJ layout);
-  *  - the driver commit publishes BOTH in ONE manifest version under
-  *    `_commit.lock`, so readers see the merge atomically; no data
-  *    file is ever rewritten ([[ManifestMaintenance.compact]] later
-  *    applies the vectors physically, conservation-checked via the
-  *    lineHash term each delete carries).
+  *    (dataFile, rowOrdinal, lineHash) lines [[ManifestMaintenance]]'s
+  *    DELETE/UPSERT stage, through the same [[ManifestDvWriter]] — and
+  *    inserts stream through the sink's own fan-out writer
+  *    (identity-partitioned tables keep their SPJ layout);
+  *  - the driver commit publishes BOTH in ONE manifest version through
+  *    the connector's one commit step ([[ManifestCommit]]), so readers
+  *    see the merge atomically; no data file is ever rewritten
+  *    ([[ManifestMaintenance.compact]] later applies the vectors
+  *    physically, conservation-checked via the lineHash term each
+  *    delete carries).
   *
   * SNAPSHOT ISOLATION with loud conflict aborts: the operation pins
   * the table's latest committed version at creation, scans exactly
@@ -102,11 +104,11 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
     new ManifestDeltaWriterFactory(dir, writeId, dataSchema, hadoopConf,
       partitionBy)
 
-  /** Atomic merge publish (mirrors ManifestMaintenance.mutate): verify
-    * the pinned snapshot is still the head, move delete vectors and
-    * insert files in, publish one manifest version carrying the
-    * previous entries verbatim (cols/stats/pv — file skipping and SPJ
-    * must survive DML) plus the new ones. */
+  /** Atomic merge publish through the one commit step
+    * ([[ManifestCommit]]): the pinned snapshot must still be the head;
+    * the delete vectors and insert files move in, and one manifest
+    * version carries the previous entries verbatim (cols/stats/pv —
+    * file skipping and SPJ must survive DML) plus the new ones. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val table = new Path(dir)
     val fs = ManifestFs.of(table, hadoopConf.value)
@@ -120,62 +122,18 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
       fs.delete(tmp, true)
       return
     }
-    // same lock protocol as every other publisher (ManifestLock): a
-    // crashed driver's leftover lock is taken over after the staleness
-    // bound instead of permanently blocking all SQL DML on the table
-    try ManifestLock.withLock(fs, table, s"row-level-$writeId",
-      "ManifestRowLevel") {
+    ManifestCommit(fs, table, writeId, "ManifestRowLevel", Some(tmp)) { snap =>
       // snapshot-isolation conflict check: ANY commit since this
       // operation's scan snapshot invalidates it — an append's rows
       // escaped the merge condition, a compaction/delete moved row
       // positions. Abort loudly; the statement can simply be retried.
-      val headV = ManifestRead.latestVersion(dir)
-      if (headV != snapshotV)
+      if (snap.version != snapshotV)
         throw new IllegalStateException(
           s"ManifestRowLevel: concurrent commit at $dir (snapshot v$snapshotV " +
-            s"is no longer the head v$headV) — the merge read a stale " +
-            "snapshot; retry the statement")
-      val (prevEntries, prevDvs, prevEpochs) =
-        if (snapshotV == 0) (Nil, Nil, Map.empty[String, Long])
-        else {
-          val txt = ManifestRead.manifestText(dir, "manifest.json")
-          (ManifestRead.entriesOfText(txt), ManifestRead.dvsOfText(txt),
-            ManifestRead.streamEpochs(txt))
-        }
-      // move winners into place: insert files keep their unique names,
-      // dv stage files take committed dv- names
-      dataCommits.foreach { c =>
-        if (!fs.rename(new Path(tmp, c.file), new Path(table, c.file)))
-          throw new java.io.IOException(
-            s"ManifestRowLevel: failed to move insert file ${c.file}")
-      }
-      val movedDvs = dvCommits.zipWithIndex.map { case (c, i) =>
-        val dvName = s"dv-$writeId-$i.csv"
-        if (!fs.rename(new Path(tmp, c.file), new Path(table, dvName)))
-          throw new java.io.IOException(
-            s"ManifestRowLevel: failed to move delete vector ${c.file}")
-        (dvName, c.rows, c.checksum)
-      }
-      val allEntries = prevEntries ++ dataCommits.map(c =>
-        ManifestEntry(c.file, c.rows, c.checksum,
-          Option(c.cols).filter(_.nonEmpty),
-          Option(c.stats).filter(_.nonEmpty), c.pv, c.pt,
-          Some(c.bytes).filter(_ >= 0), Option(c.rgs).filter(_.nonEmpty),
-          Option(c.pvs).filter(_.nonEmpty), Option(c.pts).filter(_.nonEmpty)))
-      val allDvs = prevDvs ++ movedDvs
-      val body = s"""{"total_rows":${allEntries.map(_.rows).sum},""" +
-        s""""files":${allEntries.sortBy(_.file).map(ManifestRead.render)
-          .mkString("[", ",", "]")}""" +
-        (if (allDvs.isEmpty) ""
-         else allDvs.sortBy(_._1).map { case (n, r, c) =>
-           s"""{"dv":"$n","rows":$r,"checksum":$c}"""
-         }.mkString(""","deletes":[""", ",", "]")) +
-        ManifestRead.renderEpochs(prevEpochs) + "}"
-      ManifestFs.publish(fs, table, snapshotV + 1, body, "ManifestRowLevel")
-      fs.delete(tmp, true)
-    } catch { case e: Throwable =>
-      fs.delete(tmp, true)
-      throw e
+            s"is no longer the head v${snap.version}) — the merge read a " +
+            "stale snapshot; retry the statement")
+      Some(ManifestCommit.Change(snap.entries, snap.dvs, snap.epochs,
+        dataCommits, dvCommits))
     }
   }
 
@@ -203,8 +161,8 @@ private class ManifestDeltaWriterFactory(dir: String, writeId: String,
       // string bounds, identity-partition pv fan-out — everything a
       // plain INSERT gets, updates get too)
       private val insertWriter =
-        new ManifestWriterFactory(dir, writeId, dataSchema, hadoopConf,
-          partitionBy).createWriter(partitionId, taskId)
+        new ManifestWriterFactory(dir, s"_tmp-$writeId", dataSchema,
+          hadoopConf, partitionBy).createWriter(partitionId, taskId)
       // one positional delete-vector stage file per task
       private val dv = new ManifestDvWriter(
         ManifestFs.of(new Path(dir), hadoopConf.value),
@@ -231,7 +189,7 @@ private class ManifestDeltaWriterFactory(dir: String, writeId: String,
       override def commit(): WriterCommitMessage = {
         val dvFile = dv.finish()
         val dataFiles = insertWriter.commit() match {
-          case ManifestCommit(files) => files
+          case ManifestWriteMessage(files) => files
           case other => throw new IllegalStateException(
             s"ManifestRowLevel: unexpected insert commit $other")
         }

@@ -23,10 +23,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    speculation produce distinct temp files, never clobbering each
   *    other, and concurrent jobs never share a temp dir;
   *  - the driver's [[BatchWrite.commit]] runs once with the messages of
-  *    the WINNING task attempts only: it moves exactly those files into
-  *    place and writes `manifest.json` (per-file rows/checksum + total)
-  *    LAST, so a reader that requires the manifest sees either the
-  *    complete committed write or nothing;
+  *    the WINNING task attempts only and hands exactly those files to
+  *    the connector's one commit step, [[ManifestCommit]]: under
+  *    `_commit.lock` it moves them into place and publishes
+  *    `manifest.json` (per-file rows/checksum + total) LAST, so a
+  *    reader that requires the manifest sees either the complete
+  *    committed write or nothing; the temp dir goes with the commit;
   *  - abort deletes the job's temp dir — losers and failures leave no
   *    visible state.
   *
@@ -34,17 +36,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[ManifestFs]], so the path may be any Hadoop-visible filesystem
   * (file:/, hdfs:/, s3a:/ …) shared by driver and executors — executors
   * resolve the filesystem from the cluster's default Hadoop
-  * configuration. Concurrent appends to the
-  * same path are serialized by an exclusive `_commit.lock` created
-  * atomically (create-no-overwrite) around the manifest
-  * read-merge-write; a second committer arriving while the lock is
-  * held FAILS LOUDLY rather than silently losing the other commit's
-  * manifest entries. The lock body records (timestamp, writeId); a lock
-  * older than 10 minutes — a crashed driver, since commits take
-  * seconds — is broken automatically so the path self-heals.
-  * The manifest is published by [[ManifestFs.publish]]: never torn,
-  * and on local paths never missing either (elsewhere a reader racing
-  * a commit can find it missing for an instant).
+  * configuration. Concurrent commits to the same path (this sink, SQL
+  * DML, maintenance) serialize on [[ManifestLock]]: a second committer
+  * arriving while the lock is held FAILS LOUDLY rather than silently
+  * losing the other commit's manifest entries, and a crashed driver's
+  * lock is taken over after 10 minutes. The manifest is published by
+  * [[ManifestFs.publish]]: never torn, and on local paths never missing
+  * either (elsewhere a reader racing a commit can find it missing for
+  * an instant).
   *
   * Data files are parquet, the connector's only data-file format
   * ([[ManifestParquet]]); a `format` option asking for anything else
@@ -135,20 +134,7 @@ private[graft] object ManifestSink {
   private[graft] def verifyLockOwnership(
       f: FileSystem, lock: Path, myBody: String, path: String): Unit = {
     val onDisk =
-      try {
-        val in = f.open(lock)
-        try {
-          // loop to fill the window — a short read (legal for any
-          // InputStream) would truncate the body and fail the
-          // ownership compare in the SAFE direction, but fix it
-          // anyway so a real owner never aborts spuriously
-          val buf = new Array[Byte](256)
-          var off = 0
-          var n = in.read(buf, 0, buf.length)
-          while (n > 0) { off += n; n = in.read(buf, off, buf.length - off) }
-          if (off > 0) new String(buf, 0, off, "UTF-8") else ""
-        } finally in.close()
-      } catch { case _: java.io.IOException => "" }
+      try readFully(f.open(lock)) catch { case _: java.io.IOException => "" }
     if (onDisk != myBody)
       throw new IllegalStateException(
         s"ManifestSink: lost the commit lock at $path to a concurrent " +
@@ -164,21 +150,27 @@ private[graft] object ManifestSink {
         s"$what: data files are parquet only; format '$f' is not supported")
     }
 
-  private[graft] def readFully(in: java.io.InputStream): String = {
+  /** The first `limit` bytes of `in` (all of it by default) as UTF-8;
+    * closes `in`. Loops: a read may legally return fewer bytes than
+    * asked (common on HDFS/S3), and a short read must never truncate. */
+  private[graft] def readFully(in: java.io.InputStream,
+      limit: Int = Int.MaxValue): String =
     try {
-      val buf = new Array[Byte](256)
-      var off = 0
-      var n = in.read(buf, 0, buf.length)
-      while (n > 0) { off += n; n = in.read(buf, off, buf.length - off) }
-      if (off > 0) new String(buf, 0, off, "UTF-8") else ""
+      val buf = new java.io.ByteArrayOutputStream()
+      val chunk = new Array[Byte](8192)
+      var n = 0
+      while (buf.size < limit &&
+        { n = in.read(chunk, 0, math.min(chunk.length, limit - buf.size)); n > 0 })
+        buf.write(chunk, 0, n)
+      buf.toString("UTF-8")
     } finally in.close()
-  }
 }
 
-/** Exclusive `_commit.lock` acquisition shared by EVERY manifest
-  * publisher — batch/streaming sink, row-level DML, maintenance. One
-  * protocol everywhere: create-exclusive with an `(epoch-millis owner)`
-  * body; a lock older than the 10-minute staleness bound (a crashed
+/** Exclusive `_commit.lock` acquisition: [[ManifestCommit]] takes it
+  * for every manifest publisher (batch/streaming sink, row-level DML,
+  * maintenance DML, compaction); snapshot expiry, the orphan sweep and
+  * the catalog's ALTER TABLE take it directly. One protocol everywhere:
+  * create-exclusive with an `(epoch-millis owner)` body; a lock older than the 10-minute staleness bound (a crashed
   * driver — commits take seconds, not minutes) is broken automatically
   * via an atomic RENAME to an owner-unique tombstone (of two committers
   * that both read the same stale body, exactly one wins the rename and
@@ -301,7 +293,7 @@ private[graft] case class ManifestFileCommit(file: String, rows: Long,
     // and transform list ("" = single or none; see ManifestFileWriter)
     pvs: String = "", pts: String = "")
 
-private case class ManifestCommit(files: Seq[ManifestFileCommit])
+private case class ManifestWriteMessage(files: Seq[ManifestFileCommit])
   extends WriterCommitMessage
 
 /** Streaming face of the sink: same commit protocol, plus the epoch
@@ -353,7 +345,8 @@ private class ManifestBatchWrite(path: String, schema: StructType,
     ManifestFs.of(new Path(path), hadoopConf.value)
 
   private[sources] def writerFactory: ManifestWriterFactory =
-    new ManifestWriterFactory(path, writeId, schema, hadoopConf, partitionBy)
+    new ManifestWriterFactory(path, s"_tmp-$writeId", schema, hadoopConf,
+      partitionBy)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = writerFactory
@@ -361,7 +354,8 @@ private class ManifestBatchWrite(path: String, schema: StructType,
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitCore(messages, s"_tmp-$writeId", None)
 
-  /** Shared commit path. `epoch` = Some((queryId, epochId)) for a
+  /** Shared commit path, through the one commit step
+    * ([[ManifestCommit]]). `epoch` = Some((queryId, epochId)) for a
     * streaming micro-batch commit: the previous manifest's
     * `streamEpochs` entry decides idempotence (an epoch at or below
     * the last committed one is a checkpoint replay — its files are
@@ -370,98 +364,31 @@ private class ManifestBatchWrite(path: String, schema: StructType,
       tmpDirName: String, epoch: Option[(String, Long)]): Unit = {
     val f = fs()
     val dir = new Path(path)
-    // racing committers serialize on `_commit.lock` — exclusive create,
-    // automatic stale-lock takeover and ownership re-verify all live in
-    // ManifestLock (the one protocol shared with row-level DML and
-    // maintenance publishes)
-    ManifestLock.withLock(f, dir, writeId, "ManifestSink") {
-      val manifestPath = new Path(dir, "manifest.json")
-      // version numbering is monotonic ACROSS truncates (computed
-      // before the truncate deletes the old version manifests): a
-      // truncate expires old snapshots, it never recycles their ids
-      val vRe = """manifest-v(\d+)\.json""".r
-      val maxExistingV = f.listStatus(dir).map(_.getPath.getName).collect {
-        case vRe(v) => v.toLong
-      }.foldLeft(0L)(math.max)
-      // Overwrite (SupportsTruncate): previous committed files vanish
-      // with the old manifest. Append: the old manifest's entries are
-      // carried into the new one, so the manifest ALWAYS describes the
-      // full committed content — readers never need to list the dir.
-      val previous: (Seq[ManifestEntry], Seq[(String, Long, Long)], Map[String, Long]) =
-        if (truncate) {
-          // truncate purges HISTORY too (the expire-snapshots analog):
-          // version manifests reference the deleted part files, so they
-          // must die with them — time travel spans appends since the
-          // last truncate. Stream epoch records die too: a truncated
-          // table is a new table.
-          f.listStatus(dir).filter { st =>
-            val n = st.getPath.getName
-            n.startsWith("part-") || n.startsWith("dv-") ||
-              n == "manifest.json" ||
-              (n.startsWith("manifest-v") && n.endsWith(".json"))
-          }.foreach(st => f.delete(st.getPath, false))
-          (Nil, Nil, Map.empty)
-        } else if (!f.exists(manifestPath)) (Nil, Nil, Map.empty)
-        else {
-          val in = f.open(manifestPath)
-          val txt = try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8192)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            buf.toString("UTF-8")
-          } finally in.close()
-          val dataEntries = ManifestRead.entriesOfText(txt)
-          // delete vectors survive appends (merge-on-read: only a
-          // compaction consumes them, only a truncate purges them)
-          val dvEntries =
-            """\{"dv":"([^"]+)","rows":(\d+),"checksum":(-?\d+)\}""".r
-              .findAllMatchIn(txt)
-              .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong))
-              .toSeq
-          (dataEntries, dvEntries, ManifestRead.streamEpochs(txt))
-        }
-      val (prevData, prevDvs, prevEpochs) = previous
-      val commits =
-        messages.toSeq.flatMap(_.asInstanceOf[ManifestCommit].files)
-      val tmpDir = new Path(dir, tmpDirName)
-      // EPOCH GUARD (streaming exactly-once): an epoch at or below the
-      // last committed one for this query is a checkpoint replay — the
-      // rows are already in the table; drop the replay's files and
-      // publish nothing.
-      val isReplay = epoch.exists { case (qid, e) =>
-        prevEpochs.get(qid).exists(_ >= e)
-      }
-      if (isReplay) {
-        f.delete(tmpDir, true)
-        return
-      }
-      commits.foreach { c =>
-        if (!f.rename(new Path(tmpDir, c.file), new Path(dir, c.file)))
-          throw new java.io.IOException(
-            s"ManifestSink: failed to move committed file ${c.file} into $path")
-      }
-      val all = prevData ++ commits.map(c => ManifestEntry(c.file, c.rows,
-        c.checksum, Option(c.cols).filter(_.nonEmpty),
-        Option(c.stats).filter(_.nonEmpty), c.pv, c.pt,
-        Some(c.bytes).filter(_ >= 0), Option(c.rgs).filter(_.nonEmpty),
-        Option(c.pvs).filter(_.nonEmpty), Option(c.pts).filter(_.nonEmpty)))
-      val newEpochs = prevEpochs ++ epoch.map { case (qid, e) => qid -> e }
-      val manifest = all.sortBy(_.file).map(ManifestRead.render)
-        .mkString("[", ",", "]") + (
-        if (prevDvs.isEmpty) ""
-        else prevDvs.sortBy(_._1).map { case (fn, r, cs) =>
-          s"""{"dv":"$fn","rows":$r,"checksum":$cs}"""
-        }.mkString(""","deletes":[""", ",", "]")) +
-        ManifestRead.renderEpochs(newEpochs)
-      val total = all.map(_.rows).sum
-      // snapshot history: every commit publishes the current manifest
-      // AND an IMMUTABLE numbered one (time travel — ManifestSource
-      // option "version"), numbered under the commit lock
-      ManifestFs.publish(f, dir, maxExistingV + 1,
-        s"""{"total_rows":$total,"files":$manifest}""", "ManifestSink")
-      // losers' temp files (failed/speculative attempts) die with the dir
-      f.delete(tmpDir, true)
+    val files =
+      messages.toSeq.flatMap(_.asInstanceOf[ManifestWriteMessage].files)
+    ManifestCommit(f, dir, writeId, "ManifestSink",
+      Some(new Path(dir, tmpDirName))) { snap =>
+      if (epoch.exists { case (qid, e) => snap.epochs.get(qid).exists(_ >= e) })
+        None // a checkpoint replay: the rows are already in the table
+      else if (truncate) {
+        // Overwrite (SupportsTruncate): the previous files vanish, and
+        // HISTORY with them (the expire-snapshots analog) — version
+        // manifests reference the deleted part files. Stream epoch
+        // records die too: a truncated table is a new table. Version
+        // numbers stay monotonic across the truncate (the snapshot
+        // listed them before this purge).
+        f.listStatus(dir).filter { st =>
+          val n = st.getPath.getName
+          n.startsWith("part-") || n.startsWith("dv-") ||
+            n == "manifest.json" ||
+            (n.startsWith("manifest-v") && n.endsWith(".json"))
+        }.foreach(st => f.delete(st.getPath, false))
+        Some(ManifestCommit.Change(Nil, Nil, Map.empty, files))
+      } else
+        // append: every committed entry and delete vector carries
+        // forward, so the manifest always describes the full content
+        Some(ManifestCommit.Change(snap.entries, snap.dvs,
+          snap.epochs ++ epoch, files))
     }
   }
 
@@ -474,20 +401,34 @@ private class ManifestBatchWrite(path: String, schema: StructType,
   }
 }
 
-private[sources] class ManifestWriterFactory(path: String, writeId: String,
+/** The sink's data-file writers, staging into `path/stageName`. */
+private[sources] class ManifestWriterFactory(path: String, stageName: String,
     schema: StructType,
     hadoopConf: org.apache.spark.util.SerializableConfiguration,
     partitionBy: Option[String] = None)
   extends DataWriterFactory
   with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    createWriter(partitionId, taskId, s"_tmp-$writeId")
+    createWriter(partitionId, taskId, stageName)
 
   // streaming face: each EPOCH stages into its own temp dir, so a
   // micro-batch commit moves (and cleans) exactly its own files
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    createWriter(partitionId, taskId, s"_tmp-$writeId-$epochId")
+    createWriter(partitionId, taskId, s"$stageName-$epochId")
+
+  /** Writes all of `rows` in the calling task (one data file, or one
+    * per partition value) and returns their commits; on failure the
+    * task's files are deleted. */
+  def writeAll(rows: Iterator[InternalRow]): Seq[ManifestFileCommit] = {
+    val ctx = org.apache.spark.TaskContext.get()
+    val w = createWriter(ctx.partitionId(), ctx.taskAttemptId())
+    try {
+      rows.foreach(w.write)
+      w.commit().asInstanceOf[ManifestWriteMessage].files
+    } catch { case e: Throwable => w.abort(); throw e }
+    finally w.close()
+  }
 
   private def createWriter(partitionId: Int, taskId: Long,
       tmpDirName: String): DataWriter[InternalRow] =
@@ -566,7 +507,7 @@ private[sources] class ManifestWriterFactory(path: String, writeId: String,
       }
 
       override def commit(): WriterCommitMessage =
-        ManifestCommit(finished.toSeq ++ parts.values.map(_.finish()).toSeq)
+        ManifestWriteMessage(finished.toSeq ++ parts.values.map(_.finish()).toSeq)
 
       override def abort(): Unit = {
         parts.values.foreach(_.abort())

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -516,8 +516,6 @@ private[sources] class ManifestScan(
     // metadata calls per planning pass dwarf planning itself. The stat
     // fallback only fires for pre-round-15 manifests lacking "bytes",
     // and the filesystem handle is resolved lazily for the same reason.
-    lazy val fs = ManifestFs.of(new Path(path),
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     var bytes = 0L
     var rows = 0L
     kept.foreach { e =>
@@ -541,6 +539,12 @@ private[sources] class ManifestScan(
     s"ManifestScan PushedFilters: [${filters.mkString(", ")}], " +
       s"ReadSchema: ${readSchema().catalogString}"
 
+  // one copy of the session's Hadoop conf per Scan: the manifest read,
+  // the statistics fallback and the reader factory all use it
+  @transient private lazy val hadoopConf =
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+  @transient private lazy val fs = ManifestFs.of(new Path(path), hadoopConf)
+
   /** ONE manifest read per Scan: data entries and delete vectors of the
     * SAME committed snapshot (reading them separately could mix
     * snapshots across a concurrent commit — old file groups with new
@@ -553,8 +557,8 @@ private[sources] class ManifestScan(
       // a CURRENT read of a never-written table (catalog CREATE with
       // no INSERT yet) is legitimately EMPTY; an explicitly requested
       // version stays loud (expired by truncate, or never committed)
-      if (version.isEmpty) ManifestRead.currentTextOrEmpty(path)
-      else ManifestRead.manifestText(path, manifestName)
+      if (version.isEmpty) ManifestRead.currentTextOrEmpty(fs, new Path(path))
+      else ManifestRead.text(fs, new Path(path), manifestName)
     // parse-cached across scans (text equality validated) — a second
     // scan of an unchanged table re-reads the bytes but never re-parses
     val (entries, dvs) =
@@ -757,15 +761,13 @@ private[sources] class ManifestScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
     // scale gate (ManifestScan.ColumnarMinRows), decided per SCAN: Spark
     // requires a scan's partitions to be uniformly columnar or
     // row-based. Snapshot row counts come free from the parsed manifest.
     val columnar = snapshot._1.nonEmpty &&
       snapshot._1.iterator.map(_.rows).sum >= ManifestScan.ColumnarMinRows
     new ManifestReaderFactory(fullSchema, required,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      filters, metaCols, columnar)
+      new SerializableConfiguration(hadoopConf), filters, metaCols, columnar)
   }
 
   /** Streaming face: each micro-batch is the file-level DIFF between
@@ -983,7 +985,7 @@ private[graft] object ManifestRead {
 
   /** Full entries of one committed manifest. */
   def entries(path: String, manifestName: String): Seq[ManifestEntry] =
-    entriesOfText(text(path, manifestName))
+    entriesOfText(manifestText(path, manifestName))
 
   /** Per-query last-committed-epoch records (`"streamEpochs":{...}`) —
     * the streaming sink's exactly-once ledger. Empty when the table was
@@ -1006,10 +1008,10 @@ private[graft] object ManifestRead {
     else epochs.toSeq.sortBy(_._1).map { case (q, e) => s""""$q":$e""" }
       .mkString(""","streamEpochs":{""", ",", "}")
 
-  /** Full text of one committed manifest (for fields beyond the entry
-    * lists — e.g. the epoch ledger a maintenance publish must carry). */
+  /** Full text of one committed manifest, for a caller that reads just
+    * the one ([[text]] with a filesystem resolved for this call). */
   def manifestText(path: String, manifestName: String): String =
-    text(path, manifestName)
+    text(fsFor(path), new Path(path), manifestName)
 
   /** CURRENT-snapshot text with the commit swap window bridged: on
     * non-local schemes a committer publishes `manifest.json`
@@ -1020,13 +1022,13 @@ private[graft] object ManifestRead {
     * INSERT yet is the one legitimately-empty case); a table with
     * history retries briefly and then rethrows — the swap window
     * stays a loud failure, never a silent 0-row result. */
-  def currentTextOrEmpty(path: String): String = {
+  def currentTextOrEmpty(fs: FileSystem, dir: Path): String = {
     var attempt = 0
     while (true) {
-      try return manifestText(path, "manifest.json")
+      try return text(fs, dir, "manifest.json")
       catch {
         case e: java.io.FileNotFoundException =>
-          if (latestVersion(path) == 0L) return "" // provably never written
+          if (latestVersion(fs, dir) == 0L) return "" // provably never written
           attempt += 1
           if (attempt >= 20) throw e
           Thread.sleep(25L)
@@ -1051,38 +1053,29 @@ private[graft] object ManifestRead {
         m.group(7) == "true")
     }.toMap
 
-  /** Full text of one manifest, via the driver's Hadoop conf. Throws
-    * FileNotFoundException when the manifest is absent (never
-    * committed, or the version was expired by a truncate). */
-  private def text(path: String, manifestName: String): String = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(path)
-    val fs = ManifestFs.of(dir, conf)
+  /** The connector's filesystem for `path`, from one copy of the active
+    * session's Hadoop conf. A caller that reads several manifests
+    * resolves it once and passes it to the readers below. */
+  def fsFor(path: String): FileSystem = ManifestFs.of(new Path(path),
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+
+  /** Full text of one manifest. Throws FileNotFoundException when the
+    * manifest is absent (never committed, or the version was expired by
+    * a truncate). */
+  def text(fs: FileSystem, dir: Path, manifestName: String): String = {
     val mp = new Path(dir, manifestName)
     if (!fs.exists(mp))
       throw new java.io.FileNotFoundException(
-        s"ManifestSource: $manifestName not found at $path " +
+        s"ManifestSource: $manifestName not found at $dir " +
           "(expired by truncate, or never committed?)")
-    val in = fs.open(mp)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
+    ManifestSink.readFully(fs.open(mp))
   }
-
-  /** (file, rows) DATA-file entries of one manifest. */
-  def files(path: String, manifestName: String): Seq[(String, Long)] =
-    entries(path, manifestName).map(e => (e.file, e.rows))
 
   /** (dvFile, rows, checksum) DELETE-VECTOR entries of one manifest —
     * each dv file lists (dataFile, recordByteOffset, lineHash) rows of
     * deleted records. Empty for manifests without deletes. */
   def dvs(path: String, manifestName: String): Seq[(String, Long, Long)] =
-    dvsOfText(text(path, manifestName))
+    dvsOfText(manifestText(path, manifestName))
 
   /** Delete-vector entries parsed from an already-read manifest body
     * (for callers that must derive entries AND dvs from ONE snapshot
@@ -1096,24 +1089,10 @@ private[graft] object ManifestRead {
 
   /** True iff the named manifest carries the `"compaction":true` flag —
     * a pure rewrite whose files the streaming tail must not re-emit. */
-  def isCompaction(path: String, manifestName: String): Boolean = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
-    val mp = new Path(new Path(path), manifestName)
-    if (!fs.exists(mp)) return false
-    val in = fs.open(mp)
-    val head = try {
-      // InputStream.read may legally return fewer bytes than asked
-      // (common on HDFS/S3) — loop until the 256-byte window is full
-      // or EOF, else a short read could truncate before the
-      // "compaction":true token and misclassify a rewrite as an append.
-      val buf = new Array[Byte](256)
-      var off = 0
-      var n = in.read(buf, 0, buf.length)
-      while (n > 0) { off += n; n = in.read(buf, off, buf.length - off) }
-      if (off > 0) new String(buf, 0, off, "UTF-8") else ""
-    } finally in.close()
-    head.contains("\"compaction\":true")
+  def isCompaction(fs: FileSystem, dir: Path, manifestName: String): Boolean = {
+    val mp = new Path(dir, manifestName)
+    fs.exists(mp) &&
+      ManifestSink.readFully(fs.open(mp), 256).contains("\"compaction\":true")
   }
 
   /** Cross-scan cache of PARSED manifests. Every Scan used to regex-
@@ -1154,10 +1133,10 @@ private[graft] object ManifestRead {
   }
 
   /** Highest committed manifest version at `path` (0 = none). */
-  def latestVersion(path: String): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
-    val dir = new Path(path)
+  def latestVersion(path: String): Long =
+    latestVersion(fsFor(path), new Path(path))
+
+  def latestVersion(fs: FileSystem, dir: Path): Long = {
     if (!fs.exists(dir)) return 0L
     val vRe = """manifest-v(\d+)\.json""".r
     fs.listStatus(dir).map(_.getPath.getName).collect {
@@ -1201,9 +1180,14 @@ private class ManifestMicroBatchStream(
     // file (merge-on-read); rows deleted AFTER a file was already
     // emitted are not retracted — the append-stream contract (a delete
     // version adds no files, so it produces an empty micro-batch)
-    val dvFiles = ManifestRead.dvs(path, s"manifest-v$e.json").map(_._1)
+    val fs = ManifestRead.fsFor(path)
+    val dir = new Path(path)
+    def text(v: Long) = ManifestRead.text(fs, dir, s"manifest-v$v.json")
+    def files(v: Long) =
+      ManifestRead.entriesOfText(text(v)).map(x => (x.file, x.rows))
+    val dvFiles = ManifestRead.dvsOfText(text(e)).map(_._1)
     if (s == 0)
-      return ManifestRead.files(path, s"manifest-v$e.json")
+      return files(e)
         .map(f => ManifestFilePartition(s"$path/${f._1}", f._2,
           dvFiles = dvFiles): InputPartition)
         .toArray
@@ -1213,14 +1197,13 @@ private class ManifestMicroBatchStream(
     // terms) contributes NOTHING — its files carry rows the stream
     // already emitted, and the endpoint diff alone would re-emit the
     // whole dataset. A missing mid-range manifest (expired while the
-    // stream was down) throws in ManifestRead.files — fail loudly,
+    // stream was down) throws in ManifestRead.text — fail loudly,
     // never re-read rewritten data.
     val out = Seq.newBuilder[InputPartition]
-    var prev: Set[String] =
-      ManifestRead.files(path, s"manifest-v$s.json").map(_._1).toSet
+    var prev: Set[String] = files(s).map(_._1).toSet
     (s + 1) to e foreach { v =>
-      val cur = ManifestRead.files(path, s"manifest-v$v.json")
-      if (!ManifestRead.isCompaction(path, s"manifest-v$v.json"))
+      val cur = files(v)
+      if (!ManifestRead.isCompaction(fs, dir, s"manifest-v$v.json"))
         cur.filterNot(f => prev.contains(f._1)).foreach(f =>
           out += ManifestFilePartition(s"$path/${f._1}", f._2,
             dvFiles = dvFiles))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Name registry for manifest tables, giving the SQL surface a door to
   * the connector: `ManifestTables.register(spark, "events_mf", path,
@@ -40,10 +40,9 @@ object ManifestTables {
     * before `micros` (file modification time — the commit instant;
     * versions are committed sequentially under the table lock, so
     * mtime order and version order agree). 0 = nothing committed yet
-    * at that instant. */
-  def versionAtTimestamp(path: String, micros: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val fs = ManifestFs.of(new Path(path), spark.sessionState.newHadoopConf())
+    * at that instant. `fs` is the connector's filesystem for `path`
+    * ([[ManifestRead.fsFor]]). */
+  def versionAtTimestamp(fs: FileSystem, path: String, micros: Long): Long = {
     val dir = new Path(path)
     if (!fs.exists(dir)) return 0L
     val vRe = """manifest-v(\d+)\.json""".r

@@ -55,11 +55,21 @@ class ManifestStreamSinkSpec extends AnyFunSuite {
       .option("path", table).mode("append").save()
     // DML and compaction rebuild the manifest — ledger must survive both
     graft.sources.ManifestMaintenance.delete(spark, table, "k LONG", "k = 2")
+    graft.sources.ManifestMaintenance.upsert(spark, table, "k LONG", Seq("k"),
+      Seq(3L).toDF("k"))
     graft.sources.ManifestMaintenance.compact(spark, table, "k LONG")
     val ledger = ManifestRead.streamEpochs(
       ManifestRead.manifestText(table, "manifest.json"))
     assert(ledger == ledger0,
-      s"ledger changed across append/delete/compact: $ledger0 -> $ledger")
+      s"ledger changed across append/delete/upsert/compact: $ledger0 -> $ledger")
+    assert(readKs(table) == Seq(1L, 3L, 10L, 11L))
+    // an upsert tagged with an epoch the ledger already holds is a
+    // replay: it merges nothing and publishes no version
+    val (qid, e0) = ledger0.head
+    val vBefore = ManifestRead.latestVersion(table)
+    assert(graft.sources.ManifestMaintenance.upsert(spark, table, "k LONG",
+      Seq("k"), Seq(3L, 99L).toDF("k"), epoch = Some((qid, e0))) == ((0L, 0L)))
+    assert(ManifestRead.latestVersion(table) == vBefore)
     assert(readKs(table) == Seq(1L, 3L, 10L, 11L))
     // and the stream continues exactly-once AFTER the maintenance
     drain(stage, ckpt, table, Seq(4L))
