@@ -123,3 +123,13 @@ private[graft] object ManifestFs {
           pathToFile(new Path(p.getParent, s".${p.getName}.crc")).toPath)
   }
 }
+
+/** The driver's Hadoop conf (so session-level `spark.hadoop.*` settings,
+  * e.g. s3a credentials, reach executors) as the connector's tasks get
+  * it: one broadcast, not a whole configuration deserialized per task. */
+private[sources] final class ShippedConf(conf: Configuration =
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()) extends Serializable {
+  private val shipped = org.apache.spark.sql.SparkSession.active.sparkContext
+    .broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
+  def value: Configuration = shipped.value.value
+}

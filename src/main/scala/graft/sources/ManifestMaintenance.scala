@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 /** Maintenance for a [[ManifestSink]] directory: snapshot expiry.
   *
@@ -93,38 +93,46 @@ object ManifestMaintenance {
     * keys insert. No data file is rewritten; [[compact]] later applies
     * the supersedes physically. The matching scan reads through current
     * dvs (a twice-upserted key supersedes the LATEST version of the
-    * row, never re-deletes the same position). The positions and the
-    * inserted rows are staged by one Spark job into `_tmp-upsert-<id>`,
-    * through the writers SQL `MERGE` uses; the publish and its conflict
-    * rules are [[delete]]'s. `epoch` = Some((ledgerKey, epochId)) makes
-    * a replayed streaming micro-batch a no-op. Returns
-    * (supersededRows, upsertedRows). */
+    * row, never re-deletes the same position). Keys match in the
+    * table's key types: a batch whose keys Spark would broadcast has
+    * them collected ([[ManifestKeySet]]) and matched in the staging
+    * job's table scan, a larger one by a left-semi join.
+    * The positions and the inserted rows are staged by one Spark job
+    * into `_tmp-upsert-<id>`, through the writers SQL `MERGE` uses; the
+    * publish and its conflict rules are [[delete]]'s. `epoch` =
+    * Some((ledgerKey, epochId)) makes a replayed streaming micro-batch a
+    * no-op. Returns (supersededRows, upsertedRows). */
   def upsert(
       spark: org.apache.spark.sql.SparkSession,
       path: String, schemaDdl: String, keyCols: Seq[String],
       updates: org.apache.spark.sql.DataFrame,
       epoch: Option[(String, Long)] = None): (Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val cols = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
-      .fieldNames.toSeq
+    val schema = StructType.fromDDL(schemaDdl)
     val tbl = spark.read.format("graft.sources.ManifestSource")
       .schema(schemaDdl).option("path", path)
       .option("metadata", "true").load()
-    // superseded rows: key-match against the incoming batch (left-semi
-    // equi-join — shuffles on the key only, never materializes values)
-    val matched = tbl
-      .join(updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-      .selectExpr("_mf_file", "_mf_pos", "_mf_linehash")
-    mutate(spark, path, matched, Some(updates.select(cols.map(col): _*)),
-      "upsert", epoch)
+    val keys = updates.select(
+      keyCols.map(k => col(k).cast(schema(k).dataType).as(k)): _*)
+    val inserts = Some(updates.select(schema.fieldNames.toSeq.map(col): _*))
+    val meta = Seq("_mf_file", "_mf_pos", "_mf_linehash").map(col)
+    if (keys.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold)
+      mutate(spark, path, tbl.select(meta ++ keyCols.map(col): _*),
+        inserts, "upsert", epoch, Some(keys))
+    else
+      mutate(spark, path, tbl.join(keys, keyCols, "left_semi").select(meta: _*),
+        inserts, "upsert", epoch)
   }
 
   /** Shared merge-on-read mutation: record `matchedPos` rows —
     * (_mf_file, _mf_pos, _mf_linehash) of rows to supersede — as new
     * delete vectors, optionally append `inserts` as new data files,
-    * and publish BOTH in one manifest version. Both are staged by one
-    * Spark job outside the lock; the commit verifies the scanned
-    * data files are still current and the dv list is unchanged
+    * and publish BOTH in one manifest version; with `keys`, only the
+    * rows whose key (their further columns) is among the batch's
+    * distinct keys. Both are staged by one Spark job outside the
+    * lock; the commit verifies the data files current when the
+    * operation began are still current and the dv list is unchanged
     * (appends are fine; rewrites/deletes invalidate positions — abort
     * loudly, retry). Returns (deletedRows, insertedRows). */
   private def mutate(
@@ -137,7 +145,8 @@ object ManifestMaintenance {
       // upsert): the manifest's streamEpochs ledger makes a replayed
       // micro-batch a no-op — the same exactly-once contract as the
       // streaming sink, for the DML verb
-      epoch: Option[(String, Long)] = None): (Long, Long) = {
+      epoch: Option[(String, Long)] = None,
+      keys: Option[org.apache.spark.sql.DataFrame] = None): (Long, Long) = {
     val dir = new Path(path)
     // one copy of the session's Hadoop conf for the whole operation
     val conf = spark.sessionState.newHadoopConf()
@@ -147,8 +156,10 @@ object ManifestMaintenance {
     val beforeDvs = ManifestRead.dvsOfText(before).map(_._1)
     val id = java.util.UUID.randomUUID().toString
     val stageName = s"_tmp-$opName-$id"
+    // fixes the scan's snapshot before the batch's keys are collected
+    val positions = matchedPos.queryExecution.toRdd
     val (dvs, added) = ManifestStage(spark, conf, fs, path, stageName,
-      Some(matchedPos.queryExecution.toRdd),
+      Some(positions), keys.map(new ManifestKeySet(_)),
       inserts.map(df => (df.queryExecution.toRdd, df.schema)))
     val deleted = dvs.map(_.rows).sum
     val inserted = added.map(_.rows).sum
@@ -397,7 +408,7 @@ object ManifestMaintenance {
       (spark.sparkContext.union(buckets.map(_.queryExecution.toRdd)),
         buckets.head.schema)
     }
-    val (_, compacted) = ManifestStage(spark, conf, fs, path, stageName, None,
+    val (_, compacted) = ManifestStage(spark, conf, fs, path, stageName, None, None,
       Some((toWrite, schema)))
     // ---- publish through the one commit step (ManifestCommit)
     ManifestCommit(fs, dir, s"compact-$id", "ManifestMaintenance",
@@ -517,6 +528,11 @@ object ManifestMaintenance {
   * theirs. Returns (delete vectors, data files); a failed job drops the
   * staging directory.
   *
+  * With `keys`, only position rows whose key (their columns from the
+  * fourth on) is in the set count. A dv file may list positions of any
+  * data files, so the position scan (a partition per file or row group)
+  * is coalesced to the task slots the row partitions leave free.
+  *
   * The task function lives in this small object on purpose: Spark's
   * closure cleaner parses the class file that defines a task function
   * on every job, and [[ManifestMaintenance]]'s is large. One `runJob`
@@ -527,19 +543,24 @@ private object ManifestStage {
       spark: org.apache.spark.sql.SparkSession,
       hadoopConf: org.apache.hadoop.conf.Configuration, fs: FileSystem,
       path: String, stageName: String,
-      positions: Option[RDD[InternalRow]],
+      positions: Option[RDD[InternalRow]], keys: Option[ManifestKeySet],
       rows: Option[(RDD[InternalRow], StructType)])
     : (Seq[ManifestFileCommit], Seq[ManifestFileCommit]) = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
+    val conf = new ShippedConf(hadoopConf)
+    val keySet = keys.map(spark.sparkContext.broadcast(_))
     val stageDir = s"$path/$stageName"
     val writers = rows.map { case (_, schema) =>
       new ManifestWriterFactory(path, stageName, schema, conf) }.orNull
-    val nDv = positions.fold(0)(_.getNumPartitions)
-    val input = spark.sparkContext.union(positions.toSeq ++ rows.map(_._1))
+    val slots = math.max(1,
+      spark.sparkContext.defaultParallelism - rows.fold(0)(_._1.getNumPartitions))
+    val dvInput = positions.map(_.coalesce(slots))
+    val nDv = dvInput.fold(0)(_.getNumPartitions)
+    val input = spark.sparkContext.union(dvInput.toSeq ++ rows.map(_._1))
     val staged = new Array[Seq[ManifestFileCommit]](input.getNumPartitions)
     try spark.sparkContext.runJob(input,
       (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) =>
-        if (ctx.partitionId() < nDv) dvFile(stageDir, conf.value, it)
+        if (ctx.partitionId() < nDv) dvFile(stageDir, conf.value,
+          keySet.fold(it) { ks => val k = ks.value; it.filter(k.contains(_, 3)) })
         else writers.writeAll(it),
       staged.indices, (i: Int, files: Seq[ManifestFileCommit]) => staged(i) = files)
     catch { case e: Throwable => fs.delete(new Path(stageDir), true); throw e }
@@ -556,4 +577,30 @@ private object ManifestStage {
     catch { case e: Throwable => w.abort(); throw e }
     w.finish().toSeq
   }
+}
+
+/** An upsert batch's distinct keys, collected by one Spark job from
+  * `keys` (its columns are the key) and matched as an equi-join matches:
+  * a key with a null never matches, -0.0 is 0.0 and NaN is NaN. */
+private final class ManifestKeySet(keys: org.apache.spark.sql.DataFrame)
+  extends Serializable {
+  private val types = keys.schema.fields.map(_.dataType)
+  private val set = new java.util.HashSet[AnyRef]()
+  keys.queryExecution.executedPlan.executeCollect()
+    .foreach(r => Option(keyOf(r, 0)).foreach(set.add))
+
+  /** The key in columns `offset` on, or null when one is null; keys compare
+    * by `equals` (NaN equals NaN; `+ 0.0` makes -0.0 0.0), composite ones as Java lists. */
+  private def keyOf(row: InternalRow, offset: Int): AnyRef = {
+    val vs = Array.tabulate[AnyRef](types.length) { i =>
+      if (row.isNullAt(offset + i)) null
+      else if (types(i) == DoubleType) Double.box(row.getDouble(offset + i) + 0.0d)
+      else row.get(offset + i, types(i))
+    }
+    if (vs.contains(null)) null
+    else if (vs.length == 1) vs(0) else java.util.Arrays.asList(vs: _*)
+  }
+
+  def contains(row: InternalRow, offset: Int): Boolean =
+    Option(keyOf(row, offset)).exists(set.contains)
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** DELTA-BASED row-level operations for manifest tables — the DSv2
   * machinery behind pure-SQL `MERGE INTO`, `UPDATE`, and arbitrary-
@@ -96,8 +95,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
   private val writeId = java.util.UUID.randomUUID().toString
   private def tmpDirName = s"_tmp-$writeId"
 
-  private val hadoopConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val hadoopConf = new ShippedConf()
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -150,7 +148,7 @@ private[graft] case class ManifestDeltaCommit(
   extends WriterCommitMessage
 
 private class ManifestDeltaWriterFactory(dir: String, writeId: String,
-    dataSchema: StructType, hadoopConf: SerializableConfiguration,
+    dataSchema: StructType, hadoopConf: ShippedConf,
     partitionBy: Option[String])
   extends DeltaWriterFactory {
 

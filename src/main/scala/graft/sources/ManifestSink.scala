@@ -332,14 +332,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
   // path never see (or clean up) each other's in-flight files
   private[sources] val writeId = java.util.UUID.randomUUID().toString
 
-  // resolved ON THE DRIVER (this class is constructed there) so
-  // session-level spark.hadoop.* settings — e.g. s3a credentials set
-  // only on the SparkConf — reach executor-side writers too, via the
-  // SerializableConfiguration shipped in the DataWriterFactory
-  private val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration()))
+  private val hadoopConf = new ShippedConf()
 
   private def fs(): FileSystem =
     ManifestFs.of(new Path(path), hadoopConf.value)
@@ -404,7 +397,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
 /** The sink's data-file writers, staging into `path/stageName`. */
 private[sources] class ManifestWriterFactory(path: String, stageName: String,
     schema: StructType,
-    hadoopConf: org.apache.spark.util.SerializableConfiguration,
+    hadoopConf: ShippedConf,
     partitionBy: Option[String] = None)
   extends DataWriterFactory
   with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
@@ -433,9 +426,6 @@ private[sources] class ManifestWriterFactory(path: String, stageName: String,
   private def createWriter(partitionId: Int, taskId: Long,
       tmpDirName: String): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      // executors resolve the FS from the DRIVER's Hadoop conf (shipped
-      // via SerializableConfiguration) so session-level spark.hadoop.*
-      // settings — s3a credentials, endpoint overrides — apply here too
       private val fs = ManifestFs.of(new Path(path), hadoopConf.value)
       private val tmpDir = new Path(new Path(path), tmpDirName)
       fs.mkdirs(tmpDir)

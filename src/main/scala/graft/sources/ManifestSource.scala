@@ -11,7 +11,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 batch READ over a [[ManifestSink]] directory — the other half
   * of the connector: reads EXACTLY the files the manifest lists, never
@@ -30,7 +29,7 @@ import org.apache.spark.util.SerializableConfiguration
   *  - a data file's columns resolve by their position in the entry's
   *    `cols` list, so a manifest-only RENAME COLUMN keeps the data;
   *  - executors resolve the FileSystem from the driver's Hadoop conf
-  *    (SerializableConfiguration), matching the sink's write path.
+  *    (a [[ShippedConf]]), matching the sink's write path.
   *
   * Usage:
   * {{{
@@ -767,7 +766,7 @@ private[sources] class ManifestScan(
     val columnar = snapshot._1.nonEmpty &&
       snapshot._1.iterator.map(_.rows).sum >= ManifestScan.ColumnarMinRows
     new ManifestReaderFactory(fullSchema, required,
-      new SerializableConfiguration(hadoopConf), filters, metaCols, columnar)
+      new ShippedConf(hadoopConf), filters, metaCols, columnar)
   }
 
   /** Streaming face: each micro-batch is the file-level DIFF between
@@ -1212,12 +1211,8 @@ private class ManifestMicroBatchStream(
     out.result().toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    new ManifestReaderFactory(fullSchema, required,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      filters)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new ManifestReaderFactory(fullSchema, required, new ShippedConf(), filters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1522,7 +1517,7 @@ private case class ManifestAggPartition(values: Seq[Any])
 
 private class ManifestReaderFactory(
     fullSchema: StructType, required: StructType,
-    hadoopConf: SerializableConfiguration,
+    hadoopConf: ShippedConf,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     metaCols: Seq[String] = Nil,
     columnar: Boolean = false)

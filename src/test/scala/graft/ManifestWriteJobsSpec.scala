@@ -59,7 +59,7 @@ class ManifestWriteJobsSpec extends AnyFunSuite {
     // delete and upsert stage positions and inserts in one job, after
     // the semi-join's query stages; compaction writes every group or
     // bucket in one job, after clusterBy's ranking and checkpoint jobs
-    val bound = Map("append" -> 1, "delete" -> 1, "upsert" -> 4,
+    val bound = Map("append" -> 1, "delete" -> 1, "upsert" -> 3,
       "compact" -> 1, "compact-clusterBy" -> 8)
     got.foreach { case (k, n) =>
       assert(n > 0 && n <= bound(k), s"$k ran $n jobs, bound ${bound(k)}: $got")
