@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.lang.ref.WeakReference
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, StandardOpenOption}
 import java.nio.file.attribute.PosixFilePermission
@@ -8,6 +9,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** The manifest connector's one way to a filesystem.
   *
@@ -124,12 +129,48 @@ private[graft] object ManifestFs {
   }
 }
 
-/** The driver's Hadoop conf (so session-level `spark.hadoop.*` settings,
-  * e.g. s3a credentials, reach executors) as the connector's tasks get
-  * it: one broadcast, not a whole configuration deserialized per task. */
-private[sources] final class ShippedConf(conf: Configuration =
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()) extends Serializable {
-  private val shipped = org.apache.spark.sql.SparkSession.active.sparkContext
-    .broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
+/** The driver's Hadoop conf as the connector's tasks get it, so that
+  * session-level `spark.hadoop.*` and `parquet.*` settings (s3a
+  * credentials, row-group limits) reach executors: one broadcast, not a
+  * whole configuration deserialized per task.
+  *
+  * Broadcasting a session conf is not cheap: `Configuration.write` gzips
+  * each property's source list on its own, so one broadcast of a session
+  * conf of about 1,100 properties costs the driver about 10 ms.
+  * `ShippedConf(conf)` therefore reuses the last broadcast while the
+  * conf's content stays the same:
+  *  - the key is the `SparkContext` and an exact copy of the conf's
+  *    entries, compared by equality, never by a hash (a collision would
+  *    ship another conf's credentials);
+  *  - it keeps one entry: a conf that differs in any entry is broadcast
+  *    again and replaces it, and Spark's `ContextCleaner` removes the old
+  *    broadcast once no job uses it;
+  *  - the context is held weakly and a stopped one never matches, so a
+  *    stopped context's broadcast is never served and never kept alive.
+  *
+  * The broadcast is of the cache's own copy of the conf. Tasks of every
+  * operation share it, so they must not mutate the value. */
+private[sources] final class ShippedConf private (
+    shipped: Broadcast[SerializableConfiguration]) extends Serializable {
   def value: Configuration = shipped.value.value
+  private[sources] def id: Long = shipped.id
+}
+
+private[sources] object ShippedConf {
+  private final class Entry(val sc: WeakReference[SparkContext],
+      val entries: java.util.Map[String, String], val shipped: ShippedConf)
+  private var last: Entry = _
+
+  def apply(conf: Configuration =
+      SparkSession.active.sessionState.newHadoopConf()): ShippedConf = {
+    val sc = SparkSession.active.sparkContext
+    val entries = new java.util.HashMap[String, String]()
+    conf.iterator().forEachRemaining(e => entries.put(e.getKey, e.getValue))
+    synchronized {
+      if (last == null || (last.sc.get ne sc) || sc.isStopped || last.entries != entries)
+        last = new Entry(new WeakReference(sc), entries, new ShippedConf(
+          sc.broadcast(new SerializableConfiguration(new Configuration(conf)))))
+      last.shipped
+    }
+  }
 }

@@ -546,7 +546,7 @@ private object ManifestStage {
       positions: Option[RDD[InternalRow]], keys: Option[ManifestKeySet],
       rows: Option[(RDD[InternalRow], StructType)])
     : (Seq[ManifestFileCommit], Seq[ManifestFileCommit]) = {
-    val conf = new ShippedConf(hadoopConf)
+    val conf = ShippedConf(hadoopConf)
     val keySet = keys.map(spark.sparkContext.broadcast(_))
     val stageDir = s"$path/$stageName"
     val writers = rows.map { case (_, schema) =>

@@ -95,7 +95,7 @@ private class ManifestDeltaBatchWrite(dir: String, dataSchema: StructType,
   private val writeId = java.util.UUID.randomUUID().toString
   private def tmpDirName = s"_tmp-$writeId"
 
-  private val hadoopConf = new ShippedConf()
+  private val hadoopConf = ShippedConf()
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =

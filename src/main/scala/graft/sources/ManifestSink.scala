@@ -332,7 +332,7 @@ private class ManifestBatchWrite(path: String, schema: StructType,
   // path never see (or clean up) each other's in-flight files
   private[sources] val writeId = java.util.UUID.randomUUID().toString
 
-  private val hadoopConf = new ShippedConf()
+  private val hadoopConf = ShippedConf()
 
   private def fs(): FileSystem =
     ManifestFs.of(new Path(path), hadoopConf.value)

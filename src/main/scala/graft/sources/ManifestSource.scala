@@ -766,7 +766,7 @@ private[sources] class ManifestScan(
     val columnar = snapshot._1.nonEmpty &&
       snapshot._1.iterator.map(_.rows).sum >= ManifestScan.ColumnarMinRows
     new ManifestReaderFactory(fullSchema, required,
-      new ShippedConf(hadoopConf), filters, metaCols, columnar)
+      ShippedConf(hadoopConf), filters, metaCols, columnar)
   }
 
   /** Streaming face: each micro-batch is the file-level DIFF between
@@ -1212,7 +1212,7 @@ private class ManifestMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(fullSchema, required, new ShippedConf(), filters)
+    new ManifestReaderFactory(fullSchema, required, ShippedConf(), filters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -24,26 +24,45 @@ TABLES = ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    filt = sys.argv[3] if len(sys.argv) > 3 and sys.argv[3] else None
+def keep(name, filt):
+    """Whether the query filter selects `name`, by graft.Verify's rule for
+    SPARK_GRAFT_ONLY: no filter keeps every name, else a name is kept if
+    any comma-separated part is a substring of it. Parts split as Java's
+    String.split does, which drops trailing empty parts."""
+    if not filt:
+        return True
+    parts = filt.split(",")
+    while parts and not parts[-1]:
+        parts.pop()
+    return any(p in name for p in parts)
+
+
+def main(argv):
+    sf_dir, out_dir = argv[1], argv[2]
+    filt = argv[3] if len(argv) > 3 else ""
+    # Queries that threw inside Verify leave no output dir; without this
+    # manifest the dir scan below silently shrinks coverage (the round-7
+    # failure mode: one bad loader dropped 60 queries from the artifact).
+    errs_path = f"{out_dir}/verify_errors.json"
+    errs = json.load(open(errs_path)) if os.path.exists(errs_path) else {}
+    errs = sorted((q, e) for q, e in errs.items() if keep(q, filt))
+    qdirs = [d for d in sorted(glob.glob(f"{out_dir}/*/"))
+             if keep(os.path.basename(d.rstrip("/")), filt)]
+    # a gate that checks nothing must not pass
+    if not errs and not qdirs:
+        print(f"no query matches filter {filt!r} in {out_dir}" if filt
+              else f"no query output in {out_dir}")
+        sys.exit(2)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
-    # Queries that threw inside Verify leave no output dir; without this
-    # manifest the dir scan below silently shrinks coverage (the round-7
-    # failure mode: one bad loader dropped 60 queries from the artifact).
-    errs_path = f"{out_dir}/verify_errors.json"
-    if os.path.exists(errs_path):
-        for qname, err in sorted(json.load(open(errs_path)).items()):
-            if filt and filt not in qname: continue
-            print(f"FAIL {qname}: did not run: {err[:200]}")
-            n_fail += 1
-    for qdir in sorted(glob.glob(f"{out_dir}/*/")):
+    for qname, err in errs:
+        print(f"FAIL {qname}: did not run: {err[:200]}")
+        n_fail += 1
+    for qdir in qdirs:
         name = os.path.basename(qdir.rstrip("/"))
-        if filt and filt not in name: continue
         files = glob.glob(f"{qdir}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
@@ -108,4 +127,4 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv)
