@@ -3,23 +3,27 @@
 working tree.
 
     python3 tools/ab.py --rev <rev> --workload <w> [<w> ...] --pairs <n> \\
-        --seed <first> [--seconds 10] [--trace 0|1] [--clean]
+        --seed <first> [--seconds 10] [--trace 0|1]
 
 The revision is extracted with `git archive` into `<tmp>/ab-<sha>`, where
 `<tmp>` is the system temp dir (`TMPDIR`). A later call for the same
-revision reuses that directory and its benchmark build; `--clean` removes
-it at the end. Before the pairs, each side runs the first workload once
-for one second, untimed, so that both builds are done and warm.
+revision reuses that directory and its benchmark build; delete it by hand
+when done. Before the pairs, each side runs the first workload once for
+one second, untimed, so that both builds are done and warm.
 
 Pair i (0-based) runs `perfbench/run.py` once in each checkout, on seed
 `first + i` for every workload, the revision first when i is even and the
 working tree first when i is odd. For each pair it prints every metric,
 revision -> working tree. For each workload it then prints each side's
-median and quartiles, the pairs each side won (ties count for neither;
-the direction is the metric's `better` in BENCHMARK.json), and whether
-the working tree's gain is claimable: at least ten pairs ran, it won at
-least nine tenths of them, and its median beats the revision's by more
-than the distance between the revision's quartiles. It only calls `perfbench/run.py`.
+failed ops and runs with a wrong answer, each metric's median and
+quartiles, the pairs each side won (ties count for neither; the direction
+is the metric's `better` in BENCHMARK.json), and whether the working
+tree's gain is claimable. It is claimable when at least ten pairs ran,
+none was dropped for a crashed run, every run of both sides answered
+correctly, the working tree failed no more ops than the revision, it won
+at least nine tenths of the pairs run, and its median beats the
+revision's by more than the distance between the revision's quartiles.
+It only calls `perfbench/run.py`.
 """
 import argparse
 import json
@@ -68,8 +72,14 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def summarize(workload, pairs, better):
-    print(f"\n{workload}: {len(pairs)} pairs, revision -> working tree")
+def summarize(workload, pairs, n_run, better):
+    """Medians, quartiles and pairs won over the pairs that completed;
+    `n_run` counts the dropped ones too."""
+    print(f"\n{workload}: {len(pairs)} of {n_run} pairs completed, revision -> working tree")
+    failed = [sum(p[i]["failed"] for p in pairs) for i in (0, 1)]
+    wrong = [sum(not p[i]["correct"] for p in pairs) for i in (0, 1)]
+    print(f"  failed ops {failed[0]} -> {failed[1]}, runs with a wrong answer {wrong[0]} -> {wrong[1]}")
+    sound = len(pairs) == n_run and not any(wrong) and failed[1] <= failed[0]
     for m in pairs[0][0]["metrics"]:
         a = [p[0]["metrics"][m]["value"] for p in pairs]
         b = [p[1]["metrics"][m]["value"] for p in pairs]
@@ -82,9 +92,9 @@ def summarize(workload, pairs, better):
         if sign:
             won = sum(sign * (y - x) > 0 for x, y in zip(a, b))
             lost = sum(sign * (y - x) < 0 for x, y in zip(a, b))
-            claim = (len(pairs) >= 10 and won >= 0.9 * len(pairs)
+            claim = (sound and n_run >= 10 and won >= 0.9 * n_run
                      and sign * (qb[1] - qa[1]) > qa[2] - qa[0])
-            line += f"  won {won}/{len(pairs)}, lost {lost}" + ("  gain claimable" if claim else "")
+            line += f"  won {won}/{n_run}, lost {lost}" + ("  gain claimable" if claim else "")
         print(line)
 
 
@@ -96,7 +106,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--clean", action="store_true", help="remove the extracted revision at the end")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
@@ -107,30 +116,26 @@ def main():
     for _, d in sides:
         bench(d, a.workload[0], 0, 1, 0)
     failed = False
-    try:
-        for w in a.workload:
-            pairs = []
-            for i in range(a.pairs):
-                seed = a.seed + i
-                order = sides if i % 2 == 0 else sides[::-1]
-                got = {name: bench(d, w, seed, a.seconds, a.trace) for name, d in order}
-                res = [got[name] for name, _ in sides]
-                if None in res:
-                    failed = True
-                    print(f"{w} pair {i} seed {seed}: dropped, a run failed")
-                    continue
-                pairs.append(res)
-                print(f"{w} pair {i} seed {seed} ({order[0][0]} first): "
-                      f"ops {res[0]['attempted']}/{res[0]['failed']} failed -> "
-                      f"{res[1]['attempted']}/{res[1]['failed']} failed")
-                for m, v in res[0]["metrics"].items():
-                    print(f"  {m:34s} {v['value']:12.2f} -> {res[1]['metrics'][m]['value']:12.2f} {v['unit']}")
-                sys.stdout.flush()
-            if pairs:
-                summarize(w, pairs, better)
-    finally:
-        if a.clean:
-            shutil.rmtree(rev_dir, ignore_errors=True)
+    for w in a.workload:
+        pairs = []
+        for i in range(a.pairs):
+            seed = a.seed + i
+            order = sides if i % 2 == 0 else sides[::-1]
+            got = {name: bench(d, w, seed, a.seconds, a.trace) for name, d in order}
+            res = [got[name] for name, _ in sides]
+            if None in res:
+                failed = True
+                print(f"{w} pair {i} seed {seed}: dropped, a run failed")
+                continue
+            pairs.append(res)
+            print(f"{w} pair {i} seed {seed} ({order[0][0]} first): "
+                  f"ops {res[0]['attempted']}/{res[0]['failed']} failed -> "
+                  f"{res[1]['attempted']}/{res[1]['failed']} failed")
+            for m, v in res[0]["metrics"].items():
+                print(f"  {m:34s} {v['value']:12.2f} -> {res[1]['metrics'][m]['value']:12.2f} {v['unit']}")
+            sys.stdout.flush()
+        if pairs:
+            summarize(w, pairs, a.pairs, better)
     return 1 if failed else 0
 
 
