@@ -5,6 +5,7 @@ import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkContext
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,45 +34,52 @@ class ManifestShippedConfSpec extends AnyFunSuite {
     // is a new conf, shipped again
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ManifestCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.base", base)
-    def rows(ks: Range) = ks.map(k => (k.toLong, s"v$k")).toDF("k", "s")
-    def append(ks: Range): Unit =
-      rows(ks).coalesce(1).write.format("graft.sources.ManifestSink")
-        .option("path", table).mode("append").save()
-    rows(150 until 250).coalesce(1).write.parquet(s"$base/updates")
-    append(0 until 200)
-    val first = ShippedConf()
-    val ops: Seq[(String, () => Unit)] = Seq(
-      "write" -> (() => append(200 until 300)),
-      "scan" -> (() => assert(spark.read.format("graft.sources.ManifestSource")
-        .schema(ddl).option("path", table).load().collect().length == 300)),
-      "upsert" -> (() => ManifestMaintenance.upsert(spark, table, ddl, Seq("k"),
-        spark.read.parquet(s"$base/updates"))),
-      "delete" -> (() => ManifestMaintenance.delete(spark, table, ddl, "k % 7 = 0")),
-      "compact" -> (() => ManifestMaintenance.compact(spark, table, ddl)),
-      "sql-update" -> (() => {
-        spark.sql(s"CREATE TABLE $cat.ns.u (k BIGINT, s STRING)")
-        spark.sql(s"INSERT INTO $cat.ns.u VALUES (1, 'a'), (2, 'b')")
-        spark.sql(s"UPDATE $cat.ns.u SET s = upper(s) WHERE k = 2")
-      }))
-    ops.foreach { case (kind, op) =>
-      op()
-      val now = ShippedConf()
-      assert(now.id == first.id, s"$kind shipped a new broadcast")
-      // a hit means the session conf equals the snapshot it was keyed on
-      assert(entries(now.value) == entries(spark.sessionState.newHadoopConf()),
-        s"the shared conf changed during $kind")
+    try {
+      def rows(ks: Range) = ks.map(k => (k.toLong, s"v$k")).toDF("k", "s")
+      def append(ks: Range): Unit =
+        rows(ks).coalesce(1).write.format("graft.sources.ManifestSink")
+          .option("path", table).mode("append").save()
+      rows(150 until 250).coalesce(1).write.parquet(s"$base/updates")
+      append(0 until 200)
+      val first = ShippedConf()
+      val ops: Seq[(String, () => Unit)] = Seq(
+        "write" -> (() => append(200 until 300)),
+        "scan" -> (() => assert(spark.read.format("graft.sources.ManifestSource")
+          .schema(ddl).option("path", table).load().collect().length == 300)),
+        "upsert" -> (() => ManifestMaintenance.upsert(spark, table, ddl, Seq("k"),
+          spark.read.parquet(s"$base/updates"))),
+        "delete" -> (() => ManifestMaintenance.delete(spark, table, ddl, "k % 7 = 0")),
+        "compact" -> (() => ManifestMaintenance.compact(spark, table, ddl)),
+        "sql-update" -> (() => {
+          spark.sql(s"CREATE TABLE $cat.ns.u (k BIGINT, s STRING)")
+          spark.sql(s"INSERT INTO $cat.ns.u VALUES (1, 'a'), (2, 'b')")
+          spark.sql(s"UPDATE $cat.ns.u SET s = upper(s) WHERE k = 2")
+        }))
+      ops.foreach { case (kind, op) =>
+        op()
+        val now = ShippedConf()
+        assert(now.id == first.id, s"$kind shipped a new broadcast")
+        // a hit means the session conf equals the snapshot it was keyed on
+        assert(entries(now.value) == entries(spark.sessionState.newHadoopConf()),
+          s"the shared conf changed during $kind")
+      }
+      val ks = spark.read.format("graft.sources.ManifestSource").schema(ddl)
+        .option("path", table).load().collect().map(_.getLong(0)).sorted.toSeq
+      assert(ks == (0L until 300L).filter(_ % 7 != 0))
+      assert(spark.sql(s"SELECT s FROM $cat.ns.u ORDER BY k").collect()
+        .map(_.getString(0)).toSeq == Seq("a", "B"))
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.base")
+      FileUtils.deleteDirectory(new java.io.File(base))
     }
-    val ks = spark.read.format("graft.sources.ManifestSource").schema(ddl)
-      .option("path", table).load().collect().map(_.getLong(0)).sorted.toSeq
-    assert(ks == (0L until 300L).filter(_ % 7 != 0))
-    assert(spark.sql(s"SELECT s FROM $cat.ns.u ORDER BY k").collect()
-      .map(_.getString(0)).toSeq == Seq("a", "B"))
   }
 
   test("a session row-group limit ships a new conf, and unsetting it ships again") {
     val s = spark
     import s.implicits._
-    val table = java.nio.file.Files.createTempDirectory("graft_shipped_rg").toString + "/t"
+    val dir = java.nio.file.Files.createTempDirectory("graft_shipped_rg").toFile
+    val table = s"$dir/t"
     def append(ks: Range): Seq[Long] = {
       val before = scala.util.Try(ManifestRead.entries(table, "manifest.json"))
         .getOrElse(Nil).map(_.file).toSet
@@ -98,6 +106,7 @@ class ManifestShippedConfSpec extends AnyFunSuite {
     assert(again.id != unlimited.id, "a replaced entry is shipped anew")
     assert(again.value.get(RgLimit) == null)
     assert(ShippedConfSpecTasks.read(again, spark.sparkContext, RgLimit) == Seq(null, null))
+    FileUtils.deleteDirectory(dir)
   }
 
   test("two threads shipping the same conf at once both get a working conf") {
