@@ -149,7 +149,16 @@ private[graft] object ManifestFs {
   *    stopped context's broadcast is never served and never kept alive.
   *
   * The broadcast is of the cache's own copy of the conf. Tasks of every
-  * operation share it, so they must not mutate the value. */
+  * operation share it, so they must not mutate the value.
+  *
+  * It helps callers whose consecutive connector ops run under one conf,
+  * such as a client that reads and writes tables without touching its
+  * session conf. Code that sets or unsets a session conf between ops
+  * (`LakehouseOps`' queries), or batch ops interleaved with a stream's
+  * micro-batches (which run in a cloned session with its own conf),
+  * miss on each change. A miss costs one broadcast, as every op paid
+  * without the cache, plus the key's copy, about 0.4 ms for 1,100
+  * entries. */
 private[sources] final class ShippedConf private (
     shipped: Broadcast[SerializableConfiguration]) extends Serializable {
   def value: Configuration = shipped.value.value
